@@ -2,7 +2,6 @@ package graft
 
 import graft.feed.{BinlogFeedGen, FeedReader}
 import graft.feed.BinlogFeedGen.FeedConfig
-import graft.merge.LwwDedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -106,18 +105,6 @@ object Plans {
         .repartition(col("_bucket"))
     }
 
-    section("Bucketed LWW reduction (library operator; merge-on-read twin)",
-      "The per-key max-offset fold GraftLake.read applies over base+delta " +
-      "buckets (and compaction folds amortized-rarely). Checks: ONE " +
-      "Exchange hashpartitioning(_bucket); the groupBy(_bucket, repo, path) " +
-      "max_by reuses that partitioning (no second exchange). The max_by " +
-      "packs full row images into its buffer, so this is a sort-based " +
-      "aggregate — the deliberate merge-on-read trade: reads pay a " +
-      "per-bucket sort so writes are O(batch) delta appends.") {
-      LwwDedup.dedupBucketed(shape(decoded.filter(!col("_noop"))),
-        offsetCol = "_offset")
-    }
-
     // two-commit lake so the changelog window has real snapshot bounds
     locally {
       import graft.stream.{CdcIngestJob, IngestConfig}
@@ -126,6 +113,16 @@ object Plans {
         chunkFiles = 2)
       val lake = new graft.table.GraftLake(s"$base/lake", 8)
       val last = lake.latest().get.id
+      section("Bucketed LWW reduction (merge-on-read: GraftLake.read)",
+        "The per-key max-offset fold (GraftLake.lwwWinners) that " +
+        "merge-on-read applies over base+delta buckets. Checks: the " +
+        "base-only buckets skip the fold; the delta-holding buckets feed " +
+        "ONE hash exchange into the max_by aggregate. The max_by packs " +
+        "full row images into its buffer, so this is a sort-based " +
+        "aggregate — the deliberate merge-on-read trade: reads pay a " +
+        "per-bucket sort so writes are O(batch) delta appends.") {
+        lake.read(spark, lake.latest().get)
+      }
       section("Changelog read (changesBetween — CDC-out incremental scan)",
         "Checks: the scan lists ONLY the window commits' added files (file " +
         "count in the Location, never the whole table); the lower offset " +
@@ -191,6 +188,9 @@ object Plans {
     }
 
     spark.stop()
-    HarnessIO.rm(new java.io.File(base))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(new java.io.File(base))
   }
 }

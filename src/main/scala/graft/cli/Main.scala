@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *                           // STREAM (readStream format graft-changelog;
   *                           // credit = max snapshots per micro-batch)
   *   Main describe <lakeRoot>               // schema history + debt views
-  *   Main metrics <lakeRoot>
+  *   Main metrics <lakeRoot>                // per-snapshot scalar metrics
   *   Main vacuum <lakeRoot> [force]        // full orphan sweep (O(table));
   *                                         // refused under a live stream's
   *                                         // writer lease unless forced
@@ -362,18 +362,24 @@ object Main {
       // a silently-dropped typo is dangerous here: `clientid:x` for
       // `client:x` would run UNGATED against a registry-protected lake,
       // `credits:4` would tail without flow control — reject unknown args
+      // — and a numeric option's value must be a positive integer, checked
+      // here, before any session starts
       rest.foreach { t =>
-        val ok = t.nonEmpty && (t.forall(_.isDigit) || t == "bootstrap:none" ||
-          t.startsWith("client:") || t.startsWith("for:") ||
-          t.startsWith("cp:") || t.startsWith("credit:") ||
-          t.startsWith("bootstrapBuckets:"))
+        val numeric = Seq("for:", "credit:", "bootstrapBuckets:")
+          .find(t.startsWith)
+        val ok = t.toIntOption.exists(_ >= 0) || t == "bootstrap:none" ||
+          t.startsWith("client:") || t.startsWith("cp:") || numeric.nonEmpty
         if (!ok) sys.error(s"tail: unknown argument '$t' (expected [n] " +
           "[bootstrap:none] [client:<id>] [for:<ms>] [cp:<dir>] [credit:<k>] " +
           "[bootstrapBuckets:<k>])")
+        numeric.foreach { p =>
+          if (!t.stripPrefix(p).toLongOption.exists(_ > 0))
+            throw new IllegalArgumentException(
+              s"tail: $p needs a positive integer (got '$t')")
+        }
       }
       val spark = session()
-      val n = rest.find(t => t.nonEmpty && t.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
+      val n = rest.flatMap(_.toIntOption).headOption.getOrElse(10)
       val forMs = rest.find(_.startsWith("for:"))
         .map(_.stripPrefix("for:").toLong).getOrElse(10000L)
       val cp = rest.find(_.startsWith("cp:")).map(_.stripPrefix("cp:"))
@@ -419,9 +425,18 @@ object Main {
       Describe.lines(lake, snap).foreach(l => println(s"[describe] $l"))
 
     case "metrics" :: lakeRoot :: Nil =>
-      val p = java.nio.file.Paths.get(lakeRoot, "_metrics.jsonl")
-      if (java.nio.file.Files.exists(p)) print(java.nio.file.Files.readString(p))
-      else println(s"no metrics at $p")
+      // per-batch lineage from the durable record: each retained
+      // snapshot's scalar metrics (per-bucket row counts left out)
+      val lake = new GraftLake(lakeRoot,
+        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
+      val log = lake.snapshotLog()
+      if (log.isEmpty) println(s"no lake at $lakeRoot")
+      log.foreach { s =>
+        val scalars = s.metrics.filterNot(_._1.startsWith("bucket."))
+          .toSeq.sorted.map { case (k, v) => s"$k=$v" }
+        println((s"[metrics] snapshot=${s.id} batchId=${s.batchId}" +:
+          scalars).mkString(" "))
+      }
 
     case other =>
       System.err.println(s"unknown args: ${other.mkString(" ")}"); sys.exit(2)

@@ -1,6 +1,6 @@
 package graft.merge
 
-import graft.model.Op
+import graft.model.{Op, Schemas}
 import graft.table.{GraftLake, SchemaEvolution}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -114,7 +114,7 @@ object MergeApply {
     if (affected.isEmpty) return MergeResult(Nil, Set.empty, Map.empty)
 
     val dataCols = SchemaEvolution.dataColumns(schema).map(_.name)
-      .filterNot(LwwDedup.keyCols.contains)
+      .filterNot(Schemas.keyCols.contains)
     val bucket = GraftLake.bucketExpr(lake.nBuckets)
 
     // Winner pre-selection is a LEFT SEMI join in BOTH regimes (the build
@@ -408,7 +408,7 @@ object MergeApply {
     val schema = lake.currentSchema(candidate)
     val subWidth = splitWidth(hi - lo + 1, foldBudget)
     val rows = lake.aligned(spark, candidate, inFiles).get
-    val collapsed = lake.lwwWinners(schema, rows)
+    val collapsed = GraftLake.lwwWinners(schema, rows)
     val files = lake.writeData(
       collapsed.withColumn("_bucket", GraftLake.bucketExpr(lake.nBuckets))
         .select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
@@ -488,7 +488,7 @@ object MergeApply {
       merged.withColumn("_bucket", GraftLake.bucketExpr(lake.nBuckets))
         .select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
       batchId,
-      sortCols = if (clusterByKey) LwwDedup.keyCols.map(col) else Nil)
+      sortCols = if (clusterByKey) Schemas.keyCols.map(col) else Nil)
       .map(_.copy(schemaVersion = candidate.schemaVersion, delta = false))
     CompactResult(files, buckets, files.map(_.rows).sum,
       (System.nanoTime() - t0) / 1000000L)

@@ -37,6 +37,17 @@ object Offset {
 
   val Min: Offset = Offset(Long.MinValue, Long.MinValue, Long.MinValue)
 
+  /** Literal offset struct column, comparable against an offset column. */
+  def literal(o: Offset): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, struct}
+    struct(lit(o.fileIdx).as("fileIdx"), lit(o.pos).as("pos"),
+      lit(o.rowIdx).as("rowIdx"))
+  }
+
+  /** Driver-side read of a collected offset struct. */
+  def fromRow(r: org.apache.spark.sql.Row): Offset =
+    Offset(r.getLong(0), r.getLong(1), r.getLong(2))
+
   // ---- single-value encoding (aggregation-friendly total order) ----------
   // `max(struct)` forces SortAggregate (struct agg buffers are not
   // UnsafeRow-mutable), which sorts every scan partition by key. Packing
@@ -151,6 +162,9 @@ final case class ChangeEvent(
 
 object Schemas {
   import org.apache.spark.sql.types._
+
+  /** Columns that identify a key — the MERGE key of the north rule. */
+  val keyCols: Seq[String] = Seq("repo", "path")
 
   val repoFile: StructType = StructType(Seq(
     StructField("repo", StringType),

@@ -26,7 +26,8 @@ object CdcQueries {
     .otherwise("UPDATE").as("op")
 
   /** O1 + LWW aggregate: latest event per key via max_by over the offset —
-    * the same `max_by(struct, offset)` shape as the engine's LwwDedup.
+    * the same `max_by(struct, offset)` shape as the engine's fold
+    * (GraftLake.lwwWinners).
     * Scale: single hash agg with map-side combine; no window sort. */
   def lwwLatest(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)

@@ -1,10 +1,11 @@
 package graft.stream
 
 import graft.feed.{BinlogFeedGen, FeedReader}
-import graft.merge.{LwwDedup, MergeApply}
+import graft.merge.MergeApply
 import graft.model.{DdlChange, Offset, Op}
+import graft.model.Schemas.keyCols
 import graft.table.{GraftLake, SchemaEvolution}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -88,10 +89,6 @@ final case class IngestConfig(
     lakeRoot: String,
     checkpointDir: String,
     nBuckets: Int = 32,
-    /** LWW salt for the generic LwwDedup operator (kept so determinism
-      * tests can sweep it; the merge itself needs no salting — partial
-      * aggregation absorbs hot keys). */
-    salt: Int = 1,
     excludedCols: Set[String] = Set("commit"),
     acceptOps: Set[String] = Op.rowOps.toSet,
     maxFilesPerTrigger: Int = 8,
@@ -141,7 +138,6 @@ final case class BatchMetrics(
     affectedBuckets: Int,
     replayedSkip: Boolean,
     statsMs: Long = 0,
-    countMs: Long = 0,
     writeMs: Long = 0,
     commitMs: Long = 0,
     /** delta rows written this batch — in steady state ∝ batch size, NOT
@@ -157,6 +153,8 @@ final case class BatchMetrics(
   * "merge publishes, then offsets commit" (SURVEY.md §3.3). */
 object CdcIngestJob {
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.stream.CdcIngestJob")
+
   /** Lake roots whose last SPECULATIVE fold was discarded, keyed to the
     * parent snapshot id it ran against: re-kicking the identical plan
     * against the identical snapshot would just rewrite and re-delete the
@@ -168,9 +166,6 @@ object CdcIngestJob {
     * fold at worst. */
   private val discardedFoldAt =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  def offsetLit(o: Offset): Column = struct(
-    lit(o.fileIdx).as("fileIdx"), lit(o.pos).as("pos"), lit(o.rowIdx).as("rowIdx"))
 
   /** binlog file index as embedded in feed paths (`_file=fNNNNN[-replay]`) */
   private val fileIdxRe = "_file=f(\\d+)".r
@@ -220,11 +215,7 @@ object CdcIngestJob {
       .filter(col("_file").isin(keep: _*))
       .agg(min(col("offset")).as("lo"), max(col("offset")).as("hi"))
       .collect()(0)
-    def toOff(x: Any): Offset = {
-      val s = x.asInstanceOf[org.apache.spark.sql.Row]
-      Offset(s.getLong(0), s.getLong(1), s.getLong(2))
-    }
-    (toOff(r.get(0)), toOff(r.get(1)))
+    (Offset.fromRow(r.getStruct(0)), Offset.fromRow(r.getStruct(1)))
   }
 
   /** O3 guard. `strict` (user-supplied FROM_POS): any resume offset inside
@@ -360,11 +351,12 @@ object CdcIngestJob {
     // are instead absorbed by the offset bound (resolveStart) plus the
     // merge's idempotence.
     if (Option(snap.lineage).getOrElse("") == lineage && snap.batchId >= batchId) {
-      // log the fenced skip too — `replayedSkip:true` lines are exactly
-      // what an operator audits after a crash-restart (round-5 review)
-      val m = BatchMetrics(batchId, 0, 0, 0, 0, 0, 0, 0, 0, replayedSkip = true)
-      Metrics.append(lake.root, m)
-      return m
+      // a fenced batch commits no snapshot, so it leaves no metrics
+      // record: log it — fenced skips are exactly what an operator audits
+      // after a crash-restart
+      log.warn(s"${lake.root}: batch $batchId of lineage '$lineage' already " +
+        s"committed (snapshot ${snap.id}); fenced replay skipped")
+      return BatchMetrics(batchId, 0, 0, 0, 0, 0, 0, 0, 0, replayedSkip = true)
     }
 
     // A batch whose every input file precedes the resume bound cannot
@@ -384,12 +376,9 @@ object CdcIngestJob {
         }
       } catch { case _: Throwable => false } // unknown plan shape: scan
     }
-    if (allFilesBelowBound) {
-      val m = BatchMetrics(batchId, 0, 0, 0, 0, 0, 0,
+    if (allFilesBelowBound)
+      return BatchMetrics(batchId, 0, 0, 0, 0, 0, 0,
         (System.nanoTime() - t0) / 1000000L, 0, replayedSkip = false)
-      Metrics.append(lake.root, m)
-      return m
-    }
 
     def decoded(src: DataFrame): DataFrame = {
       val bounded = fromPos match {
@@ -399,7 +388,7 @@ object CdcIngestJob {
         // turns a resume-near-the-tip over a huge retained feed (and each
         // streaming skip batch) into a metadata-only scan
         case Some(o) => src.filter(
-          col("offset.fileIdx") >= o.fileIdx && col("offset") > offsetLit(o))
+          col("offset.fileIdx") >= o.fileIdx && col("offset") > Offset.literal(o))
         case None => src
       }
       val accepted = bounded.filter(
@@ -528,8 +517,6 @@ object CdcIngestJob {
         appliedAgg.as("applied")
       ) ++ maskAggs): _*
     ).collect()(0)
-    def toOff(r: org.apache.spark.sql.Row): Offset =
-      Offset(r.getLong(0), r.getLong(1), r.getLong(2))
     val eventsIn = planRow.getLong(0)
     val watchedRows = planRow.getLong(1)
     val maxOff = Option(planRow.get(2))
@@ -566,7 +553,7 @@ object CdcIngestJob {
         val raw = fresh
           .select(col("offset"), col("ddl"))
           .collect()
-          .sortBy(r => toOff(r.getStruct(0)))
+          .sortBy(r => Offset.fromRow(r.getStruct(0)))
           .map(_.getStruct(1))
           .map(d => DdlChange(d.getString(0), d.getString(1), d.getString(2), d.getString(3)))
         if (spec.camelize) // P3: source column names land camelCased
@@ -600,11 +587,9 @@ object CdcIngestJob {
     // the key set fits executor memory; past the limit the merge falls back
     // to the direct shuffled LWW reduction (one image shuffle, zero
     // broadcast state — the only safe shape at replay-scale cardinality).
-    val tCount0 = System.nanoTime()
     val winOff: Option[DataFrame] =
       if (winners == 0) None
       else Some(keyed.filter(col("_woff").isNotNull).select(col("_woff")))
-    val tCount = (System.nanoTime() - tCount0) / 1000000L
     val useBroadcast = winners <= broadcastKeyLimit
 
     // project row events to merge shape against the (possibly evolved)
@@ -631,9 +616,9 @@ object CdcIngestJob {
     val updates = decoded(batch)
       .filter(isRow)
       .select(
-        LwwDedup.keyCols.map(col) ++
+        keyCols.map(col) ++
         SchemaEvolution.dataColumns(newSchema)
-          .filterNot(f => LwwDedup.keyCols.contains(f.name))
+          .filterNot(f => keyCols.contains(f.name))
           .map { f =>
             val own: Set[String] = Set(f.name) ++
               (if (spec.camelize) Set(SchemaEvolution.camelToSnake(f.name))
@@ -687,6 +672,8 @@ object CdcIngestJob {
 
     val latencyMs = (System.nanoTime() - t0) / 1000000L
     val tCommit0 = System.nanoTime()
+    val compactMs =
+      if (willCommit) compacted.compactMs + splitRes.compactMs else 0L
 
     if (willCommit) {
       val metrics: Map[String, Long] =
@@ -694,6 +681,9 @@ object CdcIngestJob {
         Map("eventsIn" -> eventsIn, "watchedRows" -> watchedRows,
           "noopDrops" -> noops, "dedupDrops" -> dedupDrops,
           "applied" -> applied, "ddls" -> nDdl, "mergeLatencyMs" -> latencyMs,
+          "statsMs" -> tStats, "writeMs" -> result.mergeMs,
+          "compactMs" -> compactMs,
+          "affectedBuckets" -> result.affectedBuckets.size.toLong,
           "rowsWritten" -> result.rowsPerBucket.values.sum,
           "compactedBuckets" -> due.size.toLong,
           "compactedRows" -> compacted.rows,
@@ -717,16 +707,14 @@ object CdcIngestJob {
       lake.commit(next)
       lake.expire(spec.expireKeep)
     }
-    val m = BatchMetrics(batchId, eventsIn, watchedRows, noops,
+    BatchMetrics(batchId, eventsIn, watchedRows, noops,
       dedupDrops, applied, nDdl, latencyMs,
       result.affectedBuckets.size, replayedSkip = false,
-      statsMs = tStats, countMs = tCount, writeMs = result.mergeMs,
+      statsMs = tStats, writeMs = result.mergeMs,
       commitMs = (System.nanoTime() - tCommit0) / 1000000L,
       rowsWritten = result.rowsPerBucket.values.sum,
       compactedBuckets = if (willCommit) due.size else 0,
-      compactMs = if (willCommit) compacted.compactMs + splitRes.compactMs else 0)
-    Metrics.append(lake.root, m)
-    m
+      compactMs = compactMs)
   }
 
   /** Full replay / tail as a Structured Streaming job with checkpointed

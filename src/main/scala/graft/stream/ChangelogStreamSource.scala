@@ -114,6 +114,13 @@ object ChangelogStreamSource {
     parameters.collectFirst { case (n, v) if n.toLowerCase == k => v }
   }
 
+  /** A numeric option's value, or a clean error naming the option. */
+  private[stream] def numOpt[T](parameters: Map[String, String], key: String,
+      parse: String => Option[T]): Option[T] =
+    opt(parameters, key).map(v => parse(v).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-changelog: option '$key' must be an integer (got '$v')")))
+
   private[stream] def openLake(parameters: Map[String, String]): GraftLake = {
     val root = opt(parameters, "path").getOrElse(
       throw new IllegalArgumentException(
@@ -159,7 +166,7 @@ final class ChangelogStreamSource(spark: SparkSession,
     * instead of one giant batch. Post-bootstrap windows only — the
     * bootstrap is one full-state read regardless. */
   private val maxSnapshotsPerTrigger: Option[Long] =
-    opt(parameters, "maxSnapshotsPerTrigger").map(_.toLong).map { n =>
+    numOpt(parameters, "maxSnapshotsPerTrigger", _.toLongOption).map { n =>
       // the Int bound keeps ReadLimit.maxFiles(n.toInt) from silently
       // overflowing negative (round-5 advice)
       require(n >= 1 && n <= Int.MaxValue,
@@ -180,7 +187,7 @@ final class ChangelogStreamSource(spark: SparkSession,
     * continues from the pinned base id after chunk K−1 (offset −1).
     * Default 0 = the one-shot bootstrap. */
   private val bootstrapChunkBuckets: Int =
-    opt(parameters, "bootstrapBuckets").map(_.toInt).map { n =>
+    numOpt(parameters, "bootstrapBuckets", _.toIntOption).map { n =>
       require(n >= 1, s"bootstrapBuckets must be >= 1 (got $n)"); n
     }.getOrElse(0)
   /** End of the last window this run planned/served — the cap base when

@@ -20,7 +20,6 @@ import java.util.UUID
   *   <root>/data/commit-<batchId>-<uuid>/_bucket=N/part-....parquet
   *   <root>/_graft_log/snapshot-%011d.json    // atomic-renamed commit
   *   <root>/_graft_log/clients-%06d.json      // versioned D10 registry
-  *   <root>/_metrics.jsonl                    // per-microbatch lineage
   * }}}
   *
   * The commit protocol replicates the reference's ack-after-process ordering
@@ -135,7 +134,8 @@ object GraftLake {
       schemaVersion: Int,
       files: Seq[FileEntry],
       lastOffset: Option[Offset],
-      /** per-bucket rows applied this commit + scalar batch metrics */
+      /** per-bucket rows applied this commit + scalar batch metrics
+        * (counts and phase timings) — the one durable per-batch record */
       metrics: Map[String, Long],
       parentId: Long,
       /** checkpoint-lineage id that produced this commit: streaming
@@ -244,6 +244,17 @@ object GraftLake {
       hp, hadoopConf())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
+  }
+
+  /** Per-key LWW winner image (max `_offset`) — the engine's one fold,
+    * shared by merge-on-read, range splits and the changelog. */
+  private[graft] def lwwWinners(cur: StructType, df: DataFrame): DataFrame = {
+    import graft.model.Schemas.keyCols
+    val payload = cur.fieldNames.toSeq.filterNot(keyCols.contains)
+    val packed = struct(payload.map(col): _*)
+    df.groupBy(keyCols.map(col): _*)
+      .agg(max_by(packed, graft.model.Offset.encExpr(col("_offset"))).as("_e"))
+      .select(keyCols.map(col) ++ payload.map(c => col(s"_e.$c")): _*)
   }
 }
 
@@ -759,17 +770,6 @@ final class GraftLake(val root: String, val nBuckets: Int,
     }.reduceOption(_ unionByName _)
   }
 
-  /** Per-key LWW winner image (max `_offset`) — the one fold shared by
-    * merge-on-read and the changelog. */
-  private[graft] def lwwWinners(cur: StructType, df: DataFrame): DataFrame = {
-    val keyCols = Seq("repo", "path")
-    val payload = cur.fieldNames.toSeq.filterNot(keyCols.contains)
-    val packed = struct(payload.map(col): _*)
-    df.groupBy(keyCols.map(col): _*)
-      .agg(max_by(packed, graft.model.Offset.encExpr(col("_offset"))).as("_e"))
-      .select(keyCols.map(col) ++ payload.map(c => col(s"_e.$c")): _*)
-  }
-
   /** Oldest snapshot id still inside the retention window — the floor of
     * valid [[snapshotAt]] / [[changesBetween]] bounds (one log listing, no
     * manifest reads). Subscribers compare their last-applied id against it
@@ -845,21 +845,18 @@ final class GraftLake(val root: String, val nBuckets: Int,
     val winFiles = winRaws.flatMap(_.added)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur)
-    def offLit(o: Offset): Column = struct(
-      lit(o.fileIdx).as("fileIdx"), lit(o.pos).as("pos"),
-      lit(o.rowIdx).as("rowIdx"))
     to.lastOffset match {
       case None => empty // nothing ever committed up to toId
       case Some(hi) =>
         val windowed = aligned(spark, to, winFiles).map { df =>
-          val upper = col("_offset") <= offLit(hi)
+          val upper = col("_offset") <= Offset.literal(hi)
           val bounded = from.lastOffset match {
             // the struct comparison cannot push to parquet; its implied
             // fileIdx leaf bound can — row-group stats then skip the
             // pre-window rows of compaction-rewritten base files
             case Some(lo) => df.filter(
               col("_offset.fileIdx") >= lo.fileIdx &&
-                col("_offset") > offLit(lo) && upper)
+                col("_offset") > Offset.literal(lo) && upper)
             case None => df.filter(upper)
           }
           lwwWinners(cur, bounded)

@@ -570,4 +570,30 @@ class ChangelogStreamSpec extends SparkSuite {
       s"re-planned batch 0 served $n2 rows, original served $n1 — the " +
         "tail base did not survive source re-creation")
   }
+
+  test("a non-numeric or out-of-range numeric option fails with an " +
+    "IllegalArgumentException naming the option") {
+    val root = tmp("badopts")
+    Seq("bootstrapBuckets" -> "abc", "bootstrapBuckets" -> "99999999999",
+      "maxSnapshotsPerTrigger" -> "4x").foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException] {
+        new graft.stream.ChangelogStreamSource(spark, Map("path" -> root, k -> v))
+      }
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
+  }
+
+  test("the tail verb rejects a non-positive-integer for:/credit:/" +
+    "bootstrapBuckets: value before any session starts") {
+    val root = tmp("badtail")
+    Seq("bootstrapBuckets:abc", "for:-5", "credit:0", "credit:").foreach { a =>
+      val e = intercept[IllegalArgumentException] {
+        graft.cli.Main.main(Array("tail", root, a))
+      }
+      assert(e.getMessage.contains(a.takeWhile(_ != ':')), e.getMessage)
+    }
+    // the verb stops the session it starts: had one started, it would
+    // have been this suite's
+    assert(!spark.sparkContext.isStopped)
+  }
 }

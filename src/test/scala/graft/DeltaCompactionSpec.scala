@@ -35,30 +35,25 @@ class DeltaCompactionSpec extends SparkSuite {
       feedDir, lakeRoot, tmp("cp2"), nBuckets = 8, maxFilesPerTrigger = 1))
     q.awaitTermination()
 
-    // per-batch accounting from the lineage log: every steady-state batch
+    // per-batch accounting from the snapshot metrics record (~21 commits,
+    // all inside the default expireKeep of 50): every steady-state batch
     // wrote at most its OWN winner count (≤ eventsPerFile), never the
     // table; and compaction fired at least once across the run.
-    // (read via Dataset[String]: Spark's file index hides _-prefixed files)
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val lines = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(lakeRoot, "_metrics.jsonl"))
-      .asScala.toSeq
-    val ms = spark.read.json(lines.toDS)
-      .filter(col("rowsWritten") > 0).collect()
-    val steady = ms.filter(_.getAs[Long]("eventsIn") <= full.eventsPerFile)
+    val ms = lake.snapshotLog()
+      .filter(_.metrics.getOrElse("rowsWritten", 0L) > 0)
+    val steady = ms.filter(_.metrics("eventsIn") <= full.eventsPerFile)
     assert(steady.length >= 15, s"expected ~20 steady-state batches, got ${steady.length}")
-    steady.foreach { r =>
-      val written = r.getAs[Long]("rowsWritten")
-      val winners = r.getAs[Long]("watchedRows") - r.getAs[Long]("noopDrops") -
-        r.getAs[Long]("dedupDrops")
+    steady.foreach { s =>
+      val m = s.metrics
+      val written = m("rowsWritten")
+      val winners = m("watchedRows") - m("noopDrops") - m("dedupDrops")
       assert(written == winners,
-        s"batch ${r.getAs[Long]("batchId")}: wrote $written rows != $winners winners " +
+        s"batch ${s.batchId}: wrote $written rows != $winners winners " +
           "(delta writes must be exactly the batch's winners)")
       assert(written <= full.eventsPerFile,
         s"batch wrote $written rows > batch bound ${full.eventsPerFile} — O(table) rewrite leak")
     }
-    assert(ms.exists(_.getAs[Long]("compactedBuckets") > 0),
+    assert(ms.exists(_.metrics("compactedBuckets") > 0),
       "compaction never fired across 20 delta-accumulating batches")
 
     // merge-on-read + compaction preserve exactness (sha256 row-by-row)

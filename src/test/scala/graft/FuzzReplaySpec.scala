@@ -51,7 +51,7 @@ class FuzzReplaySpec extends SparkSuite {
       val feedDir = tmp(s"fz-feed$i"); val lakeRoot = tmp(s"fz-lake$i")
       BinlogFeedGen.writeFeed(spark, cfg, feedDir)
       val icfg = IngestConfig(feedDir, lakeRoot, tmp(s"fz-cp$i"),
-        nBuckets = nBuckets, salt = i,
+        nBuckets = nBuckets,
         maxFilesPerTrigger = 1 + rnd.nextInt(4))
       if (streamMode) CdcIngestJob.runStream(spark, icfg).awaitTermination()
       else CdcIngestJob.replayBatch(spark, icfg)
@@ -90,7 +90,7 @@ class FuzzReplaySpec extends SparkSuite {
       val feedDir = tmp(s"fd-feed$i"); val lakeRoot = tmp(s"fd-lake$i")
       BinlogFeedGen.writeFeed(spark, cfg, feedDir)
       val icfg = IngestConfig(feedDir, lakeRoot, tmp(s"fd-cp$i"),
-        nBuckets = nBuckets, salt = 100 + i,
+        nBuckets = nBuckets,
         maxFilesPerTrigger = 1 + rnd.nextInt(4),
         tables = Seq(graft.stream.TableSpec(
           BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable, lakeRoot,

@@ -1,20 +1,20 @@
 package graft
 
-import graft.merge.LwwDedup
 import graft.model.Offset
+import graft.table.GraftLake
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
 
-/** Dedup/ordering property tests (SURVEY.md §5.2.2): random event
-  * permutations and batch shapes → identical winners; max_by path ≡ window
-  * row_number path; salt-invariance. */
+/** Dedup/ordering property tests (SURVEY.md §5.2.2) of the engine's one
+  * LWW fold, [[GraftLake.lwwWinners]]: random event permutations and batch
+  * shapes → identical winners; max_by fold ≡ window row_number path. */
 /** top-level so Catalyst encoders/codegen see a public static class */
 final case class Ev(repo: String, path: String, payload: String,
     fileIdx: Long, pos: Long, rowIdx: Long)
 
-class LwwDedupSpec extends SparkSuite {
+class LwwFoldSpec extends SparkSuite {
   import spark.implicits._
 
   private def randomEvents(seed: Long, n: Int, keys: Int): Seq[Ev] = {
@@ -29,8 +29,11 @@ class LwwDedupSpec extends SparkSuite {
   }
 
   private def df(evs: Seq[Ev]) = evs.toDF()
-    .withColumn("offset", struct($"fileIdx", $"pos", $"rowIdx"))
+    .withColumn("_offset", struct($"fileIdx", $"pos", $"rowIdx"))
     .drop("fileIdx", "pos", "rowIdx")
+
+  private def fold(events: org.apache.spark.sql.DataFrame) =
+    GraftLake.lwwWinners(events.schema, events)
 
   private def oracleWinners(evs: Seq[Ev]): Map[(String, String), String] =
     evs.groupBy(e => (e.repo, e.path)).view.mapValues(
@@ -40,44 +43,39 @@ class LwwDedupSpec extends SparkSuite {
   test("dedup picks each key's max-offset event (vs in-memory oracle)") {
     for (seed <- 1L to 3L) {
       val evs = randomEvents(seed, 500, 40)
-      val got = LwwDedup.dedup(df(evs))
+      val got = fold(df(evs))
         .select($"repo", $"path", $"payload").collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
       assert(got == oracleWinners(evs), s"seed=$seed")
     }
   }
 
-  test("salted two-stage ≡ unsalted ≡ window row_number formulation") {
-    val evs = randomEvents(7L, 800, 25)
-    val base = df(evs)
-    val unsalted = LwwDedup.dedup(base).orderBy("repo", "path").collect()
-    for (salt <- Seq(2, 8, 31)) {
-      val salted = LwwDedup.dedup(base, salt).orderBy("repo", "path").collect()
-      assert(salted.sameElements(unsalted), s"salt=$salt diverged")
-    }
+  test("max_by fold ≡ window row_number formulation") {
+    val base = df(randomEvents(7L, 800, 25))
+    val folded = fold(base).orderBy("repo", "path").collect()
     // window cross-check (SURVEY.md §2.2): row_number over offset desc == 1
-    val w = Window.partitionBy($"repo", $"path").orderBy($"offset".desc)
+    val w = Window.partitionBy($"repo", $"path").orderBy($"_offset".desc)
     val windowed = base.withColumn("rn", row_number().over(w))
       .filter($"rn" === 1).drop("rn")
-      .select(base.columns.map(col).toSeq: _*)
       .orderBy("repo", "path").collect()
-    assert(windowed.sameElements(unsalted), "window formulation diverged")
+    assert(windowed.sameElements(folded), "window formulation diverged")
   }
 
   test("duplicate events (same offset, same image) collapse to one winner") {
     val evs = randomEvents(11L, 300, 20)
     val withDups = evs ++ evs.takeRight(120) ++ evs.take(50)
-    val got = LwwDedup.dedup(df(Random.shuffle(withDups)))
-      .select($"repo", $"path", $"payload").collect()
+    val got = fold(df(Random.shuffle(withDups)))
+    assert(got.count() == evs.map(e => (e.repo, e.path)).distinct.size)
+    val winners = got.select($"repo", $"path", $"payload").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    assert(got == oracleWinners(evs))
+    assert(winners == oracleWinners(evs))
   }
 
   test("partitioning-invariant: same winners at 1, 3, 16 input partitions") {
     val evs = randomEvents(13L, 600, 30)
-    val expected = LwwDedup.dedup(df(evs)).orderBy("repo", "path").collect()
+    val expected = fold(df(evs)).orderBy("repo", "path").collect()
     for (np <- Seq(1, 3, 16)) {
-      val got = LwwDedup.dedup(df(evs).repartition(np))
+      val got = fold(df(evs).repartition(np))
         .orderBy("repo", "path").collect()
       assert(got.sameElements(expected), s"numPartitions=$np")
     }

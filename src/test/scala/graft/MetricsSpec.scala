@@ -4,6 +4,7 @@ import graft.feed.{BinlogFeedGen, FeedReader}
 import graft.feed.BinlogFeedGen.FeedConfig
 import graft.model.{Offset, Op}
 import graft.stream.{CdcIngestJob, IngestConfig, ResumeMode}
+import graft.table.GraftLake
 import org.apache.spark.sql.functions._
 
 /** Exact accounting of the per-batch lineage metrics the north rule names
@@ -87,5 +88,34 @@ class MetricsSpec extends SparkSuite {
     assert(m3.eventsIn > 0)
     assert(m3.applied == 0, s"re-replay applied ${m3.applied} rows")
     assert(m3.dedupDrops == rows - noops - winners)
+  }
+
+  test("the snapshot record carries the batch's phase timings; the metrics " +
+    "verb prints one line per retained snapshot") {
+    val feedDir = tmp("feed3"); val lakeRoot = tmp("lake3")
+    BinlogFeedGen.writeFeed(spark, cfg, feedDir)
+    val m = CdcIngestJob.replayBatch(spark, IngestConfig(
+      feedDir, lakeRoot, tmp("cp3"), nBuckets = 8))
+    val lake = new GraftLake(lakeRoot, 8)
+    val rec = lake.latest().get.metrics
+    assert(rec("statsMs") == m.statsMs && rec("writeMs") == m.writeMs &&
+      rec("compactMs") == m.compactMs &&
+      rec("affectedBuckets") == m.affectedBuckets, s"$rec vs $m")
+    assert(m.statsMs > 0 && m.writeMs > 0)
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(graft.cli.Main.main(Array("metrics", lakeRoot)))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    val log = lake.snapshotLog()
+    assert(lines.size == log.size, lines.mkString("\n"))
+    lines.zip(log).foreach { case (l, s) =>
+      assert(l.startsWith(s"[metrics] snapshot=${s.id} "), l)
+      assert(!l.contains("bucket."), s"per-bucket rows are not scalars: $l")
+    }
+    Seq(s"statsMs=${m.statsMs}", s"writeMs=${m.writeMs}",
+      s"compactMs=${m.compactMs}", s"affectedBuckets=${m.affectedBuckets}",
+      s"applied=${m.applied}").foreach { kv =>
+      assert(lines.last.split(' ').contains(kv), s"$kv missing: ${lines.last}")
+    }
   }
 }

@@ -70,17 +70,14 @@ class RangedDeltaSpec extends SparkSuite {
         assert(fs.size <= 256 / width,
           s"commit $bid wrote ${fs.size} delta files > ${256 / width} ranges")
       }
-    // lineage: no applying commit may have added more delta files than
+    // lineage (snapshot metrics; 10 commits, inside the default
+    // expireKeep): no applying commit may have added more delta files than
     // nBuckets/width (the whole point), despite touching ~256 buckets
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(lakeRoot, "_metrics.jsonl"))
-      .asScala.toSeq
-    import spark.implicits._
-    val ms = spark.read.json(lines.toDS).filter(col("rowsWritten") > 0).collect()
-    assert(ms.forall(_.getAs[Long]("affectedBuckets") > 200),
+    val ms = lake.snapshotLog().map(_.metrics)
+      .filter(_.getOrElse("rowsWritten", 0L) > 0)
+    assert(ms.forall(_("affectedBuckets") > 200),
       "fixture must touch ~all buckets per batch for the bound to bite")
-    assert(ms.nonEmpty && ms.exists(_.getAs[Long]("compactedBuckets") > 0),
+    assert(ms.nonEmpty && ms.exists(_("compactedBuckets") > 0),
       "range compaction never fired")
 
     // exactness: merge-on-read across ranged deltas + range folds

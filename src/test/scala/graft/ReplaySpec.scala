@@ -51,7 +51,7 @@ class ReplaySpec extends SparkSuite {
     val splitKey = "spark.sql.files.maxPartitionBytes"
     val prevSplit = spark.conf.get(splitKey)
     val m = CdcIngestJob.replayBatch(spark, IngestConfig(
-      feedDir, lakeRoot, tmp("cp1"), nBuckets = 8, salt = 1))
+      feedDir, lakeRoot, tmp("cp1"), nBuckets = 8))
     assert(spark.conf.get(splitKey) == prevSplit,
       "replayBatch must restore the session scan-split setting")
     assert(m.applied > 0)
@@ -62,17 +62,17 @@ class ReplaySpec extends SparkSuite {
     val feedDir = tmp("feed2"); val lakeRoot = tmp("lake2")
     BinlogFeedGen.writeFeed(spark, cfg, feedDir)
     val q = CdcIngestJob.runStream(spark, IngestConfig(
-      feedDir, lakeRoot, tmp("cp2"), nBuckets = 8, salt = 2,
+      feedDir, lakeRoot, tmp("cp2"), nBuckets = 8,
       maxFilesPerTrigger = 2))
     q.awaitTermination()
     assertMatchesOracle(lakeRoot, cfg, nBuckets = 8)
   }
 
-  test("salted dedup and different partitioning produce the identical table") {
+  test("a different bucket count and key skew produce the identical table") {
     val feedDir = tmp("feed3"); val lakeRoot = tmp("lake3")
     BinlogFeedGen.writeFeed(spark, cfg.copy(skew = 0.5), feedDir)
     val m = CdcIngestJob.replayBatch(spark, IngestConfig(
-      feedDir, lakeRoot, tmp("cp3"), nBuckets = 4, salt = 8))
+      feedDir, lakeRoot, tmp("cp3"), nBuckets = 4))
     assert(m.applied > 0)
     assertMatchesOracle(lakeRoot, cfg.copy(skew = 0.5), nBuckets = 4)
   }
