@@ -42,7 +42,7 @@ object Describe {
     val (deltas, bases) = snap.files.partition(_.delta)
     val header = Seq(
       s"lake=${lake.root} snapshot=${snap.id} batchId=${snap.batchId} " +
-        s"lineage=${Option(snap.lineage).filter(_.nonEmpty).getOrElse("-")} " +
+        s"lineage=${if (snap.lineage.isEmpty) "-" else snap.lineage} " +
         s"nBuckets=${snap.nBuckets} " +
         s"lastOffset=${snap.lastOffset.map(_.render).getOrElse("-")}")
     val files = Seq(

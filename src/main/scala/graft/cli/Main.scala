@@ -92,15 +92,32 @@ object Main {
           "stop the stream first or wait out the lease")
     }
 
+  /** One numeric CLI argument, checked before any session starts: its
+    * value when `raw` parses and lies in `[lo, hi]`, else an
+    * IllegalArgumentException naming the verb and the argument. */
+  private def numArg[T](verb: String, name: String, raw: String,
+      parse: String => Option[T], lo: T, hi: T)(implicit ord: Ordering[T]): T =
+    parse(raw).filter(v => ord.gteq(v, lo) && ord.lteq(v, hi))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$verb: $name needs a number in [$lo, $hi] (got '$raw')"))
+  private def intArg(verb: String, name: String, raw: String, lo: Int = 1): Int =
+    numArg(verb, name, raw, _.toIntOption, lo, Int.MaxValue)
+  private def longArg(verb: String, name: String, raw: String, lo: Long = 1L,
+      hi: Long = Long.MaxValue): Long =
+    numArg(verb, name, raw, _.toLongOption, lo, hi)
+
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: feedDir :: n :: k :: rest =>
-      val spark = session(feedScans = true)
-      val skew = rest.headOption.map(_.toDouble).getOrElse(0.0)
-      val dup = rest.drop(1).headOption.map(_.toDouble).getOrElse(0.0)
+      val nl = longArg("gen", "nEvents", n)
+      val nk = intArg("gen", "nKeys", k)
+      val skew = rest.headOption.map(numArg("gen", "skew", _,
+        _.toDoubleOption, 0.0, Double.MaxValue)).getOrElse(0.0)
+      val dup = rest.drop(1).headOption.map(numArg("gen", "dupTailFrac", _,
+        _.toDoubleOption, 0.0, 1.0)).getOrElse(0.0)
       // `evolve` = add+widen; `evolve-full` adds mid-feed RENAME and DROP
       // too, so the whole DDL surface is drivable from the CLI
       val evolve = rest.drop(2).headOption.getOrElse("")
-      val nl = n.toLong
+      val spark = session(feedScans = true)
       val ddls = evolve match {
         case "evolve" => BinlogFeedGen.evolutionDdls(nl)
         case "evolve-full" => BinlogFeedGen.evolutionDdls(nl) ++ Map(
@@ -108,7 +125,7 @@ object Main {
           (nl * 9 / 10) -> graft.model.DdlChange("drop_column", "lang", "", ""))
         case _ => Map.empty[Long, graft.model.DdlChange]
       }
-      val cfg = FeedConfig(nl, k.toInt, skew = skew, dupTailFrac = dup,
+      val cfg = FeedConfig(nl, nk, skew = skew, dupTailFrac = dup,
         ddlAt = ddls)
       BinlogFeedGen.writeFeed(spark, cfg, feedDir)
       println(s"[gen] wrote $n events (${k} keys, skew=$skew, dup=$dup, " +
@@ -116,12 +133,12 @@ object Main {
       spark.stop()
 
     case "replay" :: feedDir :: lakeRoot :: rest if rest.size <= 1 =>
+      val pinned = rest.headOption.map(intArg("replay", "nBuckets", _))
       val spark = session(feedScans = true)
       // an existing lake pins the count; a new one scales it with the
       // feed's row volume unless pinned explicitly (a fixed count makes
       // per-bucket compactions O(table) at scale)
-      val nBuckets = GraftLake.storedBuckets(lakeRoot)
-        .orElse(rest.headOption.map(_.toInt)).getOrElse {
+      val nBuckets = GraftLake.storedBuckets(lakeRoot).orElse(pinned).getOrElse {
           val est = spark.read.parquet(feedDir).count()
           GraftLake.suggestedBuckets(est, targetRowsPerBucket = 500000L)
         }
@@ -131,13 +148,12 @@ object Main {
       spark.stop()
 
     case "stream" :: feedDir :: lakeRoot :: cp :: rest0 =>
-      val spark = session(feedScans = true)
       val clientId = rest0.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
       // D9: supervise:<n> relaunches the stream from its checkpoint on
       // failure, up to n consecutive unproductive restarts (the reference
       // client's reconnect-and-re-register failover loop)
       val supervise = rest0.find(_.startsWith("supervise:"))
-        .map(_.stripPrefix("supervise:").toInt)
+        .map(a => intArg("stream", "supervise:", a.stripPrefix("supervise:"), lo = 0))
       val rest = rest0.filterNot(s =>
         s.startsWith("client:") || s.startsWith("supervise:"))
       // positional args are (maxFilesPerTrigger, mode) but mode tokens are
@@ -146,13 +162,15 @@ object Main {
       def isMode(s: String) = s == "continue" || s == "lastpos" ||
         s.startsWith("from:") || s.startsWith("gtid:")
       val (modeArgs, numArgs) = rest.partition(isMode)
-      val mft = numArgs.headOption.map(_.toInt).getOrElse(8)
+      val mft = numArgs.headOption.map(intArg("stream", "maxFilesPerTrigger", _))
+        .getOrElse(8)
       val mode = modeArgs.headOption.getOrElse("lastpos") match {
         case "continue" => ResumeMode.Continue
         case s if s.startsWith("from:") => ResumeMode.FromPos(Offset.parse(s.stripPrefix("from:")))
         case s if s.startsWith("gtid:") => ResumeMode.FromGtid(s.stripPrefix("gtid:"))
         case _ => ResumeMode.LastPos
       }
+      val spark = session(feedScans = true)
       val nBuckets = GraftLake.storedBuckets(lakeRoot).getOrElse(32)
       val icfg = IngestConfig(feedDir, lakeRoot, cp,
         nBuckets = nBuckets, maxFilesPerTrigger = mft, resumeMode = mode,
@@ -182,10 +200,13 @@ object Main {
         lake.registeredClients().toSeq.sorted.mkString(", "))
 
     case "clients" :: lakeRoot :: rest if rest.size <= 1 =>
+      val pruneTtlSec = rest.headOption.filter(_.startsWith("prune:"))
+        .map(p => longArg("clients", "prune:", p.stripPrefix("prune:"),
+          lo = 0L, hi = Long.MaxValue / 1000))
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(0))
-      rest.headOption.filter(_.startsWith("prune:")).foreach { p =>
-        val ttlMs = p.stripPrefix("prune:").toLong * 1000L
+      pruneTtlSec.foreach { sec =>
+        val ttlMs = sec * 1000L
         val dead = lake.pruneDeadClients(ttlMs)
         println(s"[clients] pruned ${dead.size} dead: ${dead.toSeq.sorted.mkString(", ")}")
       }
@@ -207,6 +228,7 @@ object Main {
       println(s"[vacuum] swept orphans at $lakeRoot")
 
     case "show" :: lakeRoot :: rest =>
+      val n = rest.headOption.map(intArg("show", "n", _, lo = 0)).getOrElse(10)
       val spark = session()
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(32))
@@ -219,29 +241,25 @@ object Main {
       df.withColumn("sha", sha2(col("content"), 256))
         .drop("content")
         .orderBy("repo", "path")
-        .show(rest.headOption.map(_.toInt).getOrElse(10), truncate = false)
+        .show(n, truncate = false)
       spark.stop()
 
     case "get" :: lakeRoot :: repo :: path :: rest if rest.size <= 1 =>
       // point lookup: O(bucket-range files) planned, never O(table) —
       // `filesPlanned` makes the pruning visible to the operator. The
-      // bucket computation is a pure function of the stored count, so a
-      // lake that predates nBuckets stamping must fail closed here: a
-      // guessed count would plan the WRONG bucket and silently answer
-      // "0 rows" for a key that exists.
-      val spark = session()
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(sys.error(
-          s"no lake at $lakeRoot (or its snapshots predate bucket-count " +
-            "stamping — point lookups need the stored count)")))
-      val snap = rest.headOption match {
-        case Some(a) if a.startsWith("asof:") =>
-          lake.snapshotAt(a.stripPrefix("asof:").toLong)
-        case Some(a) => // a typo'd as-of must not silently answer "latest"
+      // bucket computation is a pure function of the stored count.
+      val asof = rest.headOption.map {
+        case a if a.startsWith("asof:") =>
+          longArg("get", "asof:", a.stripPrefix("asof:"), lo = 0L)
+        case a => // a typo'd as-of must not silently answer "latest"
           sys.error(s"get: unknown argument '$a' (expected asof:<snapId>)")
-        case None => lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot"))
       }
-      val n = if (snap.nBuckets > 0) snap.nBuckets else lake.nBuckets
+      val spark = session()
+      val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
+        .getOrElse(sys.error(s"no lake at $lakeRoot")))
+      val snap = asof.map(lake.snapshotAt)
+        .getOrElse(lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot")))
+      val n = snap.nBuckets
       val df = lake.readKey(spark, snap, repo, path)
       println(s"[get] snapshot=${snap.id} " +
         s"bucket=${GraftLake.bucketOf(repo, path, n)}/$n " +
@@ -252,11 +270,12 @@ object Main {
     case "rebucket" :: lakeRoot :: n :: Nil =>
       // offline bucket-count migration: one full rewrite; reopen any
       // running stream afterwards (it fails closed on the old count)
+      val newN = intArg("rebucket", "newN", n)
       val spark = session()
       val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
         .getOrElse(sys.error(s"no lake at $lakeRoot")))
       refuseUnderLiveWriter(lake, lakeRoot, "rebucket")
-      val s = lake.rebucket(spark, n.toInt)
+      val s = lake.rebucket(spark, newN)
       println(s"[rebucket] snapshot=${s.id} nBuckets=${s.nBuckets} " +
         s"files=${s.files.size} rows=${s.metrics.getOrElse("rowsWritten", 0L)}")
       spark.stop()
@@ -268,14 +287,14 @@ object Main {
       // feed:<dir> supplies the tombstone GC horizon (the retained feed's
       // minimum offset — the same O3 bound the streaming fold uses), so an
       // offline optimize can finally drop long-expired tombstones too.
+      val budget = rest0.filterNot(_.startsWith("feed:")).headOption
+        .map(intArg("optimize", "maxBucketsPerCommit", _)).getOrElse(64)
       val spark = session()
       val horizon = rest0.find(_.startsWith("feed:")).map { a =>
         CdcIngestJob.feedOffsetRange(spark, a.stripPrefix("feed:"))._1
       }
-      val rest = rest0.filterNot(_.startsWith("feed:"))
       val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
         .getOrElse(sys.error(s"no lake at $lakeRoot")))
-      val budget = rest.headOption.map(_.toInt).getOrElse(64)
       refuseUnderLiveWriter(lake, lakeRoot, "optimize")
       val r = graft.merge.MergeApply.optimize(spark, lake, budget, horizon)
       println(s"[optimize] commits=${r.commits} " +
@@ -284,6 +303,7 @@ object Main {
       spark.stop()
 
     case "expire" :: lakeRoot :: keep :: Nil =>
+      val k = intArg("expire", "keep", keep)
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(0))
       // a live stream runs its own per-commit expire, serialized with its
@@ -297,7 +317,7 @@ object Main {
             "the stream trims retention itself per commit; stop it first " +
             "or wait out the lease")
       }
-      lake.expire(keep.toInt)
+      lake.expire(k)
       println(s"[expire] retained the last $keep snapshots at $lakeRoot")
 
     case "log" :: lakeRoot :: Nil =>
@@ -318,23 +338,27 @@ object Main {
     case "changes" :: lakeRoot :: from :: to :: rest if rest.size <= 1 =>
       // CDC-out: net per-key changes between two snapshots (downstream
       // consumers chain off the lake without replaying the feed)
+      val fromId = longArg("changes", "fromSnap", from, lo = 0L)
+      val toId = longArg("changes", "toSnap", to, lo = 0L)
+      val n = rest.headOption.map(intArg("changes", "n", _, lo = 0)).getOrElse(10)
       val spark = session()
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(32))
-      val df = lake.changesBetween(spark, from.toLong, to.toLong)
+      val df = lake.changesBetween(spark, fromId, toId)
       println(s"[changes] ($from, $to] rows=${df.count()}")
       df.withColumn("sha", sha2(col("content"), 256))
         .drop("content")
         .orderBy("repo", "path")
-        .show(rest.headOption.map(_.toInt).getOrElse(10), truncate = false)
+        .show(n, truncate = false)
       spark.stop()
 
     case "sync" :: srcRoot :: dstRoot :: rest if rest.size <= 2 =>
       // lake→lake changelog subscription: apply the source's new snapshots
       // into the destination (one commit per sync window, exactly-once)
-      val spark = session()
       val clientId = rest.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
-      val pollMs = rest.find(_.startsWith("follow:")).map(_.stripPrefix("follow:").toLong)
+      val pollMs = rest.find(_.startsWith("follow:"))
+        .map(a => longArg("sync", "follow:", a.stripPrefix("follow:")))
+      val spark = session()
       val src = new GraftLake(srcRoot,
         GraftLake.storedBuckets(srcRoot).getOrElse(sys.error(s"no lake at $srcRoot")))
       val dst = new GraftLake(dstRoot,
@@ -373,9 +397,8 @@ object Main {
           "[bootstrap:none] [client:<id>] [for:<ms>] [cp:<dir>] [credit:<k>] " +
           "[bootstrapBuckets:<k>])")
         numeric.foreach { p =>
-          if (!t.stripPrefix(p).toLongOption.exists(_ > 0))
-            throw new IllegalArgumentException(
-              s"tail: $p needs a positive integer (got '$t')")
+          if (p == "for:") longArg("tail", p, t.stripPrefix(p))
+          else intArg("tail", p, t.stripPrefix(p))
         }
       }
       val spark = session()

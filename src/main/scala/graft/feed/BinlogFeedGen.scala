@@ -167,10 +167,6 @@ object BinlogFeedGen {
     if (m.isEmpty) None else Some(m)
   }
 
-  /** back-compat alias: the original single-`size`-column fixture helper */
-  def sizeExtraOf(cfg: FeedConfig, kid: Long, ver: Long, i: Long): Option[Map[String, String]] =
-    extrasOf(cfg, kid, ver, i)
-
   def image(cfg: FeedConfig, kid: Long, ver: Long): RepoFile =
     RepoFile(repoOf(kid), pathOf(kid), commitOf(cfg, kid, ver), langOf(kid),
       contentOf(cfg, kid, ver))
@@ -189,7 +185,7 @@ object BinlogFeedGen {
         val op = opOf(cfg, kid, ver)
         val before = if (ver > 1 && op != Op.Insert) Some(image(cfg, kid, ver - 1)) else None
         val after = if (op != Op.Delete) Some(image(cfg, kid, ver)) else None
-        val extras = if (decoy || op == Op.Delete) None else sizeExtraOf(cfg, kid, ver, i)
+        val extras = if (decoy || op == Op.Delete) None else extrasOf(cfg, kid, ver, i)
         ChangeEvent(offsetOf(cfg, i), op, ts(cfg, i), WatchedDb, table,
           before, after, extras, None)
     }

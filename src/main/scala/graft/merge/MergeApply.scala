@@ -198,17 +198,10 @@ object MergeApply {
     // codec follows expected lifetime: a first write into an EMPTY table
     // is a bulk load whose files become long-lived bases — dense codec;
     // everything after is a delta the next fold re-encodes — snappy.
-    // `graft.merge.denseFirstLoad=false` flips the first-load choice to
-    // snappy for the bench's codec A/B (round-4 verdict #6: quantify what
-    // the bulk-replay path pays for long-lived zstd bases).
-    val denseFirstLoad =
-      sys.props.get("graft.merge.denseFirstLoad")
-        .orElse(sys.env.get("GRAFT_DENSE_FIRSTLOAD"))
-        .getOrElse("true").toBoolean
     val files0 = lake.writeData(
       shaped.select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
       batchId,
-      transient_ = snap.files.nonEmpty || width > 1 || !denseFirstLoad,
+      transient_ = snap.files.nonEmpty || width > 1,
       rangeWidth = width)
 
     // Base-vs-delta marking. A dup-free write (footer rows == distinct

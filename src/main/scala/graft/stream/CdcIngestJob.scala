@@ -350,7 +350,7 @@ object CdcIngestJob {
     // would skip genuinely-new batches (data loss). Cross-lineage replays
     // are instead absorbed by the offset bound (resolveStart) plus the
     // merge's idempotence.
-    if (Option(snap.lineage).getOrElse("") == lineage && snap.batchId >= batchId) {
+    if (snap.lineage == lineage && snap.batchId >= batchId) {
       // a fenced batch commits no snapshot, so it leaves no metrics
       // record: log it — fenced skips are exactly what an operator audits
       // after a crash-restart

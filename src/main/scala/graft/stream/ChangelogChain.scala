@@ -87,13 +87,11 @@ object ChangelogChain {
     val dstSnap = dst.latest().getOrElse(dst.init(schema))
     val lineage = lineageFor(src)
     val from: Option[Long] =
-      if (Option(dstSnap.lineage).getOrElse("") == lineage && dstSnap.batchId >= 0)
-        Some(dstSnap.batchId)
+      if (dstSnap.lineage == lineage && dstSnap.batchId >= 0) Some(dstSnap.batchId)
       else None
     // a mid-bootstrap destination: our own lineage, chunk progress in the
     // snapshot metrics (batchId stays -1 until the last chunk commits)
-    val midBootstrap = from.isEmpty &&
-      Option(dstSnap.lineage).getOrElse("") == lineage &&
+    val midBootstrap = from.isEmpty && dstSnap.lineage == lineage &&
       dstSnap.metrics.contains("bootstrapSrcSnap")
     if (from.exists(_ >= srcSnap.id)) // fence: window already applied
       return SyncResult(srcSnap.id, 0L, applied = false)
@@ -109,21 +107,12 @@ object ChangelogChain {
 
     // chunked bootstrap path (fresh destination or mid-bootstrap resume)
     if (from.isEmpty && (midBootstrap ||
-        (bootstrapChunkBuckets > 0 && chunkCount(srcSnap, bootstrapChunkBuckets) > 1)))
+        chunkCount(srcSnap.nBuckets, bootstrapChunkBuckets) > 1))
       return bootstrapChunked(spark, src, dst, clientId, srcSnap, dstSnap,
         lineage, compactFactor, maxDeltaFiles, maxCompactBuckets, expireKeep,
         bootstrapChunkBuckets, maxBootstrapChunksPerCall)
 
-    // too-old guard (reference O3, for subscribers): a follower whose
-    // last-applied source snapshot has left the source's retention window
-    // cannot reconstruct its change window — refuse with the remedy
-    // spelled out instead of surfacing a manifest-chain internal error
-    for (f <- from; floor <- src.oldestRetainedId() if f < floor)
-      throw new IllegalStateException(
-        s"subscription too old: destination ${dst.root} last applied " +
-          s"source snapshot $f, but ${src.root} retains only ids >= " +
-          s"$floor — the change window is gone; re-bootstrap into a " +
-          "fresh destination (or raise the source's expireKeep)")
+    from.foreach(requireRetained(src, _, s"destination ${dst.root} last applied"))
 
     // writer lease on the destination: fences the full-sweep vacuum off
     // this window's uncommitted files until the commit below lands
@@ -186,10 +175,35 @@ object ChangelogChain {
     SyncResult(srcSnap.id, rowsApplied, applied = true, bootstrapped = from.isEmpty)
   }
 
-  private def chunkCount(srcSnap: GraftLake.Snapshot, chunkBuckets: Int): Int = {
-    val n = if (srcSnap.nBuckets > 0) srcSnap.nBuckets else 1
+  /** The subscriber retention guard (reference O3), shared by this
+    * follower and the `graft-changelog` source: a subscriber still needs
+    * source snapshot `id` (a window bound, or the snapshot a bootstrap is
+    * pinned to); once it has left `src`'s retention window the change
+    * window cannot be reconstructed, so refuse with the remedy spelled out
+    * instead of surfacing a manifest-chain internal error. `holder` says
+    * who needs `id` and how ("destination /x last applied"). */
+  private[stream] def requireRetained(src: GraftLake, id: Long,
+      holder: String): Unit =
+    for (floor <- src.oldestRetainedId() if id < floor)
+      throw new IllegalStateException(
+        s"subscription too old: $holder source snapshot $id, but " +
+          s"${src.root} retains only ids >= $floor — the change window is " +
+          "gone; re-bootstrap (a fresh destination or query) or raise the " +
+          "source's expireKeep")
+
+  /** Bootstrap chunk count for a source of `nBuckets` buckets at most
+    * `chunkBuckets` per chunk (<= 0: one chunk, the one-shot bootstrap). */
+  private[stream] def chunkCount(nBuckets: Int, chunkBuckets: Int): Int =
     if (chunkBuckets <= 0) 1
-    else math.max(1, math.ceil(n.toDouble / chunkBuckets).toInt)
+    else math.max(1, math.ceil(nBuckets.toDouble / chunkBuckets).toInt)
+
+  /** Source buckets of bootstrap chunks `lo..hi` (inclusive) of `total`
+    * over `nBuckets` — the one chunk→bucket-range mapping both subscribers
+    * serve by; the union over all chunks is every bucket exactly once. */
+  private[stream] def chunkBuckets(nBuckets: Int, total: Int, lo: Int,
+      hi: Int): Set[Int] = {
+    val w = math.max(1, math.ceil(nBuckets.toDouble / total).toInt)
+    (lo * w until math.min((hi + 1) * w, nBuckets)).toSet
   }
 
   /** The chunked bootstrap (see [[sync]]'s scaladoc): apply the PINNED
@@ -210,22 +224,16 @@ object ChangelogChain {
       if (resume) dstSnap.metrics("bootstrapSrcSnap") else srcSnap.id
     val total =
       if (resume) dstSnap.metrics("bootstrapChunks").toInt
-      else chunkCount(srcSnap, bootstrapChunkBuckets)
+      else chunkCount(srcSnap.nBuckets, bootstrapChunkBuckets)
     val done0 =
       if (resume) dstSnap.metrics.getOrElse("bootstrapChunk", 0L).toInt else 0
-    // O3 for the pinned snapshot: a bootstrap paused past the source's
-    // retention cannot read a consistent base any more
-    for (floor <- src.oldestRetainedId() if pinnedId < floor)
-      throw new IllegalStateException(
-        s"subscription too old: the mid-bootstrap destination ${dst.root} " +
-          s"pins source snapshot $pinnedId, but ${src.root} retains only " +
-          s"ids >= $floor — re-bootstrap into a fresh destination (or " +
-          "raise the source's expireKeep)")
+    // a bootstrap paused past the source's retention cannot read a
+    // consistent base any more
+    requireRetained(src, pinnedId,
+      s"the mid-bootstrap destination ${dst.root} pins")
     val pinned =
       if (pinnedId == srcSnap.id) srcSnap else src.snapshotAt(pinnedId)
     val schema = src.currentSchema(pinned)
-    val srcN = if (pinned.nBuckets > 0) pinned.nBuckets else 1
-    val w = math.max(1, math.ceil(srcN.toDouble / total).toInt)
     val width = GraftLake.deltaRangeWidth(dst.nBuckets)
     dst.renewLease(lineage)
     var cur = dstSnap
@@ -233,7 +241,7 @@ object ChangelogChain {
     var j = done0
     val until = math.min(total, done0 + math.max(1, maxChunksPerCall))
     while (j < until) {
-      val buckets = (j * w until math.min((j + 1) * w, srcN)).toSet
+      val buckets = chunkBuckets(pinned.nBuckets, total, j, j)
       val rows = src.read(spark, pinned, Some(buckets),
         includeTombstones = true)
       val shaped = rows

@@ -233,9 +233,8 @@ final class ChangelogStreamSource(spark: SparkSession,
     * keeps the in-memory base: single-process semantics are unchanged. */
   private val (persistedBaseId: Long, nChunks: Int) = {
     val wantChunks =
-      if (!bootstrapFull || bootstrapChunkBuckets <= 0) 1
-      else math.max(1, math.ceil(
-        lake.nBuckets.toDouble / bootstrapChunkBuckets).toInt)
+      if (!bootstrapFull) 1
+      else ChangelogChain.chunkCount(baseSnap.nBuckets, bootstrapChunkBuckets)
     if (metadataPath == null || metadataPath.isEmpty) (baseSnap.id, wantChunks)
     else {
       val p = new org.apache.hadoop.fs.Path(metadataPath, "graft-source-base")
@@ -251,7 +250,6 @@ final class ChangelogStreamSource(spark: SparkSession,
           txt.split("\\s+").toSeq match {
             case Seq(b, k) => b.toLongOption.flatMap(bv =>
               k.toIntOption.map(kv => (bv, kv)))
-            case Seq(b) => b.toLongOption.map(bv => (bv, 1))
             case _ => None // blank/torn write reads as absent
           }
         }
@@ -269,15 +267,6 @@ final class ChangelogStreamSource(spark: SparkSession,
     }
   }
 
-  /** Bucket width of a bootstrap chunk — derived from the PINNED base
-    * snapshot's bucket count (stable across restarts by construction). */
-  private def chunkWidth: Int = {
-    val n = math.max(1, scala.util.Try(lake.snapshotAt(persistedBaseId))
-      .toOption.flatMap(s => Option(s.nBuckets).filter(_ > 0))
-      .getOrElse(lake.nBuckets))
-    math.max(1, math.ceil(n.toDouble / nChunks).toInt)
-  }
-
   /** Next window end from `base` (None = nothing planned yet): the next
     * bootstrap chunk while any remain, else the admission-capped tip.
     * Returns None for "no new data". */
@@ -291,7 +280,7 @@ final class ChangelogStreamSource(spark: SparkSession,
     }
     base match {
       case None if nChunks > 1 => Some(-nChunks.toLong) // first chunk
-      case None => cappedTip(None) // legacy one-shot first window
+      case None => cappedTip(None) // one-shot first window
       case Some(b) if b < -1 => Some(b + 1) // next bootstrap chunk
       case Some(b) if b == -1 => // bootstrap complete: tail from the base
         cappedTip(Some(persistedBaseId))
@@ -347,18 +336,10 @@ final class ChangelogStreamSource(spark: SparkSession,
       case None if !bootstrapFull => Some(math.min(persistedBaseId, endId))
       case None => None
     }
-    // too-old guard (reference O3, for subscribers), on BOTH window bounds
-    // — after a long-enough pause even the planned window's END leaves
-    // retention — refusing with the remedy spelled out instead of a
-    // manifest-chain internal error
-    for (floor <- lake.oldestRetainedId();
-         f <- fromId.filter(_ < floor)
-           .orElse(Some(endId).filter(_ < floor)))
-      throw new IllegalStateException(
-        s"graft-changelog: subscription too old — the checkpointed window " +
-          s"references source snapshot $f, but ${lake.root} retains only " +
-          s"ids >= $floor; the change window is gone. Start a fresh query " +
-          "(re-bootstrap) or raise the source's expireKeep")
+    // the retention guard covers BOTH window bounds — after a long-enough
+    // pause even the planned window's END leaves retention
+    ChangelogChain.requireRetained(lake, fromId.fold(endId)(math.min(_, endId)),
+      "the graft-changelog checkpointed window references")
     val endSnap = lake.latest().filter(_.id == endId)
       .getOrElse(lake.snapshotAt(endId))
     // Schema discipline (the Delta/Kafka convention — one schema per run):
@@ -393,18 +374,13 @@ final class ChangelogStreamSource(spark: SparkSession,
     * each chunk commits through the ordinary offset/commit-log protocol,
     * so a mid-bootstrap crash resumes at the first unserved chunk. */
   private def chunkBatch(startId: Option[Long], endId: Long): DataFrame = {
-    for (floor <- lake.oldestRetainedId() if persistedBaseId < floor)
-      throw new IllegalStateException(
-        s"graft-changelog: subscription too old — the mid-bootstrap " +
-          s"checkpoint pins source snapshot $persistedBaseId, but " +
-          s"${lake.root} retains only ids >= $floor. Start a fresh query " +
-          "(re-bootstrap) or raise the source's expireKeep")
+    ChangelogChain.requireRetained(lake, persistedBaseId,
+      "the graft-changelog mid-bootstrap checkpoint pins")
     val baseState = lake.snapshotAt(persistedBaseId)
     val jLo = startId.map(s => (s + nChunks + 1).toInt).getOrElse(0)
     val jHi = (endId + nChunks).toInt
-    val w = chunkWidth
-    val n = if (baseState.nBuckets > 0) baseState.nBuckets else lake.nBuckets
-    val buckets = (jLo * w until math.min((jHi + 1) * w, n)).toSet
+    val buckets = ChangelogChain.chunkBuckets(baseState.nBuckets, nChunks,
+      jLo, jHi)
     val window = lake.read(spark, baseState, Some(buckets),
       includeTombstones = true)
     conformAndShim(window, baseState.schemaVersion)

@@ -48,6 +48,12 @@ import java.util.UUID
   * explicit [[vacuum]], which the streaming job runs ONCE at startup (the
   * only time fresh orphans can exist).
   *
+  * '''On-disk format.''' Every snapshot and anchor JSON carries
+  * `formatVersion` = [[FormatVersion]]; the one manifest parser refuses any
+  * other value, a missing one included, so a lake written by a build with
+  * a different format fails closed on its first snapshot read instead of
+  * being misread. The remedy is to re-replay the lake from the feed.
+  *
   * Scale notes: the snapshot lists files per hash bucket of (repo, path), so
   * a MERGE touches only affected buckets (bounded rewrite at 1e10-event
   * scale); readers prune by bucket without listing directories; commit-time
@@ -67,11 +73,11 @@ object GraftLake {
     * (the last data-plane term that grew with table size, not batch
     * size); range-partitioned deltas make it O(nBuckets / rangeWidth)
     * while base files stay per-bucket so fold units and read pruning keep
-    * bucket granularity. Legacy manifests lack the field (Jackson default
-    * 0) — `hi` normalizes to the single-bucket form. */
+    * bucket granularity. The default -1 marks a single-bucket entry; `hi`
+    * normalizes it. */
   final case class FileEntry(path: String, bucket: Int, schemaVersion: Int,
       rows: Long, delta: Boolean = false, bucketHi: Int = -1) {
-    /** Inclusive range end; ≥ bucket by construction (legacy-safe). */
+    /** Inclusive range end; ≥ bucket by construction. */
     def hi: Int = math.max(bucket, bucketHi)
     def covers(b: Int): Boolean = b >= bucket && b <= hi
     def bucketsCovered: Range = bucket to hi
@@ -118,6 +124,9 @@ object GraftLake {
     * shape Iceberg uses for exactly this). */
   final case class SegmentRef(path: String, lo: Int, hi: Int, nFiles: Int)
 
+  /** The manifest format this build writes and the only one it reads. */
+  val FormatVersion = 1
+
   /** In memory, `files` is ALWAYS the full reconstructed list. On disk a
     * snapshot is either full (`incremental = false`: `files` persisted
     * inline, or as `segments` refs past `segmentInline` entries) or
@@ -148,22 +157,24 @@ object GraftLake {
         * bucket assignment is a function of it, so every writer/reader MUST
         * use the stored value (a mismatched count silently splits a key's
         * base and delta across buckets and merge-on-read never pairs them
-        * — round-3 advice). 0 = legacy snapshot, count unknown. */
-      nBuckets: Int = 0,
+        * — round-3 advice). */
+      nBuckets: Int,
       /** on-disk form only: true = delta manifest (see scaladoc) */
       incremental: Boolean = false,
-      /** file entries added vs parent (null on legacy snapshots) */
+      /** file entries added vs parent */
       addedFiles: Seq[FileEntry] = Nil,
       /** paths removed vs parent — compacted-away and same-commit-folded
-        * files; drives incremental expiry GC (null on legacy snapshots) */
+        * files; drives incremental expiry GC */
       removedPaths: Seq[String] = Nil,
       /** on-disk form of a LARGE full snapshot/anchor: the file list lives
         * in per-bucket-range segment files instead of inline `files`
         * (see [[SegmentRef]]); empty for inline/incremental forms */
-      segments: Seq[SegmentRef] = Nil) {
-    def added: Seq[FileEntry] = Option(addedFiles).getOrElse(Nil)
-    def removed: Seq[String] = Option(removedPaths).getOrElse(Nil)
-    def segs: Seq[SegmentRef] = Option(segments).getOrElse(Nil)
+      segments: Seq[SegmentRef] = Nil,
+      /** on-disk format, stamped at every manifest publish. The default is
+        * one no build writes: Jackson fills a missing key with it, so a
+        * manifest without the field is refused like any unknown version. */
+      formatVersion: Int = 0) {
+    def added: Seq[FileEntry] = addedFiles
   }
 
   private val mapper = new ObjectMapper()
@@ -202,9 +213,8 @@ object GraftLake {
   }
 
   /** Open an existing lake with the bucket count its snapshot log records
-    * (None when no lake/snapshot exists, or it predates nBuckets
-    * stamping). CLI entrypoints use this so a lake replayed with any
-    * bucket count streams/reads with the same one. */
+    * (None when no lake/snapshot exists). CLI entrypoints use this so a
+    * lake replayed with any bucket count streams/reads with the same one. */
   def storedBuckets(root: String): Option[Int] = {
     val probe = new GraftLake(root, 0)
     // `latest()` already answers None for a missing/empty lake; the only
@@ -213,7 +223,7 @@ object GraftLake {
     // retry once. Anything else (corrupt manifest, real IO error) must
     // PROPAGATE: a blanket None here read as "no lake exists" and sent
     // callers down misleading paths (round-5 review).
-    def attempt(): Option[Int] = probe.latest().map(_.nBuckets).filter(_ > 0)
+    def attempt(): Option[Int] = probe.latest().map(_.nBuckets)
     try attempt()
     catch { case _: java.io.FileNotFoundException => attempt() }
   }
@@ -517,50 +527,34 @@ final class GraftLake(val root: String, val nBuckets: Int,
 
   /** Inflate a segmented full form to its in-memory shape (inline files). */
   private def materialize(s: Snapshot): Snapshot =
-    if (s.incremental || s.segs.isEmpty) s
-    else s.copy(files = readSegments(s.segs), segments = Nil)
+    if (s.incremental || s.segments.isEmpty) s
+    else s.copy(files = readSegments(s.segments), segments = Nil)
 
   /** The disk form of a full snapshot/anchor: inline up to `segmentInline`
     * entries, segmented past it. */
   private def fullForm(s: Snapshot): Snapshot = {
     val f = s.copy(incremental = false)
     if (f.files.size <= segmentInline) f.copy(segments = Nil)
-    else f.copy(files = Nil,
-      segments = writeSegments(f.files,
-        if (f.nBuckets > 0) f.nBuckets else nBuckets))
+    else f.copy(files = Nil, segments = writeSegments(f.files, f.nBuckets))
   }
 
-  /** Parse one snapshot JSON as stored — NO chain reconstruction.
-    * Incremental snapshots come back with empty `files`. `addedFiles` /
-    * `removedPaths` keep their parsed nullness (all consumers go through
-    * the null-safe `.added`/`.removed` accessors): a null there is the one
-    * reliable marker of a LEGACY pre-incremental manifest, which
-    * [[changesBetween]] must refuse rather than misread as an empty delta
-    * (round-4 advice). */
+  /** Parse one snapshot/anchor JSON as stored — NO chain reconstruction
+    * (incremental snapshots come back with empty `files`). The one place
+    * the format is checked: every manifest reader goes through here. */
   private def readRaw(p: HPath): Snapshot = {
-    // one tree parse serves both the Snapshot bind and the legacy-marker
-    // probe below — a substring search over the raw body would false-match
-    // "addedFiles" appearing INSIDE the embedded schema JSONs or a path
-    // (e.g. a user column literally named addedFiles), silently
-    // classifying a legacy manifest as modern and bypassing
-    // changesBetween's refuse-to-misread guard
-    val tree = mapper.readTree(readString(p))
-    val s = mapper.treeToValue(tree, classOf[Snapshot])
+    val s = mapper.readValue(readString(p), classOf[Snapshot])
+    if (s.formatVersion != FormatVersion)
+      throw new IllegalStateException(
+        s"manifest $p has formatVersion ${s.formatVersion} (0 = none " +
+          s"recorded), but this build reads only formatVersion " +
+          s"$FormatVersion — the lake was written by another build; " +
+          "re-replay it from the feed")
     // Jackson can't see the erased Long value type of `metrics`, so small
     // JSON numbers come back Integer-boxed — any caller then unboxing a
     // value as Long (the static type!) throws ClassCastException. Coerce
     // at the one parse seam so cold-read snapshots carry real Longs.
-    val fixedMetrics = Option(s.metrics).getOrElse(Map.empty)
-      .asInstanceOf[Map[String, Any]]
-      .map { case (k, v) => k -> v.asInstanceOf[Number].longValue }
-    val norm = s.copy(files = Option(s.files).getOrElse(Nil),
-      metrics = fixedMetrics)
-    // jackson-module-scala applies case-class DEFAULTS for missing keys
-    // (verified: a JSON without `addedFiles` parses as Nil, not null), so
-    // the legacy marker must come from the document itself: restore null
-    // when the top-level key is genuinely absent
-    if (tree.has("addedFiles")) norm
-    else norm.copy(addedFiles = null)
+    s.copy(metrics = s.metrics.asInstanceOf[Map[String, Any]]
+      .map { case (k, v) => k -> v.asInstanceOf[Number].longValue })
   }
 
   /** The in-memory image of the newest committed snapshot. Commit updates
@@ -588,7 +582,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     * anchor derivation so the two can never drift (the same reason
     * MergeApply centralizes consumedBy). */
   private def applyDelta(base: Snapshot, delta: Snapshot): Snapshot = {
-    val removed = delta.removed.toSet
+    val removed = delta.removedPaths.toSet
     delta.copy(incremental = false, segments = Nil,
       files = base.files.filterNot(f => removed(f.path)) ++ delta.added)
   }
@@ -625,7 +619,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
       cached = Some(s)
       s
     }
-    if (snap.nBuckets > 0 && nBuckets > 0 && snap.nBuckets != nBuckets)
+    if (nBuckets > 0 && snap.nBuckets != nBuckets)
       throw new IllegalStateException(
         s"lake $root was created with nBuckets=${snap.nBuckets} but opened " +
           s"with nBuckets=$nBuckets — the (repo,path)→bucket assignment " +
@@ -673,10 +667,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
       wanted.exists(f => !f.bucketsCovered.forall(bs.contains)))
     def sliced(df: DataFrame): DataFrame =
       if (!strayRows) df
-      else {
-        val n = if (s.nBuckets > 0) s.nBuckets else nBuckets
-        df.filter(bucketExpr(n).isInCollection(buckets.get))
-      }
+      else df.filter(bucketExpr(s.nBuckets).isInCollection(buckets.get))
     val merged = aligned(spark, s, dirty).map(df => lwwWinners(cur, sliced(df)))
     val all = (aligned(spark, s, clean).map(sliced).toSeq ++ merged.toSeq)
       .reduceOption(_ unionByName _)
@@ -697,8 +688,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     * rows (absent and tombstoned keys read as empty). */
   def readKey(spark: SparkSession, s: Snapshot, repo: String,
       path: String): DataFrame = {
-    val n = if (s.nBuckets > 0) s.nBuckets else nBuckets
-    val b = GraftLake.bucketOf(repo, path, n)
+    val b = GraftLake.bucketOf(repo, path, s.nBuckets)
     read(spark, s, buckets = Some(Set(b)))
       .filter(col("repo") === repo && col("path") === path)
   }
@@ -727,7 +717,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     require(newN > 0, s"rebucket: bucket count must be positive, got $newN")
     val snap = latest().getOrElse(
       throw new IllegalStateException(s"no lake at $root"))
-    val oldN = if (snap.nBuckets > 0) snap.nBuckets else nBuckets
+    val oldN = snap.nBuckets
     require(newN != oldN, s"lake $root is already bucketed $newN ways")
     // hold the writer lease across write→commit: the full rewrite is
     // referenced by no snapshot until the commit lands, so a concurrent
@@ -831,18 +821,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     val from = rawFor(fromId, byId)
     val to = rawFor(toId, byId)
     val cur = currentSchema(to)
-    val winRaws = ((fromId + 1) to toId).map(i => rawFor(i, byId))
-    // a legacy/pre-incremental manifest has NO addedFiles key at all (JSON
-    // null — a modern empty commit serializes `[]`), so a window over it
-    // would silently come back as an empty changelog instead of the real
-    // changes — error instead (round-4 advice)
-    winRaws.find(r => r.addedFiles == null && r.files.nonEmpty).foreach { r =>
-      throw new IllegalStateException(
-        s"changesBetween($fromId, $toId): snapshot ${r.id} predates " +
-          "incremental manifests (no addedFiles recorded) — the window scan " +
-          "cannot be reconstructed for it")
-    }
-    val winFiles = winRaws.flatMap(_.added)
+    val winFiles = ((fromId + 1) to toId).flatMap(i => rawFor(i, byId).added)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur)
     to.lastOffset match {
@@ -960,11 +939,12 @@ final class GraftLake(val root: String, val nBuckets: Int,
     * cached, e.g. first commit after a cold open) writes the full list so
     * reconstruction chains stay bounded. If the caller didn't stamp
     * `addedFiles`/`removedPaths`, they are derived here by a path diff
-    * against the parent. */
+    * against the parent. The published manifest and the returned image
+    * carry [[GraftLake.FormatVersion]]. */
   def commit(s: Snapshot): Snapshot = {
     val parent = cached.filter(_.id == s.parentId)
-    val stamped: Snapshot = {
-      val hasDelta = s.added.nonEmpty || s.removed.nonEmpty
+    val withDelta: Snapshot = {
+      val hasDelta = s.added.nonEmpty || s.removedPaths.nonEmpty
       if (hasDelta || parent.isEmpty) s
       else {
         val parentPaths = parent.get.files.map(_.path).toSet
@@ -974,20 +954,18 @@ final class GraftLake(val root: String, val nBuckets: Int,
           removedPaths = parent.get.files.map(_.path).filterNot(cur))
       }
     }
+    val stamped = withDelta.copy(formatVersion = FormatVersion)
     val full = parent.isEmpty || s.id % manifestEvery == 0
-    val withBuckets = stamped.copy(
-      nBuckets = if (stamped.nBuckets > 0) stamped.nBuckets
-        else parent.map(_.nBuckets).filter(_ > 0).getOrElse(nBuckets))
     val toWrite =
-      if (full) fullForm(withBuckets)
-      else withBuckets.copy(incremental = true, files = Nil, segments = Nil)
+      if (full) fullForm(stamped)
+      else stamped.copy(incremental = true, files = Nil, segments = Nil)
     val dst = snapPath(s.id)
     if (fs.exists(dst))
       throw new IllegalStateException(s"snapshot ${s.id} already committed (fenced)")
     if (!publishString(dst, mapper.writeValueAsString(toWrite)))
       throw new IllegalStateException(s"snapshot ${s.id} publish lost the race (fenced)")
-    cached = Some(withBuckets.copy(incremental = false, segments = Nil))
-    withBuckets
+    cached = Some(stamped.copy(incremental = false, segments = Nil))
+    stamped
   }
 
   // -- D10: client registration & identity --------------------------------
@@ -996,21 +974,17 @@ final class GraftLake(val root: String, val nBuckets: Int,
   // unknown client is rejected at registration). The lake analog is a
   // per-table registry file: once any client is registered, only
   // registered identities may open a subscription against this lake.
-  // An empty/absent registry means the check is open (back-compat and
-  // single-tenant deployments).
+  // An empty/absent registry means the check is open (single-tenant
+  // deployments).
   //
   // The registry is VERSIONED: `clients-%06d.json`, readers take the max
-  // version. Round 3 published via delete-then-rename of a single file —
-  // a crash (or a lost race) between the two left NO registry, and an
-  // absent registry means the gate is OPEN (a fail-open security window,
-  // round-3 verdict #6/advice). With versioned files nothing is ever
-  // deleted on the publish path; a lost rename race just retries at the
-  // next version.
+  // version. Nothing is ever deleted on the publish path — an absent
+  // registry would open the gate — and a lost publish race just retries
+  // at the next version.
 
   private val clientFileRe = "clients-(\\d+)\\.json".r
   private def clientsPath(ver: Long): HPath =
     new HPath(logDir, f"clients-$ver%06d.json")
-  private def legacyClientsPath: HPath = new HPath(logDir, "clients.json")
 
   private def clientVersions(): Seq[Long] =
     if (!fs.exists(logDir)) Nil
@@ -1028,10 +1002,8 @@ final class GraftLake(val root: String, val nBuckets: Int,
     var attempts = 0
     while (true) {
       attempts += 1
-      val versioned = clientVersions().lastOption.map(clientsPath)
-      val p = versioned.orElse(Some(legacyClientsPath).filter(fs.exists(_)))
       try {
-        return p
+        return clientVersions().lastOption.map(clientsPath)
           .map(f => mapper.readValue(readString(f), classOf[Array[String]]).toSet)
           .getOrElse(Set.empty)
       } catch {
@@ -1060,9 +1032,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
       val nextVer = vers.lastOption.getOrElse(0L) + 1
       if (publishString(clientsPath(nextVer), mapper.writeValueAsString(next))) {
         done = true
-        // prune superseded versions + the legacy single file (post-publish)
-        vers.foreach(v => metaDelete(clientsPath(v)))
-        if (fs.exists(legacyClientsPath)) metaDelete(legacyClientsPath)
+        vers.foreach(v => metaDelete(clientsPath(v))) // post-publish prune
       } else if (attempts >= 16)
         throw new IllegalStateException(
           s"client registry publish lost $attempts races at lake $root")
@@ -1200,7 +1170,8 @@ final class GraftLake(val root: String, val nBuckets: Int,
           case _ => reconstruct(snaps.filter(p => idOf(p) <= cut))
         }
         // lost race: fine, any complete anchor at this id works
-        publishString(anchorPath(cut), mapper.writeValueAsString(fullForm(state)))
+        publishString(anchorPath(cut), mapper.writeValueAsString(
+          fullForm(state).copy(formatVersion = FormatVersion)))
         anchorCached = Some(state.copy(incremental = false, segments = Nil))
         cut
     }
@@ -1209,7 +1180,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     if (drop.isEmpty && dropAnchors.isEmpty) return
     val dropRaws = drop.map(readRaw)
     val dropAnchorRaws = dropAnchors.map(a => readRaw(anchorPath(a)))
-    val removedPaths = dropRaws.flatMap(_.removed)
+    val removedPaths = dropRaws.flatMap(_.removedPaths)
     drop.foreach(metaDelete(_))
     dropAnchors.foreach(a => metaDelete(anchorPath(a)))
     // segment files referenced ONLY by the dropped fulls/anchors die with
@@ -1222,7 +1193,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     // i.e. ~once per `keep` commits. Crashed-publish strays (referenced
     // by nothing, dropped by nothing) remain [[vacuum]]'s job.
     val droppedSegs =
-      (dropRaws ++ dropAnchorRaws).flatMap(_.segs.map(_.path)).toSet
+      (dropRaws ++ dropAnchorRaws).flatMap(_.segments.map(_.path)).toSet
     if (droppedSegs.nonEmpty) {
       // Liveness = segments referenced by ANY retained form — which means
       // reading EVERY retained snapshot JSON, not just the
@@ -1239,7 +1210,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
       val retainedSegs =
         (keepSnaps.map(readRaw) ++
           anchorIds().map(a => readRaw(anchorPath(a))))
-          .flatMap(_.segs.map(_.path)).toSet
+          .flatMap(_.segments.map(_.path)).toSet
       (droppedSegs -- retainedSegs).foreach(p => metaDelete(new HPath(p)))
     }
     gcDataPaths(removedPaths)
@@ -1310,7 +1281,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     // publish in flight — deleting it would leave a permanently
     // unreadable anchor (round-5 review). Crash strays age past the
     // grace and die on the next sweep.
-    val liveSegs: Set[String] = raws.flatMap(_.segs.map(_.path)).toSet
+    val liveSegs: Set[String] = raws.flatMap(_.segments.map(_.path)).toSet
     val nowMs = System.currentTimeMillis()
     if (fs.exists(segDir))
       fs.listStatus(segDir).toSeq
@@ -1321,7 +1292,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     val referenced: Set[String] =
       (latest().map(_.files.map(_.path)).getOrElse(Nil) ++
         raws.flatMap(r => materialize(r).files.map(_.path)) ++
-        raws.flatMap(_.removed) ++
+        raws.flatMap(_.removedPaths) ++
         raws.flatMap(r => r.added.map(_.path))).toSet
     val it = fs.listFiles(dataDir, true)
     val unref = Seq.newBuilder[HPath]

@@ -586,11 +586,35 @@ class ChangelogStreamSpec extends SparkSuite {
   test("the tail verb rejects a non-positive-integer for:/credit:/" +
     "bootstrapBuckets: value before any session starts") {
     val root = tmp("badtail")
-    Seq("bootstrapBuckets:abc", "for:-5", "credit:0", "credit:").foreach { a =>
+    val tailCases =
+      Seq("bootstrapBuckets:abc", "for:-5", "credit:0", "credit:")
+        .map(a => Seq("tail", root, a) -> a.takeWhile(_ != ':'))
+    // every other verb's numeric arguments take the same check: one
+    // malformed value per argument, each error naming its argument
+    val (feed, lake, cp) = (tmp("badfeed"), tmp("badlake"), tmp("badcp"))
+    val verbCases = Seq(
+      Seq("gen", feed, "1e3", "10") -> "nEvents",
+      Seq("gen", feed, "100", "0") -> "nKeys",
+      Seq("gen", feed, "100", "10", "-1") -> "skew",
+      Seq("gen", feed, "100", "10", "0", "1.5") -> "dupTailFrac",
+      Seq("replay", feed, lake, "many") -> "nBuckets",
+      Seq("stream", feed, lake, cp, "8x") -> "maxFilesPerTrigger",
+      Seq("stream", feed, lake, cp, "supervise:-1") -> "supervise",
+      Seq("clients", lake, "prune:soon") -> "prune",
+      Seq("show", lake, "-3") -> "show: n ",
+      Seq("get", lake, "repo-0", "a.scala", "asof:latest") -> "asof",
+      Seq("rebucket", lake, "0") -> "newN",
+      Seq("optimize", lake, "all") -> "maxBucketsPerCommit",
+      Seq("expire", lake, "0") -> "keep",
+      Seq("changes", lake, "a", "3") -> "fromSnap",
+      Seq("changes", lake, "1", "b") -> "toSnap",
+      Seq("changes", lake, "1", "3", "x") -> "changes: n ",
+      Seq("sync", lake, tmp("baddst"), "follow:0") -> "follow")
+    (tailCases ++ verbCases).foreach { case (args, name) =>
       val e = intercept[IllegalArgumentException] {
-        graft.cli.Main.main(Array("tail", root, a))
+        graft.cli.Main.main(args.toArray)
       }
-      assert(e.getMessage.contains(a.takeWhile(_ != ':')), e.getMessage)
+      assert(e.getMessage.contains(name), s"$args: ${e.getMessage}")
     }
     // the verb stops the session it starts: had one started, it would
     // have been this suite's

@@ -245,17 +245,6 @@ class GraftLakeSpec extends SparkSuite {
       "[\"mallory\"]".getBytes)
     assert(lake.registeredClients() == Set("alice", "bob"))
     intercept[IllegalStateException](lake.checkClient("mallory"))
-    // a pre-upgrade single-file registry is still honored...
-    val legacyRoot = tmp("l-reg-legacy")
-    val legacy = new GraftLake(legacyRoot, 4)
-    legacy.init(graft.model.Schemas.targetBase)
-    Files.createDirectories(Paths.get(legacyRoot, "_graft_log"))
-    Files.write(Paths.get(legacyRoot, "_graft_log", "clients.json"),
-      "[\"carol\"]".getBytes)
-    assert(legacy.registeredClients() == Set("carol"))
-    // ...and upgraded (atomically superseded) by the next registration
-    legacy.registerClient("dave")
-    assert(legacy.registeredClients() == Set("carol", "dave"))
   }
 
   test("every RETAINED snapshot id stays reconstructable after expiry — " +
@@ -415,27 +404,61 @@ class GraftLakeSpec extends SparkSuite {
   test("changesBetween refuses a window over LEGACY pre-incremental " +
     "manifests instead of returning a silently-empty changelog " +
     "(round-4 advice)") {
-    val lakeRoot = tmp("l-legacy")
-    val lake = new GraftLake(lakeRoot, 4)
-    var prev = lake.init(graft.model.Schemas.targetBase)
-    val f = GraftLake.FileEntry("f-1", 0, 0, 1L)
-    prev = lake.commit(prev.copy(id = 1, batchId = 0, parentId = 0,
-      files = Seq(f), addedFiles = Seq(f),
-      lastOffset = Some(graft.model.Offset(1, 1, 0))))
-    // rewrite snapshot-1 as a LEGACY manifest: a FULL form with inline
-    // files and NO addedFiles/removedPaths keys (the pre-incremental format)
-    val p = Paths.get(lakeRoot, "_graft_log", f"snapshot-${1L}%011d.json")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(Files.readAllBytes(p))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.set("files", node.get("addedFiles"))
-    node.put("incremental", false)
-    node.remove("addedFiles"); node.remove("removedPaths")
-    Files.write(p, om.writeValueAsBytes(node))
-    val fresh = new GraftLake(lakeRoot, 4)
-    val e = intercept[IllegalStateException](
-      fresh.changesBetween(spark, 0, 1).collect())
-    assert(e.getMessage.contains("predates incremental manifests"))
+    type Node = com.fasterxml.jackson.databind.node.ObjectNode
+    // two manifests this build must not read, each in place of snapshot 1:
+    // the pre-incremental format (a FULL form with inline files and NO
+    // addedFiles/removedPaths — nor formatVersion, which that build never
+    // wrote), and a current manifest stamped with an unknown version
+    val rewrites: Seq[(String, Int, Node => Unit)] = Seq(
+      ("l-legacy", 0, { node =>
+        node.set("files", node.get("addedFiles"))
+        node.put("incremental", false)
+        node.remove("addedFiles"); node.remove("removedPaths")
+        node.remove("formatVersion"); ()
+      }),
+      ("l-future", 2, { node => node.put("formatVersion", 2); () }))
+    rewrites.foreach { case (name, version, rewrite) =>
+      val lakeRoot = tmp(name)
+      val lake = new GraftLake(lakeRoot, 4)
+      val prev = lake.init(graft.model.Schemas.targetBase)
+      val f = GraftLake.FileEntry("f-1", 0, 0, 1L)
+      lake.commit(prev.copy(id = 1, batchId = 0, parentId = 0,
+        files = Seq(f), addedFiles = Seq(f),
+        lastOffset = Some(graft.model.Offset(1, 1, 0))))
+      val p = Paths.get(lakeRoot, "_graft_log", f"snapshot-${1L}%011d.json")
+      val node = om.readTree(Files.readAllBytes(p)).asInstanceOf[Node]
+      assert(node.get("formatVersion").asInt == GraftLake.FormatVersion)
+      rewrite(node)
+      Files.write(p, om.writeValueAsBytes(node))
+      // both readers fail closed, naming the file and the version found
+      val errors = Seq(
+        intercept[IllegalStateException](new GraftLake(lakeRoot, 4).latest()),
+        intercept[IllegalStateException](
+          new GraftLake(lakeRoot, 4).changesBetween(spark, 0, 1).collect()))
+      errors.foreach { e =>
+        assert(e.getMessage.contains(s"formatVersion $version") &&
+          e.getMessage.contains(p.getFileName.toString), e.getMessage)
+      }
+    }
+  }
+
+  test("every snapshot and anchor manifest a stream run and expire write " +
+    "carries the current formatVersion") {
+    val lakeRoot = tmp("l-fmt")
+    val lake = buildLake(lakeRoot, tmp("c-fmt"))
+    lake.expire(keep = 3) // 11 snapshots: anchors the retention cut
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifests = Files.list(Paths.get(lakeRoot, "_graft_log")).iterator()
+      .asScala.map(_.getFileName.toString)
+      .filter(n => n.matches("(snapshot|anchor)-\\d+\\.json")).toSeq
+    assert(manifests.count(_.startsWith("anchor-")) >= 1, manifests)
+    assert(manifests.count(_.startsWith("snapshot-")) >= 3, manifests)
+    manifests.foreach { n =>
+      val v = om.readTree(Files.readAllBytes(
+        Paths.get(lakeRoot, "_graft_log", n))).get("formatVersion")
+      assert(v != null && v.asInt == GraftLake.FormatVersion, s"$n: $v")
+    }
   }
 
   test("expire refuses keep < 1 (a zero/negative keep would delete every " +
