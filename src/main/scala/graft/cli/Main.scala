@@ -200,9 +200,14 @@ object Main {
         lake.registeredClients().toSeq.sorted.mkString(", "))
 
     case "clients" :: lakeRoot :: rest if rest.size <= 1 =>
-      val pruneTtlSec = rest.headOption.filter(_.startsWith("prune:"))
-        .map(p => longArg("clients", "prune:", p.stripPrefix("prune:"),
-          lo = 0L, hi = Long.MaxValue / 1000))
+      // a typo'd `prune:` must not silently list without pruning
+      val pruneTtlSec = rest.headOption.map {
+        case p if p.startsWith("prune:") =>
+          longArg("clients", "prune:", p.stripPrefix("prune:"),
+            lo = 0L, hi = Long.MaxValue / 1000)
+        case a => throw new IllegalArgumentException(
+          s"clients: unknown argument '$a' (expected prune:<sec>)")
+      }
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(0))
       pruneTtlSec.foreach { sec =>
@@ -221,7 +226,12 @@ object Main {
     case "vacuum" :: lakeRoot :: rest if rest.size <= 1 =>
       // refused while a live stream holds a fresh writer lease (the sweep
       // would delete a mid-batch commit's uncommitted files); `force`
-      // overrides for a wedged lease the operator KNOWS is dead
+      // overrides for a wedged lease the operator KNOWS is dead; a typo'd
+      // `force` must not silently run the fenced sweep
+      rest.filterNot(_ == "force").foreach { a =>
+        throw new IllegalArgumentException(
+          s"vacuum: unknown argument '$a' (expected force)")
+      }
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(0))
       lake.vacuum(leaseTtlMs = if (rest.contains("force")) 0L else 120000L)
@@ -309,16 +319,15 @@ object Main {
       // a live stream runs its own per-commit expire, serialized with its
       // commits; a CONCURRENT manual trim could drop an anchor (and its
       // now-unshared segment files) that the stream's in-flight full-form
-      // publish is reusing as its reference base — same single-writer rule
-      // the vacuum fence enforces, so reuse its lease check
-      lake.liveWriter().foreach { h =>
-        throw new IllegalStateException(
-          s"expire refused: writer '$h' holds a fresh lease on $lakeRoot — " +
-            "the stream trims retention itself per commit; stop it first " +
-            "or wait out the lease")
-      }
+      // publish is reusing as its reference base
+      refuseUnderLiveWriter(lake, lakeRoot, "expire")
       lake.expire(k)
-      println(s"[expire] retained the last $keep snapshots at $lakeRoot")
+      // the retention floor may keep more than `keep` (down to the newest
+      // full base at or below the cut): report what is actually retained
+      val latest = lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot"))
+      val oldest = lake.oldestRetainedId().getOrElse(latest.id)
+      println(s"[expire] retained snapshots $oldest..${latest.id} " +
+        s"(${latest.id - oldest + 1}) at $lakeRoot")
 
     case "log" :: lakeRoot :: Nil =>
       // retained snapshot history: the valid bounds for `show`-as-of /

@@ -115,8 +115,49 @@ object MergeApply {
 
     val dataCols = SchemaEvolution.dataColumns(schema).map(_.name)
       .filterNot(Schemas.keyCols.contains)
-    val bucket = GraftLake.bucketExpr(lake.nBuckets)
 
+    val shaped = winnerProbe(updates, winOff, useBroadcast)
+      .select(
+        col("repo") +: col("path") +:
+        (dataCols.map(c => when(col("op") === Op.Delete, lit(null))
+          .otherwise(col(c)).as(c)) ++
+        Seq(col("offset").as("_offset"),
+          (col("op") === Op.Delete).as("_deleted"))): _*)
+
+    // one winner-image exchange: repartition by bucket range inside
+    // writeData. Merge output is transient-coded (snappy): deltas are
+    // folded away by the next compaction of their bucket, and first-write
+    // bases get re-encoded with the dense session codec at their first
+    // fold — the per-microbatch encode is the hot path, compaction is the
+    // amortizer. Past 64 buckets the deltas are bucket-RANGE files
+    // (GraftLake.deltaRangeWidth): a per-bucket delta write costs
+    // O(nBuckets) files per microbatch — 4096+ tiny files per ~1s commit
+    // at the north rule's bucket counts — while ranges keep it
+    // O(nBuckets/width) with fold units still bounded (compactionDue
+    // folds whole ranges, so no file ever needs partial-fold tracking).
+    val width = GraftLake.deltaRangeWidth(lake.nBuckets)
+    // codec follows expected lifetime: a first write into an EMPTY table
+    // is a bulk load whose files become long-lived bases — dense codec;
+    // everything after is a delta the next fold re-encodes — snappy.
+    val written = lake.writeData(shaped, schema, snap.schemaVersion,
+      batchId, delta = true,
+      transient_ = snap.files.nonEmpty || width > 1,
+      rangeWidth = width)
+    // a dup-free write (footer rows == distinct winners — no re-delivered
+    // copies of a winning event survived the semi-join) is per-key unique
+    val files = markBase(written, snap, width,
+      perKeyUnique = written.map(_.rows).sum == winners)
+
+    MergeResult(files, affected,
+      files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum },
+      (System.nanoTime() - t0) / 1000000L)
+  }
+
+  /** The winner probe: the `updates` rows whose offset is a per-key
+    * winner in `winOff` (see [[apply]]). Its plan shape is pinned by
+    * MergePlanShapeSpec. */
+  private[graft] def winnerProbe(updates: DataFrame, winOff: DataFrame,
+      useBroadcast: Boolean): DataFrame = {
     // Winner pre-selection is a LEFT SEMI join in BOTH regimes (the build
     // side IS the cached winner aggregate): offsets are globally unique,
     // so offset equality selects exactly the per-key winners.
@@ -168,62 +209,24 @@ object MergeApply {
       (col("offset.fileIdx") - col("_wf")) === 0 &&
       (col("offset.pos") - col("_wp")) === 0 &&
       (col("offset.rowIdx") - col("_wr")) === 0
-    val preSelected =
-      if (useBroadcast)
-        updates.join(broadcast(winKeys), probeCond, "leftsemi")
-      else
-        updates.join(winKeys.hint("SHUFFLE_HASH"), probeCond, "leftsemi")
-
-    val shaped = preSelected
-      .select(
-        col("repo") +: col("path") +:
-        (dataCols.map(c => when(col("op") === Op.Delete, lit(null))
-          .otherwise(col(c)).as(c)) ++
-        Seq(col("offset").as("_offset"),
-          (col("op") === Op.Delete).as("_deleted"))): _*)
-      .withColumn("_bucket", bucket)
-
-    // one winner-image exchange: repartition by bucket range inside
-    // writeData. Merge output is transient-coded (snappy): deltas are
-    // folded away by the next compaction of their bucket, and first-write
-    // bases get re-encoded with the dense session codec at their first
-    // fold — the per-microbatch encode is the hot path, compaction is the
-    // amortizer. Past 64 buckets the deltas are bucket-RANGE files
-    // (GraftLake.deltaRangeWidth): a per-bucket delta write costs
-    // O(nBuckets) files per microbatch — 4096+ tiny files per ~1s commit
-    // at the north rule's bucket counts — while ranges keep it
-    // O(nBuckets/width) with fold units still bounded (compactionDue
-    // folds whole ranges, so no file ever needs partial-fold tracking).
-    val width = GraftLake.deltaRangeWidth(lake.nBuckets)
-    // codec follows expected lifetime: a first write into an EMPTY table
-    // is a bulk load whose files become long-lived bases — dense codec;
-    // everything after is a delta the next fold re-encodes — snappy.
-    val files0 = lake.writeData(
-      shaped.select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
-      batchId,
-      transient_ = snap.files.nonEmpty || width > 1,
-      rangeWidth = width)
-
-    // Base-vs-delta marking. A dup-free write (footer rows == distinct
-    // winners — no re-delivered copies of a winning event survived the
-    // semi-join) is per-key unique, so its files into an EMPTY bucket are
-    // base files (readers skip merge-on-read there); everything else is a
-    // delta. Range files (width > 1) are always deltas: a base file is
-    // per-bucket by construction, so a ranged first write into empty
-    // buckets just gets re-based by its first fold.
-    val rowsWritten = files0.map(_.rows).sum
-    val perKeyUnique = rowsWritten == winners
-    val bucketsWithData = snap.files.flatMap(_.bucketsCovered).toSet
-    val files = files0.map { f =>
-      f.copy(schemaVersion = snap.schemaVersion,
-        delta = !(width == 1 && perKeyUnique &&
-          !bucketsWithData.contains(f.bucket)))
-    }
-
-    MergeResult(files, affected,
-      files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum },
-      (System.nanoTime() - t0) / 1000000L)
+    if (useBroadcast) updates.join(broadcast(winKeys), probeCond, "leftsemi")
+    else updates.join(winKeys.hint("SHUFFLE_HASH"), probeCond, "leftsemi")
   }
+
+  /** Base-vs-delta marking, the one rule every writer of fresh rows
+    * applies to the delta files it just wrote: a width-1 file of per-key-
+    * unique rows, written into a bucket `parent` holds no data for, is a
+    * base file (readers skip merge-on-read there); everything else stays
+    * a delta. Range files (width > 1) are always deltas: a base file is
+    * per-bucket by construction, so a ranged first write into empty
+    * buckets just gets re-based by its first fold. */
+  def markBase(written: Seq[GraftLake.FileEntry], parent: GraftLake.Snapshot,
+      width: Int, perKeyUnique: Boolean): Seq[GraftLake.FileEntry] =
+    if (width > 1 || !perKeyUnique) written
+    else {
+      val bucketsWithData = parent.files.flatMap(_.bucketsCovered).toSet
+      written.map(f => f.copy(delta = bucketsWithData.contains(f.bucket)))
+    }
 
   /** What compaction should do this commit: `fold` buckets get their
     * deltas folded into per-bucket base files ([[compact]]); `split` is at
@@ -402,11 +405,8 @@ object MergeApply {
     val subWidth = splitWidth(hi - lo + 1, foldBudget)
     val rows = lake.aligned(spark, candidate, inFiles).get
     val collapsed = GraftLake.lwwWinners(schema, rows)
-    val files = lake.writeData(
-      collapsed.withColumn("_bucket", GraftLake.bucketExpr(lake.nBuckets))
-        .select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
-      batchId, transient_ = true, rangeWidth = subWidth)
-      .map(_.copy(schemaVersion = candidate.schemaVersion, delta = true))
+    val files = lake.writeData(collapsed, schema, candidate.schemaVersion,
+      batchId, delta = true, transient_ = true, rangeWidth = subWidth)
     CompactResult(files, (lo to hi).toSet, files.map(_.rows).sum,
       (System.nanoTime() - t0) / 1000000L)
   }
@@ -477,22 +477,19 @@ object MergeApply {
         winners.filter(!guarded)
       case None => winners
     }
-    val files = lake.writeData(
-      merged.withColumn("_bucket", GraftLake.bucketExpr(lake.nBuckets))
-        .select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
-      batchId,
+    val files = lake.writeData(merged, schema, candidate.schemaVersion,
+      batchId, delta = false,
       sortCols = if (clusterByKey) Schemas.keyCols.map(col) else Nil)
-      .map(_.copy(schemaVersion = candidate.schemaVersion, delta = false))
     CompactResult(files, buckets, files.map(_.rows).sum,
       (System.nanoTime() - t0) / 1000000L)
   }
 
   /** Execute a [[CompactionPlan]] against `snap`'s files: the fold and (at
     * most one) split, which touch disjoint files by construction. Paired
-    * with [[consumedBy]] under the SAME `foldBudget` — the ingest batch,
-    * the changelog chain and the offline optimize all run this exact
-    * sequence, and the consumption rule must always match the budget the
-    * split ran with (the coupling lives here so the three call sites
+    * with [[fileListDelta]] under the SAME `foldBudget` — the ingest
+    * batch, the changelog chain and the offline optimize all run this
+    * exact sequence, and the consumption rule must always match the budget
+    * the split ran with (the coupling lives here so the three call sites
     * cannot drift). */
   def runPlan(spark: SparkSession, lake: GraftLake,
       snap: GraftLake.Snapshot, plan: CompactionPlan, batchId: Long,
@@ -517,10 +514,30 @@ object MergeApply {
     * cluster closure guarantees that for every overlapping file, so
     * removal stays atomic — and split away exactly when [[splitInput]]
     * selects it under the same `foldBudget` the split ran with. */
-  def consumedBy(plan: CompactionPlan, foldBudget: Int)(
+  private def consumedBy(plan: CompactionPlan, foldBudget: Int)(
       f: GraftLake.FileEntry): Boolean =
     f.bucketsCovered.forall(plan.fold.contains) ||
       plan.split.exists(r => splitInput(Seq(f), r, foldBudget).nonEmpty)
+
+  /** The file-list change of one commit over `parent`: the files `plan`
+    * consumed leave, the fold/split replacements and the commit's own
+    * `newFiles` arrive. `addedFiles`/`removedPaths` are stamped from it
+    * exactly, so commit persists O(touched buckets) of manifest and
+    * incremental expiry GC sees every replaced file. `metrics` holds the
+    * commit's `compactedBuckets`/`splitBuckets` counts. */
+  final case class FileListDelta(files: Seq[GraftLake.FileEntry],
+      addedFiles: Seq[GraftLake.FileEntry], removedPaths: Seq[String],
+      metrics: Map[String, Long])
+
+  def fileListDelta(parent: GraftLake.Snapshot, plan: CompactionPlan,
+      foldBudget: Int, fold: CompactResult, split: CompactResult,
+      newFiles: Seq[GraftLake.FileEntry] = Nil): FileListDelta = {
+    val (gone, kept) = parent.files.partition(consumedBy(plan, foldBudget))
+    FileListDelta(kept ++ fold.files ++ split.files ++ newFiles,
+      newFiles ++ fold.files ++ split.files, gone.map(_.path),
+      Map("compactedBuckets" -> plan.fold.size.toLong,
+        "splitBuckets" -> split.buckets.size.toLong))
+  }
 
   /** Count of non-empty [[runPlan]] executions — observability hook (the
     * [[GraftLake.metaOps]] pattern) so tests can pin that a DISCARDED
@@ -601,16 +618,11 @@ object MergeApply {
             rowsRewritten)
         val (fold, split) = runPlan(spark, lake, snap, plan, snap.batchId,
           maxBucketsPerCommit, tombstoneHorizon, clusterByKey = true)
-        val consumed = consumedBy(plan, maxBucketsPerCommit) _
+        val d = fileListDelta(snap, plan, maxBucketsPerCommit, fold, split)
         lake.commit(snap.copy(
-          id = snap.id + 1, parentId = snap.id,
-          files = snap.files.filterNot(consumed) ++ fold.files ++ split.files,
-          metrics = Map(
-            "rowsWritten" -> (fold.rows + split.rows),
-            "compactedBuckets" -> plan.fold.size.toLong,
-            "splitBuckets" -> split.buckets.size.toLong),
-          addedFiles = fold.files ++ split.files,
-          removedPaths = snap.files.filter(consumed).map(_.path)))
+          id = snap.id + 1, parentId = snap.id, files = d.files,
+          metrics = d.metrics + ("rowsWritten" -> (fold.rows + split.rows)),
+          addedFiles = d.addedFiles, removedPaths = d.removedPaths))
         commits += 1
         foldedBuckets += plan.fold.size
         splitFiles += split.files.size

@@ -89,17 +89,11 @@ final case class IngestConfig(
     lakeRoot: String,
     checkpointDir: String,
     nBuckets: Int = 32,
-    excludedCols: Set[String] = Set("commit"),
-    acceptOps: Set[String] = Op.rowOps.toSet,
     maxFilesPerTrigger: Int = 8,
     resumeMode: ResumeMode = ResumeMode.LastPos,
-    watchedDb: String = BinlogFeedGen.WatchedDb,
-    watchedTable: String = BinlogFeedGen.WatchedTable,
-    expireKeep: Int = 50,
-    /** F4 predicate for the primary single-table config */
-    filterSql: Option[String] = None,
     /** D1 — multi-table subscriptions; when non-empty these REPLACE the
-      * single-table fields above. */
+      * single-table default: the generator's watched table into
+      * `lakeRoot` with `nBuckets` and every other [[TableSpec]] default. */
     tables: Seq[TableSpec] = Nil,
     /** named resume points for [[ResumeMode.FromGtid]] (GTID-set analog) */
     gtidMap: Map[String, Offset] = Map.empty,
@@ -122,8 +116,8 @@ final case class IngestConfig(
     * one-element list). */
   def specs: Seq[TableSpec] =
     if (tables.nonEmpty) tables
-    else Seq(TableSpec(watchedDb, watchedTable, lakeRoot, nBuckets,
-      acceptOps, excludedCols, filterSql, camelize = false, expireKeep))
+    else Seq(TableSpec(BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable,
+      lakeRoot, nBuckets))
 }
 
 final case class BatchMetrics(
@@ -434,7 +428,6 @@ object CdcIngestJob {
         MergeApply.CompactionPlan.empty
       else p
     }
-    val due = plan.fold
     val foldFut: scala.concurrent.Future[
         (MergeApply.CompactResult, MergeApply.CompactResult)] =
       if (plan.isEmpty)
@@ -663,12 +656,6 @@ object CdcIngestJob {
       lake.discardFiles(compacted.files ++ splitRes.files)
       discardedFoldAt.put(lake.root, snap.id)
     } else discardedFoldAt.remove(lake.root)
-    // shared consumption rule (MergeApply.consumedBy): folded away only
-    // when a file's WHOLE bucket range is due; split away exactly when the
-    // split's own input selection (same fold budget) took it
-    val consumed = MergeApply.consumedBy(plan, spec.maxCompactBuckets) _
-    val nextFileList = snap.files.filterNot(consumed) ++
-      compacted.files ++ splitRes.files ++ result.newFiles
 
     val latencyMs = (System.nanoTime() - t0) / 1000000L
     val tCommit0 = System.nanoTime()
@@ -685,26 +672,22 @@ object CdcIngestJob {
           "compactMs" -> compactMs,
           "affectedBuckets" -> result.affectedBuckets.size.toLong,
           "rowsWritten" -> result.rowsPerBucket.values.sum,
-          "compactedBuckets" -> due.size.toLong,
           "compactedRows" -> compacted.rows,
-          "splitBuckets" -> splitRes.buckets.size.toLong,
           "splitRows" -> splitRes.rows)
       // the file-list delta is stamped here, where it is known exactly:
       // commit then persists O(touched buckets) of manifest, never the
-      // full O(table) file list (round-3 verdict #1). removedPaths =
-      // exactly the parent-snapshot files the fold replaced, which is
-      // what drives incremental expiry GC.
-      val next = GraftLake.Snapshot(
+      // full O(table) file list (round-3 verdict #1)
+      val d = MergeApply.fileListDelta(snap, plan, spec.maxCompactBuckets,
+        compacted, splitRes, result.newFiles)
+      lake.commit(GraftLake.Snapshot(
         id = snap.id + 1, batchId = batchId,
         schemas = schemas, schemaVersion = schemaVersion,
-        files = nextFileList,
+        files = d.files,
         lastOffset = (maxOff.toSeq ++ snap.lastOffset.toSeq)
           .sorted.lastOption,
-        metrics = metrics, parentId = snap.id, lineage = lineage,
+        metrics = metrics ++ d.metrics, parentId = snap.id, lineage = lineage,
         nBuckets = lake.nBuckets,
-        addedFiles = result.newFiles ++ compacted.files ++ splitRes.files,
-        removedPaths = snap.files.filter(consumed).map(_.path))
-      lake.commit(next)
+        addedFiles = d.addedFiles, removedPaths = d.removedPaths))
       lake.expire(spec.expireKeep)
     }
     BatchMetrics(batchId, eventsIn, watchedRows, noops,
@@ -713,7 +696,7 @@ object CdcIngestJob {
       statsMs = tStats, writeMs = result.mergeMs,
       commitMs = (System.nanoTime() - tCommit0) / 1000000L,
       rowsWritten = result.rowsPerBucket.values.sum,
-      compactedBuckets = if (willCommit) due.size else 0,
+      compactedBuckets = if (willCommit) plan.fold.size else 0,
       compactMs = compactMs)
   }
 

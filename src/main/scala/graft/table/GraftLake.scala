@@ -580,7 +580,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
   /** Apply one incremental snapshot over its reconstructed base — THE
     * chain-application invariant, shared by [[reconstruct]] and expire's
     * anchor derivation so the two can never drift (the same reason
-    * MergeApply centralizes consumedBy). */
+    * MergeApply.fileListDelta is the one file-list delta). */
   private def applyDelta(base: Snapshot, delta: Snapshot): Snapshot = {
     val removed = delta.removedPaths.toSet
     delta.copy(incremental = false, segments = Nil,
@@ -650,7 +650,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
       includeTombstones: Boolean = false): DataFrame = {
     val cur = currentSchema(s)
     val wanted = buckets match {
-      case Some(bs) => s.files.filter(f => bs.exists(f.covers))
+      case Some(bs) => s.files.filter(_.bucketsCovered.exists(bs))
       case None => s.files
     }
     // only buckets that actually hold deltas pay the merge-on-read winner
@@ -726,10 +726,9 @@ final class GraftLake(val root: String, val nBuckets: Int,
     val leaseHolder = s"rebucket-${java.util.UUID.randomUUID()}"
     renewLease(leaseHolder)
     try {
-      val rows = read(spark, snap, includeTombstones = true)
-        .withColumn("_bucket", GraftLake.bucketExpr(newN))
-      val files = writeData(rows, batchId = snap.batchId, rangeWidth = 1)
-        .map(_.copy(schemaVersion = snap.schemaVersion, delta = false))
+      val files = writeData(read(spark, snap, includeTombstones = true),
+        currentSchema(snap), snap.schemaVersion, snap.batchId,
+        delta = false, buckets = newN)
       commit(snap.copy(
         id = snap.id + 1, parentId = snap.id, nBuckets = newN,
         files = files, addedFiles = files,
@@ -844,9 +843,10 @@ final class GraftLake(val root: String, val nBuckets: Int,
     }
   }
 
-  /** Write `df` (must match `schema`, with an `_bucket` int column) as new
-    * data files for this commit; returns the file entries, one bucket per
-    * directory so the manifest maps file→bucket exactly.
+  /** Write `df`'s `schema` columns as new data files for this commit, one
+    * bucket (range) per directory, each row's bucket computed here under
+    * `buckets` (the lake's count; [[rebucket]] passes its new one); returns
+    * the finished entries, stamped `schemaVersion` and `delta`.
     * `transient_ = true` marks short-lived files (delta appends, folded
     * away by the next compaction of their bucket): they encode with snappy
     * — ~3× cheaper than the session's long-lived-file codec (zstd in the
@@ -864,10 +864,12 @@ final class GraftLake(val root: String, val nBuckets: Int,
     * key stats (point lookups then skip non-matching row groups without
     * reading data pages). Never set on the streaming hot path: the sort
     * is CPU the per-microbatch write shouldn't pay. */
-  def writeData(df: DataFrame, batchId: Long,
+  def writeData(df: DataFrame, schema: StructType, schemaVersion: Int,
+      batchId: Long, delta: Boolean,
       transient_ : Boolean = false,
       rangeWidth: Int = 1,
-      sortCols: Seq[Column] = Nil): Seq[FileEntry] = {
+      sortCols: Seq[Column] = Nil,
+      buckets: Int = nBuckets): Seq[FileEntry] = {
     val commitDir = new HPath(dataDir,
       s"commit-$batchId-${UUID.randomUUID().toString.take(8)}")
     // pre-sorting by the partition dir keeps the dynamic-partition writer
@@ -879,7 +881,8 @@ final class GraftLake(val root: String, val nBuckets: Int,
     val dirCol =
       if (rangeWidth <= 1) col("_bucket")
       else col("_bucket") - pmod(col("_bucket"), lit(rangeWidth))
-    val part = df.repartition(dirCol)
+    val part = df.select(schema.fieldNames.map(col).toSeq :+
+      bucketExpr(buckets).as("_bucket"): _*).repartition(dirCol)
     val writer = part.withColumn("_bdir", dirCol).drop("_bucket")
       .sortWithinPartitions(col("_bdir") +: sortCols: _*)
       .write.partitionBy("_bdir")
@@ -891,13 +894,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
     // and the folds that re-read them pay the IO back with interest.
     (if (transient_) writer.option("compression", "snappy") else writer)
       .parquet(commitDir.toString)
-    listCommitFiles(df.sparkSession, commitDir, rangeWidth)
-  }
-
-  private def listCommitFiles(spark: SparkSession, commitDir: HPath,
-      rangeWidth: Int = 1): Seq[FileEntry] = {
     if (!fs.exists(commitDir)) return Nil
-    def hiOf(lo: Int): Int = if (rangeWidth <= 1) lo else lo + rangeWidth - 1
     val entries = fs.listStatus(commitDir).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("_bdir="))
       .flatMap { bdir =>
@@ -911,20 +908,22 @@ final class GraftLake(val root: String, val nBuckets: Int,
     // past that — the thousands of buckets a 100 TB table needs — the reads
     // go to the executors as one tiny metadata job, so commit-time driver
     // IO stays O(1) in the file count.
-    if (entries.size <= 256) {
+    (if (entries.size <= 256) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(
         Future.traverse(entries) { case (p, b) =>
-          Future(FileEntry(p, b, -1, GraftLake.footerRows(p), bucketHi = hiOf(b)))
+          Future((p, b, GraftLake.footerRows(p)))
         }, 5.minutes)
     } else {
-      spark.sparkContext
+      df.sparkSession.sparkContext
         .parallelize(entries, math.min(entries.size, 64))
         .map { case (p, b) => (p, b, GraftLake.footerRows(p)) }
         .collect().toSeq
-        .map { case (p, b, n) => FileEntry(p, b, -1, n, bucketHi = hiOf(b)) }
+    }).map { case (p, lo, rows) =>
+      FileEntry(p, lo, schemaVersion, rows, delta,
+        bucketHi = if (rangeWidth <= 1) lo else lo + rangeWidth - 1)
     }
   }
 

@@ -304,12 +304,6 @@ object SchemaEvolution {
   def dataColumns(schema: StructType): Seq[StructField] =
     schema.fields.filter(!_.name.startsWith("_")).toSeq
 
-  /** Evolved columns = data columns beyond the base 5-column payload. */
-  def evolvedColumns(schema: StructType): Seq[StructField] = {
-    val base = graft.model.Schemas.repoFile.fieldNames.toSet
-    dataColumns(schema).filter(f => !base.contains(f.name))
-  }
-
   // -- P3: column-name conversion (reference utils/StrNameConvert.java:24-36
   // converts snake_case DB columns to camelCase bean fields; these two are
   // exact inverses for standard snake names, so the merge projection can

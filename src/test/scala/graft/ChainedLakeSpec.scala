@@ -238,4 +238,25 @@ class ChainedLakeSpec extends SparkSuite {
     assert(!r.applied && dst2.latest().get.id == tip.id,
       "a replayed sync after a chunked bootstrap must fence")
   }
+
+  test("a chunked bootstrap into a fresh destination with the source's " +
+    "bucket count lands every file as a base file") {
+    val full = FeedConfig(nEvents = 3000, nKeys = 400, eventsPerFile = 500,
+      noopFrac = 0.0, decoyFrac = 0.0)
+    val feedDir = tmp("bbfeed"); val srcRoot = tmp("bbsrc")
+    BinlogFeedGen.writeFeed(spark, full, feedDir)
+    CdcIngestJob.replayBatch(spark, IngestConfig(
+      feedDir, srcRoot, tmp("bbcp"), nBuckets = 8))
+    val src = new GraftLake(srcRoot, 8)
+    // every chunk's rows are LWW winners of buckets no earlier chunk
+    // wrote: per-key unique files into empty buckets are base files
+    val dst = new GraftLake(tmp("bbdst"), 8)
+    val r = ChangelogChain.sync(spark, src, dst, bootstrapChunkBuckets = 3)
+    assert(r.applied && r.bootstrapped)
+    val snap = dst.latest().get
+    assert(snap.metrics("bootstrapChunks") == 3 && snap.batchId == r.srcSnapshot)
+    assert(snap.files.nonEmpty && snap.files.forall(!_.delta),
+      s"bootstrap left delta files: ${snap.files.filter(_.delta)}")
+    assert(state(dst) == state(src))
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.feed.BinlogFeedGen
 import graft.feed.BinlogFeedGen.FeedConfig
-import graft.stream.{CdcIngestJob, IngestConfig}
+import graft.stream.{CdcIngestJob, IngestConfig, TableSpec}
 import graft.table.GraftLake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -181,8 +181,9 @@ class ChangelogStreamSpec extends SparkSuite {
     BinlogFeedGen.writeFeed(spark, prefix.copy(nEvents = n + 1200,
       ddlAt = BinlogFeedGen.evolutionDdls(n)), feedDir)
     CdcIngestJob.runStream(spark, IngestConfig(
-      feedDir, srcRoot, tmp("cp2c"), nBuckets = 8, maxFilesPerTrigger = 1,
-      expireKeep = 2)).awaitTermination()
+      feedDir, srcRoot, tmp("cp2c"), maxFilesPerTrigger = 1,
+      tables = Seq(TableSpec(BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable,
+        srcRoot, nBuckets = 8, expireKeep = 2)))).awaitTermination()
     src.expire(2)
     val q3 = subscribe(srcRoot, cp, new Ledger)
     val ex2 = intercept[StreamingQueryException] { q3.processAllAvailable() }
@@ -601,6 +602,8 @@ class ChangelogStreamSpec extends SparkSuite {
       Seq("stream", feed, lake, cp, "8x") -> "maxFilesPerTrigger",
       Seq("stream", feed, lake, cp, "supervise:-1") -> "supervise",
       Seq("clients", lake, "prune:soon") -> "prune",
+      Seq("clients", lake, "prun:0") -> "unknown argument 'prun:0'",
+      Seq("vacuum", lake, "forse") -> "unknown argument 'forse'",
       Seq("show", lake, "-3") -> "show: n ",
       Seq("get", lake, "repo-0", "a.scala", "asof:latest") -> "asof",
       Seq("rebucket", lake, "0") -> "newN",

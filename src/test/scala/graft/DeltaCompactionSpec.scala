@@ -323,7 +323,6 @@ class DeltaCompactionSpec extends SparkSuite {
     val kLive = keyIn(b, 1) // live key whose narrow delta creates fold debt
     def df(rows: Seq[Row]) = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Schemas.targetBase)
-      .withColumn("_bucket", GraftLake.bucketExpr(nb))
     def commitAdd(files: Seq[GraftLake.FileEntry]): Unit = {
       snap = lake.commit(snap.copy(id = snap.id + 1, parentId = snap.id,
         batchId = snap.batchId + 1, files = snap.files ++ files,
@@ -333,18 +332,20 @@ class DeltaCompactionSpec extends SparkSuite {
     // fold budget 2): a stale re-delivered live kDel@o1 — written while the
     // feed still retained o1, harmless under the tombstone's LWW shadow;
     // narrow delta: kLive@o4 — the fold-tier debt that makes the cluster due
-    commitAdd(lake.writeData(
-      df(Seq(Row(repo, kDel, "c2", "scala", null, Row(2L, 0L, 0L), true))),
-      batchId = 1).map(_.copy(schemaVersion = 0)))
-    val wide = lake.writeData(
-      df(Seq(Row(repo, kDel, "c1", "scala", "v1", Row(1L, 0L, 0L), false))),
-      batchId = 2, rangeWidth = 4)
-      .map(_.copy(schemaVersion = 0, delta = true))
+    def write(rows: Seq[Row], batchId: Long, delta: Boolean,
+        rangeWidth: Int = 1) = lake.writeData(df(rows), Schemas.targetBase,
+      schemaVersion = 0, batchId, delta, rangeWidth = rangeWidth)
+    commitAdd(write(
+      Seq(Row(repo, kDel, "c2", "scala", null, Row(2L, 0L, 0L), true)),
+      batchId = 1, delta = false))
+    val wide = write(
+      Seq(Row(repo, kDel, "c1", "scala", "v1", Row(1L, 0L, 0L), false)),
+      batchId = 2, delta = true, rangeWidth = 4)
     assert(wide.head.hi - wide.head.bucket + 1 == 4, s"must be wide: $wide")
     commitAdd(wide)
-    commitAdd(lake.writeData(
-      df(Seq(Row(repo, kLive, "c3", "scala", "v3", Row(4L, 0L, 0L), false))),
-      batchId = 3).map(_.copy(schemaVersion = 0, delta = true)))
+    commitAdd(write(
+      Seq(Row(repo, kLive, "c3", "scala", "v3", Row(4L, 0L, 0L), false)),
+      batchId = 3, delta = true))
     assert(lake.read(spark, snap).collect().map(_.getString(1)).toSeq
       == Seq(kLive), "tombstone must shadow the stale wide-file copy")
 

@@ -3,7 +3,7 @@ package graft
 import graft.feed.{BinlogFeedGen, FeedReader}
 import graft.feed.BinlogFeedGen.FeedConfig
 import graft.model.{Op, Schemas}
-import graft.stream.{CdcIngestJob, IngestConfig}
+import graft.stream.{CdcIngestJob, IngestConfig, TableSpec}
 import graft.table.GraftLake
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -71,7 +71,8 @@ class FilterSpec extends SparkSuite {
     // accept only INSERTs: no deletes ever applied → every first-version row
     // survives; updates never overwrite
     CdcIngestJob.replayBatch(spark, IngestConfig(feedDir, lakeRoot, tmp("c2"),
-      nBuckets = 4, acceptOps = Set(Op.Insert)))
+      tables = Seq(TableSpec(BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable,
+        lakeRoot, nBuckets = 4, acceptOps = Set(Op.Insert)))))
     val lake = new GraftLake(lakeRoot, 4)
     val rows = lake.read(spark, lake.latest().get)
       .select("repo", "path", "commit").collect()
@@ -97,7 +98,8 @@ class FilterSpec extends SparkSuite {
     val feedDir = tmp("f5"); val lakeRoot = tmp("l5")
     BinlogFeedGen.writeFeed(spark, cfg, feedDir)
     CdcIngestJob.replayBatch(spark, IngestConfig(feedDir, lakeRoot, tmp("c5"),
-      nBuckets = 4, excludedCols = excluded))
+      tables = Seq(TableSpec(BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable,
+        lakeRoot, nBuckets = 4, excludedCols = excluded))))
     val lake = new GraftLake(lakeRoot, 4)
     val got = lake.read(spark, lake.latest().get)
       .select("repo", "path", "commit", "content")

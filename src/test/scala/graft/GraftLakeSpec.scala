@@ -29,6 +29,14 @@ class GraftLakeSpec extends SparkSuite {
     new GraftLake(lakeRoot, 4)
   }
 
+  /** Data files holding `snap`'s state, written under `batchId` and
+    * referenced by no snapshot — what a crash between write and commit
+    * leaves behind. */
+  private def writeUncommitted(lake: GraftLake, snap: GraftLake.Snapshot,
+      batchId: Long): Seq[GraftLake.FileEntry] =
+    lake.writeData(lake.read(spark, snap, includeTombstones = true),
+      lake.currentSchema(snap), snap.schemaVersion, batchId, delta = true)
+
   private def snapshotFiles(root: String): Seq[String] =
     Files.list(Paths.get(root, "_graft_log")).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith("snapshot-")).toSeq.sorted
@@ -41,9 +49,7 @@ class GraftLakeSpec extends SparkSuite {
 
     // simulate a crash between writeData and commit: data files land,
     // no snapshot references them
-    val orphanSrc = lake.read(spark, snap, includeTombstones = true)
-      .withColumn("_bucket", GraftLake.bucketExpr(4))
-    val orphans = lake.writeData(orphanSrc, batchId = 9999)
+    val orphans = writeUncommitted(lake, snap, batchId = 9999)
     assert(orphans.nonEmpty && orphans.forall(f => Files.exists(Paths.get(f.path))))
 
     // readers resolve only snapshot-referenced files — identical result
@@ -443,6 +449,25 @@ class GraftLakeSpec extends SparkSuite {
     }
   }
 
+  test("the expire verb reports the snapshot ids it actually retained, " +
+    "which the retention floor can make more than `keep`") {
+    val feedDir = tmp("feed-exp"); val lakeRoot = tmp("l-exp")
+    BinlogFeedGen.writeFeed(spark, cfg.copy(nEvents = 400), feedDir)
+    // two binlog files, one commit each: snapshots 0 (init), 1, 2
+    CdcIngestJob.replayBatch(spark, IngestConfig(feedDir, lakeRoot,
+      tmp("c-exp"), nBuckets = 4), chunkFiles = 1)
+    val lake = new GraftLake(lakeRoot, 4)
+    assert(lake.snapshotLog().map(_.id) == Seq(0L, 1L, 2L))
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(graft.cli.Main.main(Array("expire", lakeRoot, "2")))
+    val line = out.toString("UTF-8").trim
+    val kept = lake.snapshotLog().map(_.id)
+    assert(kept.size > 2, s"fixture must keep more than `keep`: $kept")
+    assert(line == s"[expire] retained snapshots ${kept.head}..${kept.last} " +
+      s"(${kept.size}) at $lakeRoot", line)
+  }
+
   test("every snapshot and anchor manifest a stream run and expire write " +
     "carries the current formatVersion") {
     val lakeRoot = tmp("l-fmt")
@@ -475,9 +500,7 @@ class GraftLakeSpec extends SparkSuite {
     val lakeRoot = tmp("ldisc")
     val lake = buildLake(lakeRoot, tmp("cdisc"))
     val snap = lake.latest().get
-    val src = lake.read(spark, snap, includeTombstones = true)
-      .withColumn("_bucket", GraftLake.bucketExpr(4))
-    val files = lake.writeData(src, batchId = 8888)
+    val files = writeUncommitted(lake, snap, batchId = 8888)
     val commitDirs = files.map(f =>
       Paths.get(f.path).getParent.getParent).distinct
     assert(commitDirs.nonEmpty && commitDirs.forall(Files.exists(_)))
@@ -573,9 +596,7 @@ class GraftLakeSpec extends SparkSuite {
     val lakeRoot = tmp("l-lease")
     val lake = buildLake(lakeRoot, tmp("c-lease"))
     val snap = lake.latest().get
-    def orphan(batchId: Long) = lake.writeData(
-      lake.read(spark, snap, includeTombstones = true)
-        .withColumn("_bucket", GraftLake.bucketExpr(4)), batchId)
+    def orphan(batchId: Long) = writeUncommitted(lake, snap, batchId)
     val orphans = orphan(7777)
     lake.renewLease("writer-a")
     // a foreign sweep is refused while the lease is fresh — it would
@@ -602,9 +623,7 @@ class GraftLakeSpec extends SparkSuite {
     val lakeRoot = tmp("l-torn")
     val lake = buildLake(lakeRoot, tmp("c-torn"))
     val snap = lake.latest().get
-    val orphans = lake.writeData(
-      lake.read(spark, snap, includeTombstones = true)
-        .withColumn("_bucket", GraftLake.bucketExpr(4)), 8888)
+    val orphans = writeUncommitted(lake, snap, 8888)
     // simulate the renewal window: the lease file exists, content torn/empty
     val enc = java.util.Base64.getUrlEncoder.withoutPadding
       .encodeToString("writer-x".getBytes)

@@ -90,15 +90,18 @@ class MultiTableSpec extends SparkSuite {
     BinlogFeedGen.writeFeed(spark, c2, feedDir)
     // the reference DSL form `where new.lang = 'scala'` (with DELETE's
     // before-image fallback) as one Catalyst boolean expression
-    val ing = IngestConfig(feedDir, tmp("lakeF"), tmp("c2"),
-      nBuckets = 8, filterSql = Some("coalesce(after.lang, before.lang) = 'scala'"))
+    val lakeF = tmp("lakeF")
+    val ing = IngestConfig(feedDir, lakeF, tmp("c2"),
+      tables = Seq(TableSpec(BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable,
+        lakeF, nBuckets = 8,
+        filterSql = Some("coalesce(after.lang, before.lang) = 'scala'"))))
     val q = CdcIngestJob.runStream(spark, ing)
     q.awaitTermination()
     val want = ReplayOracle.finalStateFor(c2,
       eventFilter = (_, before, after) =>
         after.orElse(before).exists(_.lang == "scala"))
     assert(want.nonEmpty && want.forall(_.lang == "scala"))
-    assertMatches(lakeRows(tmp("lakeF"), 8), want)
+    assertMatches(lakeRows(lakeF, 8), want)
     // cross-check the filter actually excluded the other languages
     val full = ReplayOracle.finalStateFor(c2)
     assert(full.exists(_.lang != "scala") && want.size < full.size)

@@ -143,13 +143,11 @@ class OptimizeSpec extends SparkSuite {
       .commits >= 1)
 
     // writer A's commit of the same id fails closed on the publish fence
-    val consumed = MergeApply.consumedBy(plan, foldBudget = 8) _
+    val d = MergeApply.fileListDelta(snap, plan, foldBudget = 8, fold, split)
     val ex = intercept[IllegalStateException] {
       lake.commit(snap.copy(
-        id = snap.id + 1, parentId = snap.id,
-        files = snap.files.filterNot(consumed) ++ fold.files ++ split.files,
-        addedFiles = fold.files ++ split.files,
-        removedPaths = snap.files.filter(consumed).map(_.path)))
+        id = snap.id + 1, parentId = snap.id, files = d.files,
+        addedFiles = d.addedFiles, removedPaths = d.removedPaths))
     }
     assert(ex.getMessage.contains("fenced"))
 
