@@ -363,7 +363,14 @@ object Main {
 
     case "sync" :: srcRoot :: dstRoot :: rest if rest.size <= 2 =>
       // lake→lake changelog subscription: apply the source's new snapshots
-      // into the destination (one commit per sync window, exactly-once)
+      // into the destination (one commit per sync window, exactly-once).
+      // A typo must not run silently: `folow:100` would sync once instead
+      // of following, `clientid:x` would sync without the client check
+      rest.filterNot(a => a.startsWith("client:") || a.startsWith("follow:"))
+        .foreach { a =>
+          throw new IllegalArgumentException(s"sync: unknown argument " +
+            s"'$a' (expected [client:<id>] [follow:<pollMs>])")
+        }
       val clientId = rest.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
       val pollMs = rest.find(_.startsWith("follow:"))
         .map(a => longArg("sync", "follow:", a.stripPrefix("follow:")))

@@ -205,10 +205,15 @@ object CdcIngestJob {
     require(idxs.nonEmpty, s"no feed files under $feedDir")
     val (lo, hi) = (idxs.min, idxs.max)
     val keep = Seq(f"f$lo%05d", f"f$lo%05d-replay", f"f$hi%05d", f"f$hi%05d-replay")
-    val r = FeedReader.readBatch(spark, feedDir)
-      .filter(col("_file").isin(keep: _*))
-      .agg(min(col("offset")).as("lo"), max(col("offset")).as("hi"))
-      .collect()(0)
+    val sc = spark.sparkContext
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("graft: feed range")
+    val r =
+      try FeedReader.readBatch(spark, feedDir)
+        .filter(col("_file").isin(keep: _*))
+        .agg(min(col("offset")).as("lo"), max(col("offset")).as("hi"))
+        .collect()(0)
+      finally sc.setJobDescription(prevDesc)
     (Offset.fromRow(r.getStruct(0)), Offset.fromRow(r.getStruct(1)))
   }
 
@@ -245,7 +250,7 @@ object CdcIngestJob {
     * how the new checkpoint numbers its batches. */
   def resolveStart(spark: SparkSession, cfg: IngestConfig,
       lake: GraftLake,
-      preRange: Option[(Offset, Offset)] = None): Option[Offset] = {
+      preRange: => Option[(Offset, Offset)] = None): Option[Offset] = {
     // one pruned range scan per job start, shared across modes and (via
     // `preRange`) across subscriptions and the tombstone horizon — not one
     // per lake per concern
@@ -326,7 +331,8 @@ object CdcIngestJob {
     * @param tombstoneHorizon the retained feed's minimum offset (the O3
     *   bound) — compaction physically drops `_deleted` winners below it,
     *   since nothing that old can ever be re-delivered. None = keep all
-    *   tombstones (safe, unbounded under delete churn).
+    *   tombstones (safe, unbounded under delete churn). By name: only a
+    *   batch that folds evaluates it.
     * The decoded batch is deliberately NOT cached between its two
     *   consumers (keyed scan, winner fetch): a columnar-cache round trip
     *   of ~1M decoded rows measured SLOWER than the second snappy-parquet
@@ -335,7 +341,7 @@ object CdcIngestJob {
   def applyTableBatch(spark: SparkSession, lake: GraftLake, spec: TableSpec,
       batch: DataFrame, batchId: Long, fromPos: Option[Offset],
       lineage: String, broadcastKeyLimit: Long,
-      tombstoneHorizon: Option[Offset] = None): BatchMetrics = {
+      tombstoneHorizon: => Option[Offset] = None): BatchMetrics = {
     val t0 = System.nanoTime()
     val snap = lake.latest().getOrElse(
       throw new IllegalStateException("lake not initialized"))
@@ -891,18 +897,20 @@ object CdcIngestJob {
 
   private def replayBatchInner(spark: SparkSession, cfg: IngestConfig,
       chunkFiles: Int, spec: TableSpec, lake: GraftLake): BatchMetrics = {
-    val range: Option[(Offset, Offset)] =
+    // lazy: only a resume guard or a fold reads the range, and a fresh
+    // LAST_POS replay has neither
+    lazy val range: Option[(Offset, Offset)] =
       try Some(feedOffsetRange(spark, cfg.feedDir))
       catch { case _: Throwable => None }
     val fromPos = resolveStart(spark, cfg, lake, range)
-    val horizon: Option[Offset] = range.map(_._1)
+    lazy val horizon: Option[Offset] = range.map(_._1)
     def nextBatch = lake.latest().map(_.batchId).getOrElse(-1L) + 1
     val feed = FeedReader.readBatch(spark, cfg.feedDir)
     if (chunkFiles <= 0)
       applyTableBatch(spark, lake, spec, feed, nextBatch, fromPos,
         lineage = "", cfg.broadcastKeyLimit, horizon)
     else {
-      val (lo, hi) = feedOffsetRange(spark, cfg.feedDir) match {
+      val (lo, hi) = range.getOrElse(feedOffsetRange(spark, cfg.feedDir)) match {
         case (a, b) => (a.fileIdx, b.fileIdx)
       }
       var last: BatchMetrics = null

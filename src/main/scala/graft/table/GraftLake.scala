@@ -241,7 +241,11 @@ object GraftLake {
       org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .map(_.sparkContext.hadoopConfiguration)
-    }.toOption.flatten.getOrElse(new Configuration())
+    }.toOption.flatten.getOrElse(defaultConf)
+
+  /** Parsed once per JVM: each new `Configuration` re-parses Hadoop's
+    * defaults (~20 ms of CPU), and the executor-side footer job asks per file. */
+  private lazy val defaultConf = new Configuration()
 
   /** Row count from a parquet footer — a pure metadata read (no data IO).
     * Static so executor-side metadata jobs don't capture the lake. */
@@ -250,9 +254,12 @@ object GraftLake {
     // bare local paths route through java.nio for odd-character safety
     val hp = if (p.contains(":/")) new org.apache.hadoop.fs.Path(p)
       else new org.apache.hadoop.fs.Path(java.nio.file.Paths.get(p).toUri)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      hp, hadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val conf = hadoopConf()
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
+    // read options from `conf`: the one-argument `open` builds its options
+    // on a new Configuration, which re-parses Hadoop's defaults per file
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try r.getRecordCount finally r.close()
   }
 
@@ -303,10 +310,12 @@ final class GraftLake(val root: String, val nBuckets: Int,
 
   private val rootPath = new HPath(root)
   private val fs: FileSystem = {
-    val f = rootPath.getFileSystem(GraftLake.hadoopConf())
-    // no .crc sidecars next to snapshot JSONs on the local checksum FS
-    f.setWriteChecksum(false); f.setVerifyChecksum(false)
-    f
+    val conf = GraftLake.hadoopConf()
+    val shared = rootPath.getFileSystem(conf)
+    // no .crc sidecars, nor sidecar lookups when Spark reads the lake
+    // through this JVM-wide cached instance
+    shared.setWriteChecksum(false); shared.setVerifyChecksum(false)
+    NioLocalFileSystem.forLake(shared, conf)
   }
   private def logDir: HPath = new HPath(rootPath, "_graft_log")
   private def dataDir: HPath = new HPath(rootPath, "data")
@@ -885,7 +894,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
       bucketExpr(buckets).as("_bucket"): _*).repartition(dirCol)
     val writer = part.withColumn("_bdir", dirCol).drop("_bucket")
       .sortWithinPartitions(col("_bdir") +: sortCols: _*)
-      .write.partitionBy("_bdir")
+      .write.partitionBy("_bdir").options(NioLocalFileSystem.writeOptions(fs))
     // transient files (deltas; first-load bases destined for a re-encoding
     // fold) trade size for encode speed: snappy instead of the session
     // codec. Dictionary encoding STAYS on even for transients — an A/B
@@ -1226,13 +1235,21 @@ final class GraftLake(val root: String, val nBuckets: Int,
       .distinct.filter(d => d != null && fs.exists(d))
     commitDirs.foreach { d =>
       metaOps.incrementAndGet()
-      val it = fs.listFiles(d, true)
-      var hasParquet = false
-      while (!hasParquet && it.hasNext)
-        hasParquet = it.next().getPath.getName.endsWith(".parquet")
-      if (!hasParquet) metaDelete(d, recursive = true)
+      if (!holdsParquet(d)) metaDelete(d, recursive = true)
     }
   }
+
+  /** Every file under `dir`, recursively and lazily. */
+  private def filesUnder(dir: HPath): Iterator[HPath] = {
+    val it = fs.listFiles(dir, true)
+    new Iterator[HPath] {
+      def hasNext: Boolean = it.hasNext
+      def next(): HPath = it.next().getPath
+    }
+  }
+
+  private def holdsParquet(dir: HPath): Boolean =
+    filesUnder(dir).exists(_.getName.endsWith(".parquet"))
 
   /** Full-sweep GC: recursively lists the data directory and deletes any
     * parquet file no retained snapshot references — i.e. orphans from
@@ -1293,22 +1310,12 @@ final class GraftLake(val root: String, val nBuckets: Int,
         raws.flatMap(r => materialize(r).files.map(_.path)) ++
         raws.flatMap(_.removedPaths) ++
         raws.flatMap(r => r.added.map(_.path))).toSet
-    val it = fs.listFiles(dataDir, true)
-    val unref = Seq.newBuilder[HPath]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet") && !referenced(externalize(p)))
-        unref += p
-    }
-    val orphans = unref.result()
-    orphans.foreach(fs.delete(_, false))
+    filesUnder(dataDir)
+      .filter(p => p.getName.endsWith(".parquet") && !referenced(externalize(p)))
+      .toList.foreach(fs.delete(_, false))
     // remove commit dirs that no longer hold any parquet file
     fs.listStatus(dataDir).toSeq.filter(_.isDirectory).foreach { d =>
-      val files = fs.listFiles(d.getPath, true)
-      var hasParquet = false
-      while (!hasParquet && files.hasNext)
-        hasParquet = files.next().getPath.getName.endsWith(".parquet")
-      if (!hasParquet) fs.delete(d.getPath, true)
+      if (!holdsParquet(d.getPath)) fs.delete(d.getPath, true)
     }
   }
 }

@@ -612,7 +612,9 @@ class ChangelogStreamSpec extends SparkSuite {
       Seq("changes", lake, "a", "3") -> "fromSnap",
       Seq("changes", lake, "1", "b") -> "toSnap",
       Seq("changes", lake, "1", "3", "x") -> "changes: n ",
-      Seq("sync", lake, tmp("baddst"), "follow:0") -> "follow")
+      Seq("sync", lake, tmp("baddst"), "follow:0") -> "follow",
+      Seq("sync", lake, tmp("baddst"), "folow:100") -> "unknown argument 'folow:100'",
+      Seq("sync", lake, tmp("baddst"), "clientid:x") -> "unknown argument 'clientid:x'")
     (tailCases ++ verbCases).foreach { case (args, name) =>
       val e = intercept[IllegalArgumentException] {
         graft.cli.Main.main(args.toArray)

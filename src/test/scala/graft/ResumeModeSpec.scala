@@ -156,6 +156,35 @@ class ResumeModeSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a fresh LAST_POS replay runs no feed-range job; a FROM_POS replay " +
+    "runs it for its resume guard") {
+    val feedDir = tmp("f9")
+    BinlogFeedGen.writeFeed(spark, cfg, feedDir)
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(s.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).foreach(descs.add)
+    }
+    def rangeJobs(mode: ResumeMode, name: String): Int = {
+      descs.clear()
+      CdcIngestJob.replayBatch(spark, IngestConfig(
+        feedDir, tmp(s"l9$name"), tmp(s"c9$name"), nBuckets = 4,
+        resumeMode = mode))
+      Thread.sleep(1000) // listener events are async; let any job surface
+      descs.toArray.count(_ == "graft: feed range")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(rangeJobs(ResumeMode.LastPos, "a") == 0,
+        "a fresh LAST_POS replay has no resume guard and nothing to fold")
+      assert(rangeJobs(ResumeMode.FromPos(Offset(4, Long.MaxValue,
+        Long.MaxValue)), "b") > 0,
+        "instrument check: FROM_POS guards against the feed range")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("LAST_POS over a trimmed feed with a stale lake offset errors (O3)") {
     val feedDir = tmp("f5"); val lakeRoot = tmp("l5")
     BinlogFeedGen.writeFeed(spark, cfg.copy(nEvents = 500), feedDir)
