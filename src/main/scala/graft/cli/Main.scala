@@ -5,7 +5,7 @@ import graft.feed.BinlogFeedGen.FeedConfig
 import graft.model.Offset
 import graft.stream.{CdcIngestJob, IngestConfig, ResumeMode}
 import graft.table.GraftLake
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint (SURVEY.md §7.2): generate a feed, replay it
@@ -105,6 +105,15 @@ object Main {
   private def longArg(verb: String, name: String, raw: String, lo: Long = 1L,
       hi: Long = Long.MaxValue): Long =
     numArg(verb, name, raw, _.toLongOption, lo, hi)
+  /** The first `n` rows of `df` in key order, `content` shown as its sha256. */
+  private def showRows(df: DataFrame, n: Int): Unit =
+    df.withColumn("sha", sha2(col("content"), 256)).drop("content")
+      .orderBy("repo", "path").show(n, truncate = false)
+  /** Rejects `extra`, the arguments a verb has no place for, before any
+    * session starts: a typo must fail, never run as if it were absent. */
+  private def rejectExtra(verb: String, extra: Seq[String], expected: String): Unit =
+    extra.headOption.foreach(a => throw new IllegalArgumentException(
+      s"$verb: unknown argument '$a' (expected $expected)"))
 
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: feedDir :: n :: k :: rest =>
@@ -117,7 +126,8 @@ object Main {
       // `evolve` = add+widen; `evolve-full` adds mid-feed RENAME and DROP
       // too, so the whole DDL surface is drivable from the CLI
       val evolve = rest.drop(2).headOption.getOrElse("")
-      val spark = session(feedScans = true)
+      rejectExtra("gen", rest.drop(2).take(1).filterNot(Set("evolve", "evolve-full")) ++
+        rest.drop(3), "[skew] [dupTailFrac] [evolve|evolve-full]")
       val ddls = evolve match {
         case "evolve" => BinlogFeedGen.evolutionDdls(nl)
         case "evolve-full" => BinlogFeedGen.evolutionDdls(nl) ++ Map(
@@ -127,6 +137,7 @@ object Main {
       }
       val cfg = FeedConfig(nl, nk, skew = skew, dupTailFrac = dup,
         ddlAt = ddls)
+      val spark = session(feedScans = true)
       BinlogFeedGen.writeFeed(spark, cfg, feedDir)
       println(s"[gen] wrote $n events (${k} keys, skew=$skew, dup=$dup, " +
         s"ddls=${ddls.size}) to $feedDir")
@@ -162,6 +173,8 @@ object Main {
       def isMode(s: String) = s == "continue" || s == "lastpos" ||
         s.startsWith("from:") || s.startsWith("gtid:")
       val (modeArgs, numArgs) = rest.partition(isMode)
+      rejectExtra("stream", numArgs.drop(1) ++ modeArgs.drop(1),
+        "at most one [maxFilesPerTrigger] and one mode")
       val mft = numArgs.headOption.map(intArg("stream", "maxFilesPerTrigger", _))
         .getOrElse(8)
       val mode = modeArgs.headOption.getOrElse("lastpos") match {
@@ -201,13 +214,9 @@ object Main {
 
     case "clients" :: lakeRoot :: rest if rest.size <= 1 =>
       // a typo'd `prune:` must not silently list without pruning
-      val pruneTtlSec = rest.headOption.map {
-        case p if p.startsWith("prune:") =>
-          longArg("clients", "prune:", p.stripPrefix("prune:"),
-            lo = 0L, hi = Long.MaxValue / 1000)
-        case a => throw new IllegalArgumentException(
-          s"clients: unknown argument '$a' (expected prune:<sec>)")
-      }
+      rejectExtra("clients", rest.filterNot(_.startsWith("prune:")), "prune:<sec>")
+      val pruneTtlSec = rest.headOption.map(p => longArg("clients", "prune:",
+        p.stripPrefix("prune:"), lo = 0L, hi = Long.MaxValue / 1000))
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(0))
       pruneTtlSec.foreach { sec =>
@@ -226,18 +235,15 @@ object Main {
     case "vacuum" :: lakeRoot :: rest if rest.size <= 1 =>
       // refused while a live stream holds a fresh writer lease (the sweep
       // would delete a mid-batch commit's uncommitted files); `force`
-      // overrides for a wedged lease the operator KNOWS is dead; a typo'd
-      // `force` must not silently run the fenced sweep
-      rest.filterNot(_ == "force").foreach { a =>
-        throw new IllegalArgumentException(
-          s"vacuum: unknown argument '$a' (expected force)")
-      }
+      // overrides for a wedged lease the operator KNOWS is dead
+      rejectExtra("vacuum", rest.filterNot(_ == "force"), "force")
       val lake = new GraftLake(lakeRoot,
         GraftLake.storedBuckets(lakeRoot).getOrElse(0))
       lake.vacuum(leaseTtlMs = if (rest.contains("force")) 0L else 120000L)
       println(s"[vacuum] swept orphans at $lakeRoot")
 
     case "show" :: lakeRoot :: rest =>
+      rejectExtra("show", rest.drop(1), "[n]")
       val n = rest.headOption.map(intArg("show", "n", _, lo = 0)).getOrElse(10)
       val spark = session()
       val lake = new GraftLake(lakeRoot,
@@ -248,22 +254,17 @@ object Main {
         s"schemaVersion=${snap.schemaVersion} files=${snap.files.size} " +
         s"lastOffset=${snap.lastOffset.map(_.render).getOrElse("-")}")
       println(s"[show] rows=${df.count()}")
-      df.withColumn("sha", sha2(col("content"), 256))
-        .drop("content")
-        .orderBy("repo", "path")
-        .show(n, truncate = false)
+      showRows(df, n)
       spark.stop()
 
     case "get" :: lakeRoot :: repo :: path :: rest if rest.size <= 1 =>
       // point lookup: O(bucket-range files) planned, never O(table) —
       // `filesPlanned` makes the pruning visible to the operator. The
       // bucket computation is a pure function of the stored count.
-      val asof = rest.headOption.map {
-        case a if a.startsWith("asof:") =>
-          longArg("get", "asof:", a.stripPrefix("asof:"), lo = 0L)
-        case a => // a typo'd as-of must not silently answer "latest"
-          sys.error(s"get: unknown argument '$a' (expected asof:<snapId>)")
-      }
+      // a typo'd as-of must not silently answer "latest"
+      rejectExtra("get", rest.filterNot(_.startsWith("asof:")), "asof:<snapId>")
+      val asof = rest.headOption.map(a =>
+        longArg("get", "asof:", a.stripPrefix("asof:"), lo = 0L))
       val spark = session()
       val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
         .getOrElse(sys.error(s"no lake at $lakeRoot")))
@@ -355,10 +356,7 @@ object Main {
         GraftLake.storedBuckets(lakeRoot).getOrElse(32))
       val df = lake.changesBetween(spark, fromId, toId)
       println(s"[changes] ($from, $to] rows=${df.count()}")
-      df.withColumn("sha", sha2(col("content"), 256))
-        .drop("content")
-        .orderBy("repo", "path")
-        .show(n, truncate = false)
+      showRows(df, n)
       spark.stop()
 
     case "sync" :: srcRoot :: dstRoot :: rest if rest.size <= 2 =>
@@ -366,11 +364,8 @@ object Main {
       // into the destination (one commit per sync window, exactly-once).
       // A typo must not run silently: `folow:100` would sync once instead
       // of following, `clientid:x` would sync without the client check
-      rest.filterNot(a => a.startsWith("client:") || a.startsWith("follow:"))
-        .foreach { a =>
-          throw new IllegalArgumentException(s"sync: unknown argument " +
-            s"'$a' (expected [client:<id>] [follow:<pollMs>])")
-        }
+      rejectExtra("sync", rest.filterNot(a => a.startsWith("client:") ||
+        a.startsWith("follow:")), "[client:<id>] [follow:<pollMs>]")
       val clientId = rest.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
       val pollMs = rest.find(_.startsWith("follow:"))
         .map(a => longArg("sync", "follow:", a.stripPrefix("follow:")))
@@ -409,9 +404,8 @@ object Main {
           .find(t.startsWith)
         val ok = t.toIntOption.exists(_ >= 0) || t == "bootstrap:none" ||
           t.startsWith("client:") || t.startsWith("cp:") || numeric.nonEmpty
-        if (!ok) sys.error(s"tail: unknown argument '$t' (expected [n] " +
-          "[bootstrap:none] [client:<id>] [for:<ms>] [cp:<dir>] [credit:<k>] " +
-          "[bootstrapBuckets:<k>])")
+        if (!ok) rejectExtra("tail", Seq(t), "[n] [bootstrap:none] " +
+          "[client:<id>] [for:<ms>] [cp:<dir>] [credit:<k>] [bootstrapBuckets:<k>]")
         numeric.foreach { p =>
           if (p == "for:") longArg("tail", p, t.stripPrefix(p))
           else intArg("tail", p, t.stripPrefix(p))
@@ -436,14 +430,13 @@ object Main {
         r = r.option("bootstrapBuckets", c.stripPrefix("bootstrapBuckets:")))
       val q = r.load().writeStream
         .option("checkpointLocation", cp)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        .foreachBatch { (df: DataFrame, id: Long) =>
           df.persist() // one window scan serves both the count and the show
           try {
             val c = df.count()
             println(s"[tail] batch=$id rows=$c")
             if (c > 0 && n > 0)
-              df.withColumn("sha", sha2(col("content"), 256)).drop("content")
-                .orderBy("repo", "path").show(n, truncate = false)
+              showRows(df, n)
           } finally { df.unpersist(); () }
         }.start()
       // print the resume hint even when the query fails (the evolution /

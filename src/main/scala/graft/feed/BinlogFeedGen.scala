@@ -1,6 +1,7 @@
 package graft.feed
 
 import graft.model._
+import graft.table.NioLocalFileSystem
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,12 +227,15 @@ object BinlogFeedGen {
     val hc = spark.sparkContext.hadoopConfiguration
     val prevBlock = Option(hc.get("parquet.block.size"))
     hc.setLong("parquet.block.size", cfg.rowGroupMb * 1024L * 1024)
+    // written as a local lake is: no chmod forked per file, no .crc sidecar
+    val local = NioLocalFileSystem.writeOptions(NioLocalFileSystem.forLake(
+      new org.apache.hadoop.fs.Path(dir).getFileSystem(hc), hc))
     try {
       val ev = generate(spark, cfg)
         .withColumn("_file", format_string("f%05d", $"offset.fileIdx"))
       ev.repartition($"_file")
         .sortWithinPartitions($"offset.pos", $"offset.rowIdx")
-        .write.mode("overwrite").partitionBy("_file").parquet(dir)
+        .write.options(local).mode("overwrite").partitionBy("_file").parquet(dir)
       if (cfg.dupTailFrac > 0) {
         // re-emit the tail of each binlog file under a replay partition name:
         // same offsets delivered twice, arriving later in file order.
@@ -240,7 +244,7 @@ object BinlogFeedGen {
           .filter(e => (e.offset.pos - 4) / 173 * 3 + e.offset.rowIdx >= cut)
           .withColumn("_file", format_string("f%05d-replay", $"offset.fileIdx"))
         dup.repartition($"_file")
-          .write.mode("append").partitionBy("_file").parquet(dir)
+          .write.options(local).mode("append").partitionBy("_file").parquet(dir)
       }
     } finally prevBlock match {
       case Some(v) => hc.set("parquet.block.size", v)

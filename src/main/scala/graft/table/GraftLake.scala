@@ -17,9 +17,11 @@ import java.util.UUID
   *
   * Layout:
   * {{{
-  *   <root>/data/commit-<batchId>-<uuid>/_bucket=N/part-....parquet
-  *   <root>/_graft_log/snapshot-%011d.json    // atomic-renamed commit
+  *   <root>/data/commit-<batchId>-<uuid>/_bdir=N/part-....parquet // N = bucket or range lo
+  *   <root>/_graft_log/snapshot-%011d.json, anchor-%011d.json // commit; expire's full form
+  *   <root>/_graft_log/seg/seg-<g>-<hash>.json // manifest segment
   *   <root>/_graft_log/clients-%06d.json      // versioned D10 registry
+  *   <root>/_graft_log/lease-<id>.json, hb-<id> // writer lease, heartbeat
   * }}}
   *
   * The commit protocol replicates the reference's ack-after-process ordering
@@ -936,10 +938,11 @@ final class GraftLake(val root: String, val nBuckets: Int,
     }
   }
 
-  /** Atomic publish: tmp write + rename (atomic on POSIX and HDFS).
-    * Fencing: refuses to commit a batchId already in the log (the caller
-    * skips replayed batches); a lost rename race also fences, since
-    * rename-to-existing fails rather than overwrites.
+  /** Atomic publish through [[publishString]]: a tmp write then link(2) on
+    * a local root, a tmp write then rename on any other (HDFS), a
+    * create-exclusive under [[GraftLake.Publish.Cas]]. None overwrites an existing name, so
+    * a snapshot id already in the log, or a publish race lost to another
+    * writer, fences with an IllegalStateException.
     *
     * `s.files` must be the FULL file list (in-memory form). What lands on
     * disk is normally just the delta vs the cached parent — O(touched

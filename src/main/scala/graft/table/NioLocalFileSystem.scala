@@ -10,9 +10,9 @@ import java.nio.file.{Files, LinkOption}
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermission}
 import scala.jdk.CollectionConverters._
 
-/** The `file:` FileSystem a local lake writes and lists through: its data
-  * files (the Spark write job of [[GraftLake.writeData]]) and its metadata
-  * (the lake's own `fs`). HDFS and object-store lakes never see it.
+/** The `file:` FileSystem a local lake writes and lists through (its data
+  * files, by [[GraftLake.writeData]], and its metadata, by the lake's own
+  * `fs`), and a local feed's writer too. HDFS and object stores never see it.
   *
   * Without libhadoop, Hadoop's stock local FileSystem forks a process to
   * read or set mode bits: `chmod` for every file and directory it creates,
@@ -81,10 +81,10 @@ object NioLocalFileSystem {
   private def bits(perms: java.util.Set[PosixFilePermission]): Int =
     perms.asScala.foldLeft(0)((b, p) => b | (0x100 >> p.ordinal))
 
-  /** The FileSystem a lake whose root resolves to `shared` writes its
-    * metadata through: a new instance of this class for the `file:`
-    * scheme, `shared` itself for any other. */
-  private[table] def forLake(shared: FileSystem, conf: Configuration): FileSystem =
+  /** The FileSystem a lake (or feed) whose root resolves to `shared` writes
+    * through: a new instance of this class for the `file:` scheme, `shared`
+    * itself for any other. */
+  private[graft] def forLake(shared: FileSystem, conf: Configuration): FileSystem =
     if (shared.getScheme != "file") shared
     else {
       val f = new NioLocalFileSystem
@@ -98,7 +98,7 @@ object NioLocalFileSystem {
     * cache is keyed by scheme and user, not by configuration: without it
     * every lookup would get the cached stock instance. The cached instance
     * itself is left alone. */
-  private[table] def writeOptions(fs: FileSystem): Map[String, String] =
+  private[graft] def writeOptions(fs: FileSystem): Map[String, String] =
     if (!fs.isInstanceOf[NioLocalFileSystem]) Map.empty
     else Map("fs.file.impl" -> classOf[NioLocalFileSystem].getName,
       "fs.file.impl.disable.cache" -> "true")

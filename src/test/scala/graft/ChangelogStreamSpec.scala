@@ -589,7 +589,8 @@ class ChangelogStreamSpec extends SparkSuite {
     val root = tmp("badtail")
     val tailCases =
       Seq("bootstrapBuckets:abc", "for:-5", "credit:0", "credit:")
-        .map(a => Seq("tail", root, a) -> a.takeWhile(_ != ':'))
+        .map(a => Seq("tail", root, a) -> a.takeWhile(_ != ':')) :+
+        (Seq("tail", root, "clientid:x") -> "unknown argument 'clientid:x'")
     // every other verb's numeric arguments take the same check: one
     // malformed value per argument, each error naming its argument
     val (feed, lake, cp) = (tmp("badfeed"), tmp("badlake"), tmp("badcp"))
@@ -598,14 +599,20 @@ class ChangelogStreamSpec extends SparkSuite {
       Seq("gen", feed, "100", "0") -> "nKeys",
       Seq("gen", feed, "100", "10", "-1") -> "skew",
       Seq("gen", feed, "100", "10", "0", "1.5") -> "dupTailFrac",
+      Seq("gen", feed, "6000", "400", "0.3", "0.2", "evolv") -> "unknown argument 'evolv'",
+      Seq("gen", feed, "100", "10", "0", "0", "evolve", "x") -> "unknown argument 'x'",
       Seq("replay", feed, lake, "many") -> "nBuckets",
       Seq("stream", feed, lake, cp, "8x") -> "maxFilesPerTrigger",
       Seq("stream", feed, lake, cp, "supervise:-1") -> "supervise",
+      Seq("stream", feed, lake, cp, "8", "4") -> "unknown argument '4'",
+      Seq("stream", feed, lake, cp, "lastpos", "continue") -> "unknown argument 'continue'",
       Seq("clients", lake, "prune:soon") -> "prune",
       Seq("clients", lake, "prun:0") -> "unknown argument 'prun:0'",
       Seq("vacuum", lake, "forse") -> "unknown argument 'forse'",
       Seq("show", lake, "-3") -> "show: n ",
+      Seq("show", lake, "5", "extra") -> "unknown argument 'extra'",
       Seq("get", lake, "repo-0", "a.scala", "asof:latest") -> "asof",
+      Seq("get", lake, "repo-0", "a.scala", "asf:1") -> "unknown argument 'asf:1'",
       Seq("rebucket", lake, "0") -> "newN",
       Seq("optimize", lake, "all") -> "maxBucketsPerCommit",
       Seq("expire", lake, "0") -> "keep",

@@ -53,8 +53,21 @@ class LakeWritePathSpec extends SparkSuite {
   private def mode(p: Path): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
-  /** Replay a small feed into a fresh lake; every file and directory under
-    * it has the mode Hadoop's umask `umask` gives, and no `.crc` sidecar. */
+  /** Every file under `dir` has mode `fileMode` and is no `.crc` sidecar,
+    * and every directory has mode `dirMode`; returns the files. */
+  private def checkModes(dir: String, fileMode: String, dirMode: String): Seq[Path] = {
+    val (dirs, files) = walk(dir).partition(Files.isDirectory(_))
+    assert(!files.exists(_.getFileName.toString.endsWith(".crc")),
+      files.filter(_.getFileName.toString.endsWith(".crc")).mkString(", "))
+    files.foreach(f => assert(mode(f) == fileMode, s"$f: ${mode(f)}"))
+    dirs.foreach(d => assert(mode(d) == dirMode, s"$d: ${mode(d)}"))
+    files
+  }
+
+  /** Generate a small feed and replay it into a fresh lake: every file and
+    * directory of the feed has the mode Hadoop's default umask 022 gives,
+    * every one of the lake the mode `umask` gives, and neither holds a
+    * `.crc` sidecar. */
   private def checkLayout(name: String, umask: String,
       fileMode: String, dirMode: String): Unit = {
     val feed = tmp(s"feed-$name"); val root = tmp(s"lake-$name")
@@ -67,14 +80,12 @@ class LakeWritePathSpec extends SparkSuite {
     try CdcIngestJob.replayBatch(spark, IngestConfig(feed, root, tmp(s"cp-$name"),
       nBuckets = 16))
     finally prev.fold(conf.unset(key))(conf.set(key, _))
-    val (dirs, files) = walk(root).partition(Files.isDirectory(_))
+    val feedFiles = checkModes(feed, "rw-r--r--", "rwxr-xr-x")
+    assert(feedFiles.count(_.toString.endsWith(".parquet")) == 4)
+    val files = checkModes(root, fileMode, dirMode)
     val parquet = files.filter(_.toString.endsWith(".parquet"))
     assert(parquet.size == 16, s"${parquet.size} data files")
     assert(files.exists(_.getFileName.toString.startsWith("snapshot-")))
-    assert(!files.exists(_.getFileName.toString.endsWith(".crc")),
-      files.filter(_.getFileName.toString.endsWith(".crc")).mkString(", "))
-    files.foreach(f => assert(mode(f) == fileMode, s"$f: ${mode(f)}"))
-    dirs.foreach(d => assert(mode(d) == dirMode, s"$d: ${mode(d)}"))
   }
 
   test("a file: lake's files and directories keep Hadoop's mode bits " +
