@@ -55,12 +55,17 @@ object Describe {
         f"${r.deltaRows}%d delta rows over ${r.baseRows}%d base rows " +
         f"(ratio ${r.ratio}%.2f)"
     }
-    val beats = lake.clientHeartbeats()
-    val clients = lake.registeredClients().toSeq.sorted.map { id =>
+    header ++ schemaLines(snap) ++ files ++ debt ++
+      clientLines(lake, now).map("client " + _)
+  }
+
+  /** `<id>  last heartbeat: <age>` per registered client, by id. */
+  def clientLines(lake: GraftLake, now: Long = System.currentTimeMillis()): Seq[String] = {
+    val beats = lake.subscribers.clientHeartbeats()
+    lake.subscribers.registeredClients().toSeq.sorted.map { id =>
       val age = beats.get(id).map(t => f"${(now - t) / 1000.0}%.1fs ago")
         .getOrElse("never")
-      s"client $id  last heartbeat: $age"
+      s"$id  last heartbeat: $age"
     }
-    header ++ schemaLines(snap) ++ files ++ debt ++ clients
   }
 }

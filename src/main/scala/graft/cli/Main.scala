@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *                            // retained feed's minimum offset (O3 bound)
   * }}}
   *
-  * Bucket-count discipline (round-3 advice, high): the (repo,path)→bucket
+  * Bucket-count discipline: the (repo,path)→bucket
   * assignment is a pure function of nBuckets, so every command that opens
   * an EXISTING lake adopts the count persisted in its snapshot log
   * ([[GraftLake.storedBuckets]]) — a mismatched count would silently land
@@ -56,8 +56,7 @@ object Main {
     * rowGroupMb) only parallelize a maxFilesPerTrigger-file microbatch if
     * the split size drops to match. Lake-inspection commands
     * (show/changes) keep the 128 MB default — slicing large zstd base
-    * files into ~64× more tasks is pure scheduler overhead there
-    * (round-4 advice). */
+    * files into ~64× more tasks is pure scheduler overhead there. */
   private def session(feedScans: Boolean = false): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val b = SparkSession.builder()
@@ -86,11 +85,17 @@ object Main {
     * off their uncommitted output. */
   private def refuseUnderLiveWriter(lake: GraftLake, lakeRoot: String,
       verb: String): Unit =
-    lake.liveWriter().foreach { h =>
+    lake.subscribers.liveWriter().foreach { h =>
       throw new IllegalStateException(
         s"$verb refused: writer '$h' holds a fresh lease on $lakeRoot — " +
           "stop the stream first or wait out the lease")
     }
+
+  /** The lake at `root`, opened with the bucket count its snapshot log
+    * records, else `orElse` (see the bucket-count discipline above). */
+  private def openLake(root: String, orElse: => Int = 0): GraftLake =
+    new GraftLake(root, GraftLake.storedBuckets(root).getOrElse(orElse))
+  private def noLake(root: String): Nothing = sys.error(s"no lake at $root")
 
   /** One numeric CLI argument, checked before any session starts: its
     * value when `raw` parses and lies in `[lo, hi]`, else an
@@ -110,7 +115,8 @@ object Main {
     df.withColumn("sha", sha2(col("content"), 256)).drop("content")
       .orderBy("repo", "path").show(n, truncate = false)
   /** Rejects `extra`, the arguments a verb has no place for, before any
-    * session starts: a typo must fail, never run as if it were absent. */
+    * session starts: a typo or a surplus argument must fail, never run as
+    * if it were absent (an unknown verb throws the same exception). */
   private def rejectExtra(verb: String, extra: Seq[String], expected: String): Unit =
     extra.headOption.foreach(a => throw new IllegalArgumentException(
       s"$verb: unknown argument '$a' (expected $expected)"))
@@ -143,7 +149,8 @@ object Main {
         s"ddls=${ddls.size}) to $feedDir")
       spark.stop()
 
-    case "replay" :: feedDir :: lakeRoot :: rest if rest.size <= 1 =>
+    case "replay" :: feedDir :: lakeRoot :: rest =>
+      rejectExtra("replay", rest.drop(1), "[nBuckets]")
       val pinned = rest.headOption.map(intArg("replay", "nBuckets", _))
       val spark = session(feedScans = true)
       // an existing lake pins the count; a new one scales it with the
@@ -203,42 +210,34 @@ object Main {
       }
       spark.stop()
 
-    case "register" :: lakeRoot :: clientId :: Nil =>
+    case "register" :: lakeRoot :: clientId :: rest =>
+      rejectExtra("register", rest, "nothing after <clientId>")
       // registry is independent of snapshots: registering must NOT stamp a
       // bucket count onto a lake that hasn't been initialized yet
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
-      lake.registerClient(clientId)
+      val lake = openLake(lakeRoot)
+      lake.subscribers.registerClient(clientId)
       println(s"[register] clients at $lakeRoot: " +
-        lake.registeredClients().toSeq.sorted.mkString(", "))
+        lake.subscribers.registeredClients().toSeq.sorted.mkString(", "))
 
     case "clients" :: lakeRoot :: rest if rest.size <= 1 =>
       // a typo'd `prune:` must not silently list without pruning
       rejectExtra("clients", rest.filterNot(_.startsWith("prune:")), "prune:<sec>")
       val pruneTtlSec = rest.headOption.map(p => longArg("clients", "prune:",
         p.stripPrefix("prune:"), lo = 0L, hi = Long.MaxValue / 1000))
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
+      val lake = openLake(lakeRoot)
       pruneTtlSec.foreach { sec =>
         val ttlMs = sec * 1000L
-        val dead = lake.pruneDeadClients(ttlMs)
+        val dead = lake.subscribers.pruneDeadClients(ttlMs)
         println(s"[clients] pruned ${dead.size} dead: ${dead.toSeq.sorted.mkString(", ")}")
       }
-      val beats = lake.clientHeartbeats()
-      val now = System.currentTimeMillis()
-      lake.registeredClients().toSeq.sorted.foreach { id =>
-        val age = beats.get(id).map(b => f"${(now - b) / 1000.0}%.1fs ago")
-          .getOrElse("never")
-        println(s"[clients] $id  last heartbeat: $age")
-      }
+      Describe.clientLines(lake).foreach(l => println(s"[clients] $l"))
 
     case "vacuum" :: lakeRoot :: rest if rest.size <= 1 =>
       // refused while a live stream holds a fresh writer lease (the sweep
       // would delete a mid-batch commit's uncommitted files); `force`
       // overrides for a wedged lease the operator KNOWS is dead
       rejectExtra("vacuum", rest.filterNot(_ == "force"), "force")
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
+      val lake = openLake(lakeRoot)
       lake.vacuum(leaseTtlMs = if (rest.contains("force")) 0L else 120000L)
       println(s"[vacuum] swept orphans at $lakeRoot")
 
@@ -246,9 +245,8 @@ object Main {
       rejectExtra("show", rest.drop(1), "[n]")
       val n = rest.headOption.map(intArg("show", "n", _, lo = 0)).getOrElse(10)
       val spark = session()
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(32))
-      val snap = lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot"))
+      val lake = openLake(lakeRoot, 32)
+      val snap = lake.latest().getOrElse(noLake(lakeRoot))
       val df = lake.read(spark, snap)
       println(s"[show] snapshot=${snap.id} batchId=${snap.batchId} " +
         s"schemaVersion=${snap.schemaVersion} files=${snap.files.size} " +
@@ -266,10 +264,9 @@ object Main {
       val asof = rest.headOption.map(a =>
         longArg("get", "asof:", a.stripPrefix("asof:"), lo = 0L))
       val spark = session()
-      val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
-        .getOrElse(sys.error(s"no lake at $lakeRoot")))
+      val lake = openLake(lakeRoot, noLake(lakeRoot))
       val snap = asof.map(lake.snapshotAt)
-        .getOrElse(lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot")))
+        .getOrElse(lake.latest().getOrElse(noLake(lakeRoot)))
       val n = snap.nBuckets
       val df = lake.readKey(spark, snap, repo, path)
       println(s"[get] snapshot=${snap.id} " +
@@ -278,34 +275,36 @@ object Main {
       df.show(truncate = false)
       spark.stop()
 
-    case "rebucket" :: lakeRoot :: n :: Nil =>
+    case "rebucket" :: lakeRoot :: n :: rest =>
+      rejectExtra("rebucket", rest, "nothing after <newN>")
       // offline bucket-count migration: one full rewrite; reopen any
       // running stream afterwards (it fails closed on the old count)
       val newN = intArg("rebucket", "newN", n)
       val spark = session()
-      val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
-        .getOrElse(sys.error(s"no lake at $lakeRoot")))
+      val lake = openLake(lakeRoot, noLake(lakeRoot))
       refuseUnderLiveWriter(lake, lakeRoot, "rebucket")
       val s = lake.rebucket(spark, newN)
       println(s"[rebucket] snapshot=${s.id} nBuckets=${s.nBuckets} " +
         s"files=${s.files.size} rows=${s.metrics.getOrElse("rowsWritten", 0L)}")
       spark.stop()
 
-    case "optimize" :: lakeRoot :: rest0 if rest0.size <= 2 =>
+    case "optimize" :: lakeRoot :: rest0 =>
       // offline full compaction (stream stopped): drains ALL delta debt in
       // bounded commits; `describe` afterwards shows zero debt ranges.
       // Fence/lineage/offsets are untouched — resume the stream as-is.
       // feed:<dir> supplies the tombstone GC horizon (the retained feed's
       // minimum offset — the same O3 bound the streaming fold uses), so an
       // offline optimize can finally drop long-expired tombstones too.
-      val budget = rest0.filterNot(_.startsWith("feed:")).headOption
+      val (feedArgs, budgetArgs) = rest0.partition(_.startsWith("feed:"))
+      rejectExtra("optimize", budgetArgs.drop(1) ++ feedArgs.drop(1),
+        "at most one [maxBucketsPerCommit] and one [feed:<feedDir>]")
+      val budget = budgetArgs.headOption
         .map(intArg("optimize", "maxBucketsPerCommit", _)).getOrElse(64)
       val spark = session()
-      val horizon = rest0.find(_.startsWith("feed:")).map { a =>
+      val horizon = feedArgs.headOption.map { a =>
         CdcIngestJob.feedOffsetRange(spark, a.stripPrefix("feed:"))._1
       }
-      val lake = new GraftLake(lakeRoot, GraftLake.storedBuckets(lakeRoot)
-        .getOrElse(sys.error(s"no lake at $lakeRoot")))
+      val lake = openLake(lakeRoot, noLake(lakeRoot))
       refuseUnderLiveWriter(lake, lakeRoot, "optimize")
       val r = graft.merge.MergeApply.optimize(spark, lake, budget, horizon)
       println(s"[optimize] commits=${r.commits} " +
@@ -313,10 +312,10 @@ object Main {
         s"rowsRewritten=${r.rowsRewritten}")
       spark.stop()
 
-    case "expire" :: lakeRoot :: keep :: Nil =>
+    case "expire" :: lakeRoot :: keep :: rest =>
+      rejectExtra("expire", rest, "nothing after <keep>")
       val k = intArg("expire", "keep", keep)
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
+      val lake = openLake(lakeRoot)
       // a live stream runs its own per-commit expire, serialized with its
       // commits; a CONCURRENT manual trim could drop an anchor (and its
       // now-unshared segment files) that the stream's in-flight full-form
@@ -325,16 +324,16 @@ object Main {
       lake.expire(k)
       // the retention floor may keep more than `keep` (down to the newest
       // full base at or below the cut): report what is actually retained
-      val latest = lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot"))
+      val latest = lake.latest().getOrElse(noLake(lakeRoot))
       val oldest = lake.oldestRetainedId().getOrElse(latest.id)
       println(s"[expire] retained snapshots $oldest..${latest.id} " +
         s"(${latest.id - oldest + 1}) at $lakeRoot")
 
-    case "log" :: lakeRoot :: Nil =>
+    case "log" :: lakeRoot :: rest =>
+      rejectExtra("log", rest, "nothing after <lakeRoot>")
       // retained snapshot history: the valid bounds for `show`-as-of /
       // `changes` windows, with each commit's headline lineage counters
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
+      val lake = openLake(lakeRoot)
       lake.snapshotLog().foreach { s =>
         val m = s.metrics
         println(s"[log] snapshot=${s.id} batchId=${s.batchId} " +
@@ -352,8 +351,7 @@ object Main {
       val toId = longArg("changes", "toSnap", to, lo = 0L)
       val n = rest.headOption.map(intArg("changes", "n", _, lo = 0)).getOrElse(10)
       val spark = session()
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(32))
+      val lake = openLake(lakeRoot, 32)
       val df = lake.changesBetween(spark, fromId, toId)
       println(s"[changes] ($from, $to] rows=${df.count()}")
       showRows(df, n)
@@ -370,10 +368,8 @@ object Main {
       val pollMs = rest.find(_.startsWith("follow:"))
         .map(a => longArg("sync", "follow:", a.stripPrefix("follow:")))
       val spark = session()
-      val src = new GraftLake(srcRoot,
-        GraftLake.storedBuckets(srcRoot).getOrElse(sys.error(s"no lake at $srcRoot")))
-      val dst = new GraftLake(dstRoot,
-        GraftLake.storedBuckets(dstRoot).getOrElse(src.nBuckets))
+      val src = openLake(srcRoot, noLake(srcRoot))
+      val dst = openLake(dstRoot, src.nBuckets)
       // sweep orphans of a previously crashed sync; self = this chain's
       // lineage, so its own predecessor's lease never blocks the sweep
       dst.vacuum(self = graft.stream.ChangelogChain.lineageFor(src))
@@ -389,27 +385,32 @@ object Main {
       }
       spark.stop()
 
-    case "tail" :: lakeRoot :: rest if rest.size <= 6 =>
+    case "tail" :: lakeRoot :: rest =>
       // the changelog as a live Structured Streaming SOURCE: each new
       // snapshot arrives as a micro-batch of net per-key changes
       // (ChangelogStreamSource); `cp:<dir>` resumes a previous tail
       // exactly-once from Spark's own checkpoint
       // a silently-dropped typo is dangerous here: `clientid:x` for
       // `client:x` would run UNGATED against a registry-protected lake,
-      // `credits:4` would tail without flow control — reject unknown args
-      // — and a numeric option's value must be a positive integer, checked
-      // here, before any session starts
-      rest.foreach { t =>
-        val numeric = Seq("for:", "credit:", "bootstrapBuckets:")
-          .find(t.startsWith)
-        val ok = t.toIntOption.exists(_ >= 0) || t == "bootstrap:none" ||
-          t.startsWith("client:") || t.startsWith("cp:") || numeric.nonEmpty
-        if (!ok) rejectExtra("tail", Seq(t), "[n] [bootstrap:none] " +
-          "[client:<id>] [for:<ms>] [cp:<dir>] [credit:<k>] [bootstrapBuckets:<k>]")
-        numeric.foreach { p =>
-          if (p == "for:") longArg("tail", p, t.stripPrefix(p))
-          else intArg("tail", p, t.stripPrefix(p))
+      // `credits:4` would tail without flow control. Unknown tokens,
+      // non-positive numeric values and a second token of one kind (a
+      // "n", an option prefix) are all rejected before any session starts
+      val usage = "[n] [bootstrap:none] [client:<id>] [for:<ms>] [cp:<dir>] " +
+        "[credit:<k>] [bootstrapBuckets:<k>]"
+      def kindOf(t: String): String = if (t.toIntOption.isDefined) "n"
+        else Seq("client:", "cp:", "for:", "credit:", "bootstrapBuckets:")
+          .find(t.startsWith).getOrElse(t)
+      rest.zipWithIndex.foreach { case (t, i) =>
+        kindOf(t) match {
+          case "n" | "bootstrap:none" | "client:" | "cp:"
+              if t.toIntOption.forall(_ >= 0) => ()
+          case "for:" => longArg("tail", "for:", t.stripPrefix("for:"))
+          case p @ ("credit:" | "bootstrapBuckets:") =>
+            intArg("tail", p, t.stripPrefix(p))
+          case _ => rejectExtra("tail", Seq(t), usage)
         }
+        if (rest.take(i).map(kindOf).contains(kindOf(t)))
+          rejectExtra("tail", Seq(t), s"at most one of each: $usage")
       }
       val spark = session()
       val n = rest.flatMap(_.toIntOption).headOption.getOrElse(10)
@@ -448,19 +449,19 @@ object Main {
         spark.stop()
       }
 
-    case "describe" :: lakeRoot :: Nil =>
+    case "describe" :: lakeRoot :: rest =>
+      rejectExtra("describe", rest, "nothing after <lakeRoot>")
       // operator view: schema history + per-range compaction debt (the
       // reference exposes its store stats the same way — count-trim logs)
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
-      val snap = lake.latest().getOrElse(sys.error(s"no lake at $lakeRoot"))
+      val lake = openLake(lakeRoot)
+      val snap = lake.latest().getOrElse(noLake(lakeRoot))
       Describe.lines(lake, snap).foreach(l => println(s"[describe] $l"))
 
-    case "metrics" :: lakeRoot :: Nil =>
+    case "metrics" :: lakeRoot :: rest =>
+      rejectExtra("metrics", rest, "nothing after <lakeRoot>")
       // per-batch lineage from the durable record: each retained
       // snapshot's scalar metrics (per-bucket row counts left out)
-      val lake = new GraftLake(lakeRoot,
-        GraftLake.storedBuckets(lakeRoot).getOrElse(0))
+      val lake = openLake(lakeRoot)
       val log = lake.snapshotLog()
       if (log.isEmpty) println(s"no lake at $lakeRoot")
       log.foreach { s =>
@@ -471,6 +472,7 @@ object Main {
       }
 
     case other =>
-      System.err.println(s"unknown args: ${other.mkString(" ")}"); sys.exit(2)
+      throw new IllegalArgumentException(
+        s"unknown verb or wrong number of arguments: ${other.mkString(" ")}")
   }
 }

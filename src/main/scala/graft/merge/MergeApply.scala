@@ -605,10 +605,10 @@ object MergeApply {
     // (round-5 fifth review). Renewed per commit so a long drain never
     // ages past the TTL; released on every exit path.
     val leaseHolder = s"optimize-${java.util.UUID.randomUUID()}"
-    lake.renewLease(leaseHolder)
+    lake.subscribers.renewLease(leaseHolder)
     try {
       while (true) {
-        lake.renewLease(leaseHolder)
+        lake.subscribers.renewLease(leaseHolder)
         val snap = lake.latest().getOrElse(
           throw new IllegalStateException(s"no lake at ${lake.root}"))
         val plan = compactionPlan(snap.files, compactFactor = 0.0,
@@ -629,6 +629,6 @@ object MergeApply {
         rowsRewritten += fold.rows + split.rows
       }
       throw new IllegalStateException("unreachable")
-    } finally lake.releaseLease(leaseHolder)
+    } finally lake.subscribers.releaseLease(leaseHolder)
   }
 }

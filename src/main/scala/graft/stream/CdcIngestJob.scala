@@ -1,144 +1,19 @@
 package graft.stream
 
-import graft.feed.{BinlogFeedGen, FeedReader}
+import graft.feed.FeedReader
 import graft.merge.MergeApply
-import graft.model.{DdlChange, Offset, Op}
+import graft.model.{Offset, Op}
 import graft.model.Schemas.keyCols
-import graft.table.{GraftLake, SchemaEvolution}
+import graft.table.{GraftLake, MetaStore, SchemaEvolution}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-/** Resume modes — the reference's offset negotiation (D8;
-  * reference: server/akkaSystem/TableBinglogActor.java:95-116,
-  * base/enums/OffsetEnum.java:13). */
-sealed trait ResumeMode
-object ResumeMode {
-  /** start from the latest feed offset at job start (reference CONTINUE) */
-  case object Continue extends ResumeMode
-  /** resume from checkpoint / lake state (reference LAST_POS) */
-  case object LastPos extends ResumeMode
-  /** explicit replay-from offset, validated (reference FROM_POS) */
-  final case class FromPos(offset: Offset) extends ResumeMode
-  /** GTID-style named resume (the reference's binlog client resumes from a
-    * GTID set when configured — reference server/relay/BinlogProducer.java:59-60):
-    * the name resolves through `IngestConfig.gtidMap`, falling back to the
-    * reference's `fileIdx_pos_rowIdx` seqId syntax; then behaves exactly
-    * like [[FromPos]] (same strict O3 validation). */
-  final case class FromGtid(gtid: String) extends ResumeMode
-}
 
 /** Resume offset is older than the retained feed — the reference rejects
   * the subscription rather than silently skipping (O3;
   * server/infoPersistent/BinlogDataStorageWithLevelDB.java:262-289,
   * base/exceptions/TooOldSeqIdException.java). */
 final class TooOldOffsetException(msg: String) extends RuntimeException(msg)
-
-/** One watched (db, table) subscription with its own target lake, filters
-  * and naming — the reference's per-table config unit (D1/F5/F4;
-  * reference: server/configParser/ConfigLoader.java:34-109 parses a LIST of
-  * watched tables, each with per-handler accept-ops and filters;
-  * routing: server/akkaSystem/SingleDbBinglogActor.java:120-127). */
-final case class TableSpec(
-    db: String,
-    table: String,
-    lakeRoot: String,
-    nBuckets: Int = 32,
-    /** reference `acceptEvent` analog (F2/F5 per-handler change-type set) */
-    acceptOps: Set[String] = Op.rowOps.toSet,
-    /** reference `filterTimeChange` analog for no-op suppression (F3) */
-    excludedCols: Set[String] = Set("commit"),
-    /** F4 — the user predicate DSL. The reference compiles handler filters
-      * like `where (old.status = 1) and new.status = 2` into a per-event
-      * evaluator (client/config/ChangeDataFilter.java:42-104,
-      * TableBinlogProcessor.java:89-113); here the whole parser/evaluator is
-      * Catalyst: any SQL boolean expression over the event envelope —
-      * `before.<col>` / `after.<col>` image structs, `op`, `ts`, `offset`.
-      * DDL events always pass (control flow, not data). */
-    filterSql: Option[String] = None,
-    /** P3 — snake_case source columns land as camelCase lake columns
-      * (reference utils/StrNameConvert.java:24-36). Applies to DDL-evolved
-      * columns; extras are looked up under the original source name. */
-    camelize: Boolean = false,
-    /** snapshots kept by expiry (retention R1 analog) */
-    expireKeep: Int = 50,
-    /** fold a bucket's deltas into its base once deltaRows >
-      * compactFactor × baseRows — bounds amortized write amplification at
-      * (1 + 1/compactFactor) × ingested rows. Default 4.0, raised from 2.0
-      * (which was raised from 1.0 for the same measured reason): the fold
-      * re-reads and re-writes base rows at a cadence ∝ 1/compactFactor, and
-      * at 2.0 that base-rewrite bandwidth was ~40% of steady-state batch
-      * CPU — the single largest term after the write itself. 4.0 halves it
-      * for at most compactFactor× delta rows of merge-on-read debt per
-      * bucket — the write path is the hot path in a CDC sink, reads
-      * amortize the fold either way (and `maxDeltaFiles` still bounds the
-      * per-bucket file count independently). */
-    compactFactor: Double = 4.0,
-    /** ... or once a bucket holds this many delta files (read-
-      * amplification bound for long runs of small microbatches) */
-    maxDeltaFiles: Int = 16,
-    /** incremental compaction: at most this many buckets fold per commit,
-      * worst delta debt first — keeps per-batch latency flat instead of
-      * paying a whole-table fold spike when many buckets cross the
-      * threshold in the same batch (round-3 verdict #5). Deferred buckets
-      * stay correct (merge-on-read) and fold on a later commit. */
-    maxCompactBuckets: Int = 16)
-
-final case class IngestConfig(
-    feedDir: String,
-    lakeRoot: String,
-    checkpointDir: String,
-    nBuckets: Int = 32,
-    maxFilesPerTrigger: Int = 8,
-    resumeMode: ResumeMode = ResumeMode.LastPos,
-    /** D1 — multi-table subscriptions; when non-empty these REPLACE the
-      * single-table default: the generator's watched table into
-      * `lakeRoot` with `nBuckets` and every other [[TableSpec]] default. */
-    tables: Seq[TableSpec] = Nil,
-    /** named resume points for [[ResumeMode.FromGtid]] (GTID-set analog) */
-    gtidMap: Map[String, Offset] = Map.empty,
-    /** D10 — subscriber identity, validated against each target lake's
-      * client registry at subscription start (reference
-      * base/identityCheck/IdentityCheckerJustLocal.java:33-42 rejects
-      * unknown clients at registration). None skips the check. */
-    clientId: Option[String] = None,
-    /** Above this many distinct keys in a batch the merge switches from the
-      * broadcast winner semi-join to the direct shuffled LWW reduction —
-      * the broadcast build side is one 24-byte offset per key, so 4M keys
-      * ≈ 100 MB, about the most one should ship to every executor. The
-      * streaming path stays under this by construction (maxFilesPerTrigger
-      * bounds batch size); one-shot replay of a huge retained feed is what
-      * trips it (round-1 verdict: unbounded broadcast = driver OOM at
-      * 10^8-key scale). */
-    broadcastKeyLimit: Long = 4000000L) {
-
-  /** The subscription list this config denotes (single-table configs are a
-    * one-element list). */
-  def specs: Seq[TableSpec] =
-    if (tables.nonEmpty) tables
-    else Seq(TableSpec(BinlogFeedGen.WatchedDb, BinlogFeedGen.WatchedTable,
-      lakeRoot, nBuckets))
-}
-
-final case class BatchMetrics(
-    batchId: Long,
-    eventsIn: Long,
-    watchedRows: Long,
-    noopDrops: Long,
-    dedupDrops: Long,
-    applied: Long,
-    ddls: Long,
-    mergeLatencyMs: Long,
-    affectedBuckets: Int,
-    replayedSkip: Boolean,
-    statsMs: Long = 0,
-    writeMs: Long = 0,
-    commitMs: Long = 0,
-    /** delta rows written this batch — in steady state ∝ batch size, NOT
-      * table size (the round-2 write-amplification fix) */
-    rowsWritten: Long = 0,
-    compactedBuckets: Int = 0,
-    compactMs: Long = 0)
 
 /** The CDC ingest pipeline: one microbatch = decode → filter → schema-evolve
   * → LWW dedup → MERGE → atomic snapshot commit → (engine) checkpoint.
@@ -152,12 +27,11 @@ object CdcIngestJob {
   /** Lake roots whose last SPECULATIVE fold was discarded, keyed to the
     * parent snapshot id it ran against: re-kicking the identical plan
     * against the identical snapshot would just rewrite and re-delete the
-    * same buckets every batch for as long as a spec sees only empty
-    * batches (multi-table streams where another table carries all the
-    * traffic — round-5 review). Skipping the kick defers the fold to the
-    * next COMMITTING batch, which is where its output could ride anyway.
-    * Process-local by design: a fresh process re-runs one speculative
-    * fold at worst. */
+    * same buckets every batch while a spec sees only empty batches (a
+    * multi-table stream whose traffic is another table's). Skipping the
+    * kick defers the fold to the next COMMITTING batch, where its output
+    * could ride anyway. Process-local: a fresh process re-runs one
+    * speculative fold at worst. */
   private val discardedFoldAt =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -193,8 +67,7 @@ object CdcIngestJob {
   /** min/max offsets present in the retained feed. Partition-pruned: the
     * binlog file index IS the `_file` partition directory, so only the
     * first and last retained files are scanned (at 10^10-event scale a
-    * full-feed min/max job before the first batch is a non-starter —
-    * round-1 verdict). */
+    * full-feed min/max job before the first batch is a non-starter). */
   def feedOffsetRange(spark: SparkSession, feedDir: String): (Offset, Offset) = {
     val fp = new org.apache.hadoop.fs.Path(feedDir)
     val fs = fp.getFileSystem(GraftLake.hadoopConf())
@@ -216,6 +89,12 @@ object CdcIngestJob {
       finally sc.setJobDescription(prevDesc)
     (Offset.fromRow(r.getStruct(0)), Offset.fromRow(r.getStruct(1)))
   }
+
+  /** [[feedOffsetRange]], or None when the feed has no files yet. */
+  private def feedRangeIfAny(spark: SparkSession,
+      feedDir: String): Option[(Offset, Offset)] =
+    try Some(feedOffsetRange(spark, feedDir))
+    catch { case _: Throwable => None }
 
   /** O3 guard. `strict` (user-supplied FROM_POS): any resume offset inside
     * a trimmed file is a hard error — the remainder of that file is gone
@@ -280,49 +159,13 @@ object CdcIngestJob {
     * it (a fresh checkpoint over an existing lake would otherwise have its
     * first batches wrongly skipped as "replayed" — silent data loss). */
   def checkpointLineage(checkpointDir: String): String = {
+    // a blank (torn) file must not read as lineage "": that is
+    // replayBatch's, and would re-arm the bare-batchId fence against a
+    // replay-populated lake
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "graft-lineage")
-    val fs = p.getFileSystem(GraftLake.hadoopConf())
-    // a BLANK file (crash between create and write under a non-atomic
-    // publish) must read as absent, not as lineage "" — replayBatch stamps
-    // "" on its commits, so an empty lineage would re-arm the bare-batchId
-    // fence against a replay-populated lake and silently skip this
-    // stream's first batches (round-5 review)
-    def read(): Option[String] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim).filter(_.nonEmpty)
-        finally in.close()
-      }
-    var attempts = 0
-    var out: Option[String] = read()
-    while (out.isEmpty && attempts < 3) {
-      attempts += 1
-      if (fs.exists(p)) fs.delete(p, false) // torn-write artifact
-      fs.mkdirs(p.getParent)
-      val id = java.util.UUID.randomUUID().toString
-      // publish atomically (tmp + rename) so a torn write can never leave
-      // a half-written lineage behind; the checkpoint dir has exactly one
-      // owning stream, so a lost (theoretical) race just adopts the winner
-      val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-        s".graft-lineage-${java.util.UUID.randomUUID()}")
-      val os = fs.create(tmp, true)
-      try os.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-      out = if (fs.rename(tmp, p)) Some(id)
-        else { fs.delete(tmp, false); read() }
-    }
-    out.getOrElse(throw new IllegalStateException(
-      s"could not establish a checkpoint lineage at $p after $attempts attempts"))
+    MetaStore.at(p).writeOnce(p, s => Some(s).filter(_.nonEmpty))(
+      java.util.UUID.randomUUID().toString)
   }
-
-  /** Single-table convenience wrapper (the round-1 surface; tests use it). */
-  def applyBatch(spark: SparkSession, lake: GraftLake, cfg: IngestConfig,
-      batch: DataFrame, batchId: Long,
-      fromPos: Option[Offset] = None): BatchMetrics =
-    applyTableBatch(spark, lake, cfg.specs.head, batch, batchId, fromPos,
-      lineage = "", broadcastKeyLimit = cfg.broadcastKeyLimit)
 
   /** Apply one (micro)batch for one watched table. Returns metrics;
     * replayed batchIds within the same checkpoint lineage are fenced and
@@ -409,9 +252,9 @@ object CdcIngestJob {
     // deltas fold on a later commit (debt is bounded by one batch either
     // way). Kicked SPECULATIVELY at batch start — before the stats scan
     // says whether the batch will commit — because the fold's ~1-3s stage
-    // chain only fully hides when it overlaps the stats scan too (kicking
-    // it after the stats collect, as earlier rounds did, left it racing
-    // only the write and added its tail to every compacting batch). A
+    // chain only fully hides when it overlaps the stats scan too (kicked
+    // after the stats collect, it races only the write and adds its tail
+    // to every compacting batch). A
     // batch that turns out to be a pure no-op discards the fold's
     // uncommitted output files eagerly (lake.discardFiles below), so the
     // no-fold-only-commit law (DeltaCompactionSpec) still holds
@@ -419,7 +262,7 @@ object CdcIngestJob {
     // interleave at task granularity — the fold fills slots the chain's
     // stage boundaries leave idle.
     // `plan.split` is the L0→L1 tier for delta ranges wider than the fold
-    // budget (round-4 verdict #1) — fold and split touch disjoint files by
+    // budget — fold and split touch disjoint files by
     // construction, so both ride this commit. Fold output files are read
     // with — and stamped as — the PARENT snapshot's schema version; a DDL
     // arriving in this same batch just means the fold output carries the
@@ -447,121 +290,9 @@ object CdcIngestJob {
           spec.maxCompactBuckets, tombstoneHorizon)
       }(scala.concurrent.ExecutionContext.global)
 
-    // KEYED SCAN — ONE job over the batch computing, per (repo, path) key,
-    // the surviving-winner offset (the merge's build side) plus the
-    // row/noop/ddl tallies. This fuses the round-1 design's separate
-    // whole-batch planning scan and winner aggregate — two full feed
-    // scans — into one: per-key partial aggregation (map-side combine)
-    // bounds the shuffle at one ~80-byte row per (key, input partition)
-    // regardless of skew, and every global statistic the plan needs
-    // (affected buckets, counts, max offset, winner count) is then a
-    // sub-second re-aggregation over the cached per-key rows. Design notes:
-    //  - sum/max/bit_or are DeclarativeAggregates (codegen'd hash agg);
-    //    the bucket set is a bit_or bitmask, one long per 64 buckets.
-    //  - DDL events have null images, so they fold into the (null, null)
-    //    key group; their payloads are fetched by a stats-pruned scan only
-    //    when the counter says any exist.
-    //  - no Observations/CollectMetrics: inside `foreachBatch` the write
-    //    action's QueryExecutionListener event is swallowed by the
-    //    enclosing streaming execution, so `Observation.get` never resolves
-    //    there (verified empirically; batch-mode writes do).
-    val bucket = GraftLake.bucketExpr(lake.nBuckets)
-    val isRow = col("op").isin(Op.rowOps: _*)
-    val surviving = isRow && !col("_noop")
-    val nWords = (lake.nBuckets + 63) / 64
-    // offsets aggregate as their DECIMAL(38,0) encoding (Offset.encExpr):
-    // max over a struct forces SortAggregate (sorts every scan partition by
-    // key); max over a fixed-width decimal is a codegen'd HashAggregate.
-    val offEnc = Offset.encExpr(col("offset"))
-    val keyed = decoded(batch)
-      .groupBy("repo", "path")
-      .agg(
-        max(when(surviving, offEnc)).as("_woff"),
-        count(lit(1)).as("_n"),
-        sum(when(isRow, 1L).otherwise(0L)).as("_rows"),
-        sum(when(isRow && col("_noop"), 1L).otherwise(0L)).as("_noops"),
-        // non-surviving complement of `_woff`: every row updates exactly ONE
-        // decimal max (the two branches partition the group), and the batch
-        // maxOff is greatest(max(_woff), max(_nsoff)) at the re-aggregation
-        max(when(!surviving, offEnc)).as("_nsoff"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // "applied" lineage metric = winners that advance past the pre-merge
-    // lastOffset: a re-delivered duplicate of an already-applied event
-    // keeps its old offset and so correctly counts as 0 applied. Computed
-    // as one more aggregate column over the cached keyed rows — the
-    // round-2 design re-read every newly written file's offset column per
-    // batch, an extra job that grew with bucket (not batch) size.
-    val appliedAgg = snap.lastOffset.map(Offset.encode) match {
-      case Some(last) => count(when(col("_woff") > lit(last), true))
-      case None => count(col("_woff"))
-    }
-    // bucket mask keys on SURVIVING rows (`_woff` non-null): a bucket whose
-    // only activity is suppressed no-ops must not be rewritten (pure
-    // carried-over IO that grows with table size — round-1 verdict #4)
-    val maskAggs = (0 until nWords).map { w =>
-      coalesce(bit_or(when(col("_woff").isNotNull &&
-        bucket >= w * 64 && bucket < (w + 1) * 64,
-        call_function("shiftleft", lit(1L), bucket - lit(w * 64)))), lit(0L))
-        .as(s"mask$w")
-    }
-    // job descriptions: free attribution in the Spark UI / listeners
-    spark.sparkContext.setJobDescription(s"graft b$batchId: keyed stats scan")
-    val planRow = keyed.agg(
-      coalesce(sum(col("_n")), lit(0L)).as("n"),
-      (Seq(
-        coalesce(sum(col("_rows")), lit(0L)).as("rows"),
-        greatest(max(col("_woff")), max(col("_nsoff"))).as("maxOff"),
-        coalesce(sum(col("_noops")), lit(0L)).as("noops"),
-        count(col("_woff")).as("winners"),
-        appliedAgg.as("applied")
-      ) ++ maskAggs): _*
-    ).collect()(0)
-    val eventsIn = planRow.getLong(0)
-    val watchedRows = planRow.getLong(1)
-    val maxOff = Option(planRow.get(2))
-      .map(d => Offset.decode(d.asInstanceOf[java.math.BigDecimal]))
-    val noops = planRow.getLong(3)
-    // every decoded event is a row op or a DDL (the accept filter admits
-    // nothing else), so the DDL count is derived — one fewer conditional
-    // sum evaluated per event in the keyed scan
-    val winners = planRow.getLong(4)
-    val applied = planRow.getLong(5)
-    val nDdl = eventsIn - watchedRows
-    val affected: Set[Int] = (0 until nWords).flatMap { w =>
-      val mask = planRow.getLong(6 + w)
-      (0 until 64).filter(b => (mask & (1L << b)) != 0).map(_ + w * 64)
-    }.toSet
-    // rare path: fetch DDL payloads in stream order (op='DDL' prunes via
-    // parquet row-group stats, so DDL-free batches never pay a scan here).
-    // Re-delivered DDLs — offset at or below the lake's applied bound —
-    // are dropped HERE, the same LWW rule rows follow: they are already
-    // folded into the committed schema history, and filtering them is what
-    // lets the fold treat an `add` of a renamed-away name as the genuine
-    // re-add it is (a replayed pre-rename add can only arrive below the
-    // bound) instead of relying on shape-idempotence that conflates the
-    // two (round-5 review).
-    val ddls: Seq[DdlChange] =
-      if (nDdl == 0) Nil
-      else {
-        val fresh = snap.lastOffset.map(Offset.encode) match {
-          case Some(last) =>
-            decoded(batch).filter(col("op") === Op.Ddl &&
-              Offset.encExpr(col("offset")) > lit(last))
-          case None => decoded(batch).filter(col("op") === Op.Ddl)
-        }
-        val raw = fresh
-          .select(col("offset"), col("ddl"))
-          .collect()
-          .sortBy(r => Offset.fromRow(r.getStruct(0)))
-          .map(_.getStruct(1))
-          .map(d => DdlChange(d.getString(0), d.getString(1), d.getString(2), d.getString(3)))
-        if (spec.camelize) // P3: source column names land camelCased
-          raw.map(d => d.copy(col = SchemaEvolution.snakeToCamel(d.col),
-            // a rename's TARGET name (toType) is a column name too
-            toType = if (d.kind == "rename_column")
-              SchemaEvolution.snakeToCamel(d.toType) else d.toType))
-        else raw.toSeq
-      }
+    val decodedBatch = decoded(batch)
+    val stats = BatchStats.scan(spark, decodedBatch, snap, lake.nBuckets,
+      spec.camelize, batchId)
     val tStats = (System.nanoTime() - t0) / 1000000L
 
     // schema evolution resolved BEFORE the merge plan (SURVEY.md §4.4.7).
@@ -571,7 +302,7 @@ object CdcIngestJob {
     // The version history anchors field-id minting (dropped ids never
     // reused); it is parsed only when the batch actually carries DDLs.
     val curSchema = lake.currentSchema(snap)
-    val newSchema = SchemaEvolution.fold(curSchema, ddls, snap.schemas.values)
+    val newSchema = SchemaEvolution.fold(curSchema, stats.ddls, snap.schemas.values)
     val evolved = newSchema != curSchema
     val (schemas, schemaVersion) =
       if (evolved) (snap.schemas + ((snap.schemaVersion + 1).toString -> newSchema.json),
@@ -580,77 +311,41 @@ object CdcIngestJob {
     val snapForMerge = snap.copy(schemas = schemas, schemaVersion = schemaVersion)
 
     // The winner build side comes straight out of the cached keyed scan —
-    // no second aggregation job. The winner count (already collected above)
-    // is the exact dedup lineage metric AND the broadcast decision: winner
+    // no second aggregation job (BatchStats.winOff). The winner count is
+    // the exact dedup lineage metric AND the broadcast decision: winner
     // offsets ship to every executor (full images never shuffle) only when
     // the key set fits executor memory; past the limit the merge falls back
     // to the direct shuffled LWW reduction (one image shuffle, zero
     // broadcast state — the only safe shape at replay-scale cardinality).
-    val winOff: Option[DataFrame] =
-      if (winners == 0) None
-      else Some(keyed.filter(col("_woff").isNotNull).select(col("_woff")))
-    val useBroadcast = winners <= broadcastKeyLimit
+    val useBroadcast = stats.winners <= broadcastKeyLimit
 
     // project row events to merge shape against the (possibly evolved)
-    // schema. Each lake column decodes from its SOURCE-name candidates
-    // (current name, then rename aliases; snake forms under camelize —
-    // SchemaEvolution.sourceNames): a name that resolves to the canonical
-    // base payload reads the typed after-image field, anything else probes
-    // the extras map — so renamed base columns keep reading the image and
-    // events emitted before a rename keep decoding through the alias
-    // chain. NOT no-op-filtered: winners are fetched by globally-unique
-    // offset on BOTH merge paths and the build side excludes no-ops, so
-    // the semi-join drops them for free and this scan never evaluates the
-    // per-field image compare at all.
-    val baseSet = graft.model.Schemas.repoFile.fieldNames.toSet
-    // a source name CLAIMED by a live column's own (primary) name must not
-    // feed any OTHER column through an alias probe: after a genuine re-add
-    // of a renamed-away name, events carry the NEW column's values under
-    // that name, and the renamed column's alias would otherwise swallow
-    // them (its alias chain stays for resolving OLD file versions only)
-    val claimedPrimary: Set[String] = SchemaEvolution.dataColumns(newSchema)
-      .flatMap(g => if (spec.camelize)
-        Seq(g.name, SchemaEvolution.camelToSnake(g.name)) else Seq(g.name))
-      .toSet
-    val updates = decoded(batch)
-      .filter(isRow)
-      .select(
-        keyCols.map(col) ++
-        SchemaEvolution.dataColumns(newSchema)
-          .filterNot(f => keyCols.contains(f.name))
-          .map { f =>
-            val own: Set[String] = Set(f.name) ++
-              (if (spec.camelize) Set(SchemaEvolution.camelToSnake(f.name))
-               else Set.empty[String])
-            val names = SchemaEvolution.sourceNames(f, spec.camelize)
-              .filterNot(n => !own(n) && claimedPrimary(n))
-            names.find(baseSet.contains) match {
-              case Some(src) =>
-                col(s"after.$src").cast(f.dataType).as(f.name)
-              case None =>
-                val probes = names.map(n => element_at(col("extras"), n))
-                (if (probes.size == 1) probes.head
-                 else coalesce(probes: _*)).cast(f.dataType).as(f.name)
-            }
-          } ++
+    // schema (SchemaEvolution.sourceColumns). NOT no-op-filtered: winners
+    // are fetched by globally-unique offset on BOTH merge paths and the
+    // build side excludes no-ops, so the semi-join drops them for free and
+    // this scan never evaluates the per-field image compare at all.
+    val updates = decodedBatch
+      .filter(BatchStats.isRow)
+      .select(keyCols.map(col) ++
+        SchemaEvolution.sourceColumns(newSchema, spec.camelize) ++
         Seq(col("offset"), col("op")): _*)
     spark.sparkContext.setJobDescription(s"graft b$batchId: merge write")
     val result =
       try MergeApply(spark, lake, snapForMerge, newSchema, updates,
-        winOff.orNull, winners, affected, batchId, useBroadcast)
-      finally keyed.unpersist(false)
+        stats.winOff.orNull, stats.winners, stats.affected, batchId, useBroadcast)
+      finally stats.keyed.unpersist(false)
 
     // dedup drops = batch events superseded by a same-key higher-offset
     // event in the same batch (incl. re-delivered duplicate copies) —
     // counted from the winner agg, NOT inferred from `applied` (which
-    // would misattribute already-applied re-deliveries — round-1 verdict).
-    val dedupDrops = watchedRows - noops - winners
+    // would misattribute already-applied re-deliveries).
+    val dedupDrops = stats.watchedRows - stats.noops - stats.winners
 
     // harvest the overlapped fold/split: their replacement files ride the
     // SAME snapshot commit as the batch's deltas, so crash-atomicity is
     // unchanged (a crash strands only uncommitted files, swept by vacuum)
     val willCommit =
-      result.affectedBuckets.nonEmpty || evolved || maxOff.isDefined
+      result.affectedBuckets.nonEmpty || evolved || stats.maxOff.isDefined
     val (compacted, splitRes) = scala.concurrent.Await.result(
       foldFut, scala.concurrent.duration.Duration.Inf)
     // a batch that turned out to be a pure no-op must leave NO trace: the
@@ -671,9 +366,10 @@ object CdcIngestJob {
     if (willCommit) {
       val metrics: Map[String, Long] =
         result.rowsPerBucket.map { case (b, n) => s"bucket.$b.rows" -> n } ++
-        Map("eventsIn" -> eventsIn, "watchedRows" -> watchedRows,
-          "noopDrops" -> noops, "dedupDrops" -> dedupDrops,
-          "applied" -> applied, "ddls" -> nDdl, "mergeLatencyMs" -> latencyMs,
+        Map("eventsIn" -> stats.eventsIn, "watchedRows" -> stats.watchedRows,
+          "noopDrops" -> stats.noops, "dedupDrops" -> dedupDrops,
+          "applied" -> stats.applied, "ddls" -> stats.nDdl,
+          "mergeLatencyMs" -> latencyMs,
           "statsMs" -> tStats, "writeMs" -> result.mergeMs,
           "compactMs" -> compactMs,
           "affectedBuckets" -> result.affectedBuckets.size.toLong,
@@ -681,23 +377,22 @@ object CdcIngestJob {
           "compactedRows" -> compacted.rows,
           "splitRows" -> splitRes.rows)
       // the file-list delta is stamped here, where it is known exactly:
-      // commit then persists O(touched buckets) of manifest, never the
-      // full O(table) file list (round-3 verdict #1)
+      // commit then persists O(touched buckets) of manifest
       val d = MergeApply.fileListDelta(snap, plan, spec.maxCompactBuckets,
         compacted, splitRes, result.newFiles)
       lake.commit(GraftLake.Snapshot(
         id = snap.id + 1, batchId = batchId,
         schemas = schemas, schemaVersion = schemaVersion,
         files = d.files,
-        lastOffset = (maxOff.toSeq ++ snap.lastOffset.toSeq)
+        lastOffset = (stats.maxOff.toSeq ++ snap.lastOffset.toSeq)
           .sorted.lastOption,
         metrics = metrics ++ d.metrics, parentId = snap.id, lineage = lineage,
         nBuckets = lake.nBuckets,
         addedFiles = d.addedFiles, removedPaths = d.removedPaths))
       lake.expire(spec.expireKeep)
     }
-    BatchMetrics(batchId, eventsIn, watchedRows, noops,
-      dedupDrops, applied, nDdl, latencyMs,
+    BatchMetrics(batchId, stats.eventsIn, stats.watchedRows, stats.noops,
+      dedupDrops, stats.applied, stats.nDdl, latencyMs,
       result.affectedBuckets.size, replayedSkip = false,
       statsMs = tStats, writeMs = result.mergeMs,
       commitMs = (System.nanoTime() - tCommit0) / 1000000L,
@@ -720,25 +415,23 @@ object CdcIngestJob {
     lakes.foreach(_.init(graft.model.Schemas.targetBase))
     // D10: identity gate BEFORE any offsets resolve or state mutates —
     // the reference rejects unknown clients at registration time
-    cfg.clientId.foreach(id => lakes.foreach(_.checkClient(id)))
+    cfg.clientId.foreach(id => lakes.foreach(_.subscribers.checkClient(id)))
     val lineage = checkpointLineage(cfg.checkpointDir)
     // orphan sweep ONCE at startup — the only moment fresh orphans can
     // exist (a crash of the PREVIOUS process between writeData and the
-    // snapshot rename). Per-commit retention is incremental and never
-    // lists the data dir (round-3 verdict #1). Skipped under a fresh
+    // snapshot rename); per-commit retention never lists the data dir.
+    // Skipped under a fresh
     // FOREIGN writer lease — another live stream's in-flight batch holds
     // uncommitted files the sweep would destroy; our OWN stale lease (a
     // crash-restart resumes the same checkpoint lineage) never blocks.
     // The lease is then taken immediately and renewed per batch.
     lakes.foreach { lk =>
-      if (lk.liveWriter(lineage).isEmpty) lk.vacuum(lineage)
-      lk.renewLease(lineage)
+      if (lk.subscribers.liveWriter(lineage).isEmpty) lk.vacuum(lineage)
+      lk.subscribers.renewLease(lineage)
     }
     // ONE pruned feed-range scan per job start, shared by every
     // subscription's resume guard and the tombstone horizon
-    val range: Option[(Offset, Offset)] =
-      try Some(feedOffsetRange(spark, cfg.feedDir))
-      catch { case _: Throwable => None }
+    val range = feedRangeIfAny(spark, cfg.feedDir)
     val fromPos = specs.indices.map(i => resolveStart(spark, cfg, lakes(i), range))
     // tombstone GC horizon = the retained feed's minimum offset at job
     // start (the O3 bound; trimming during the run only raises the true
@@ -754,35 +447,30 @@ object CdcIngestJob {
         // this subscriber visible to `pruneDeadClients` (the reference
         // watches registered clients and prunes dead ones —
         // BinglogBaseActor.java:139-152); O(1), off the data path
-        cfg.clientId.foreach(cid => lakes.foreach(_.heartbeat(cid)))
+        cfg.clientId.foreach(cid => lakes.foreach(_.subscribers.heartbeat(cid)))
         // writer lease: one tiny overwrite per (lake, batch) keeps the
         // full-sweep vacuum fenced off while this stream is live
-        lakes.foreach(_.renewLease(lineage))
-        if (specs.size == 1) {
-          applyTableBatch(spark, lakes(0), specs(0), df, id, fromPos(0),
-            lineage, cfg.broadcastKeyLimit, horizon)
-          ()
-        } else {
+        lakes.foreach(_.subscribers.renewLease(lineage))
+        def applyTo(i: Int): BatchMetrics = applyTableBatch(spark, lakes(i),
+          specs(i), df, id, fromPos(i), lineage, cfg.broadcastKeyLimit, horizon)
+        if (specs.size == 1) applyTo(0)
+        else {
           // D7: independent per-table merge pipelines over the shared
           // batch. The batch is persisted ONCE before the fan-out: each
           // table's pipeline scans it ~2× (keyed scan + winner fetch), so
           // T subscriptions would otherwise re-materialize the feed ~2T
-          // times (round-2 verdict #3); with the cache it is one feed
-          // materialization + 2T cheap cached passes, and the per-spec
-          // watched-table filters run over the cached rows.
+          // times; with the cache it is one feed materialization + 2T
+          // cheap cached passes, and the per-spec watched-table filters
+          // run over the cached rows.
           import scala.concurrent.{Await, Future}
           import scala.concurrent.duration.Duration
           import scala.concurrent.ExecutionContext.Implicits.global
           df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val all = Future.traverse(specs.indices.toList) { i =>
-              Future(applyTableBatch(spark, lakes(i), specs(i), df, id,
-                fromPos(i), lineage, cfg.broadcastKeyLimit, horizon))
-            }
-            Await.result(all, Duration.Inf)
-          } finally df.unpersist(false)
-          ()
+          try Await.result(Future.traverse(specs.indices.toList)(i =>
+            Future(applyTo(i))), Duration.Inf)
+          finally df.unpersist(false)
         }
+        ()
       }
     val query = writer.start()
     // release the writer lease on graceful termination so maintenance can
@@ -794,13 +482,13 @@ object CdcIngestJob {
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
         if (e.id == query.id) {
-          lakes.foreach(_.releaseLease(lineage))
+          lakes.foreach(_.subscribers.releaseLease(lineage))
           spark.streams.removeListener(this)
         }
     })
     // listener added after start(): if the query already finished (tiny
     // AvailableNow feeds), the event predates the listener — release now
-    if (!query.isActive) lakes.foreach(_.releaseLease(lineage))
+    if (!query.isActive) lakes.foreach(_.subscribers.releaseLease(lineage))
     query
   }
 
@@ -825,11 +513,10 @@ object CdcIngestJob {
       trigger: Trigger = Trigger.AvailableNow(),
       onRestart: (Int, Throwable) => Unit = (_, _) => ()): Int = {
     // progress = the SUM of every subscribed lake's snapshot id (ids are
-    // monotonic, so the sum advances iff ANY table advanced — a max would
-    // mask one table's progress behind another's larger id, and the head
-    // alone ignored every other table in a multi-table config; round-5
-    // fifth review). A lake that can't be probed mid-failure reads as
-    // no-progress rather than masking the stream's own error.
+    // monotonic, so the sum advances iff ANY table advanced; a max would
+    // mask one table's progress behind another's larger id). A lake that
+    // can't be probed mid-failure reads as no-progress rather than
+    // masking the stream's own error.
     def lakeTip(): Long = cfg.specs.map { s =>
       try new GraftLake(s.lakeRoot, s.nBuckets).latest().map(_.id).getOrElse(-1L)
       catch { case scala.util.control.NonFatal(_) => -1L }
@@ -891,37 +578,26 @@ object CdcIngestJob {
       if (target > floor)
         spark.conf.set(splitKey,
           math.min(target, 128L * 1024 * 1024).toString)
-      replayBatchInner(spark, cfg, chunkFiles, spec, lake)
+      // lazy: only a resume guard or a fold reads the range, and a fresh
+      // LAST_POS replay has neither
+      lazy val range = feedRangeIfAny(spark, cfg.feedDir)
+      val fromPos = resolveStart(spark, cfg, lake, range)
+      val feed = FeedReader.readBatch(spark, cfg.feedDir)
+      val batches =
+        if (chunkFiles <= 0) Seq(feed)
+        else {
+          val (lo, hi) = range.getOrElse(feedOffsetRange(spark, cfg.feedDir)) match {
+            case (a, b) => (a.fileIdx, b.fileIdx)
+          }
+          (lo to hi by chunkFiles.toLong).map(start => feed.filter(
+            col("offset.fileIdx") >= start &&
+              col("offset.fileIdx") <= math.min(start + chunkFiles - 1, hi)))
+        }
+      batches.map { b =>
+        val nextBatch = lake.latest().map(_.batchId).getOrElse(-1L) + 1
+        applyTableBatch(spark, lake, spec, b, nextBatch, fromPos,
+          lineage = "", cfg.broadcastKeyLimit, range.map(_._1))
+      }.last
     } finally spark.conf.set(splitKey, prevSplit)
-  }
-
-  private def replayBatchInner(spark: SparkSession, cfg: IngestConfig,
-      chunkFiles: Int, spec: TableSpec, lake: GraftLake): BatchMetrics = {
-    // lazy: only a resume guard or a fold reads the range, and a fresh
-    // LAST_POS replay has neither
-    lazy val range: Option[(Offset, Offset)] =
-      try Some(feedOffsetRange(spark, cfg.feedDir))
-      catch { case _: Throwable => None }
-    val fromPos = resolveStart(spark, cfg, lake, range)
-    lazy val horizon: Option[Offset] = range.map(_._1)
-    def nextBatch = lake.latest().map(_.batchId).getOrElse(-1L) + 1
-    val feed = FeedReader.readBatch(spark, cfg.feedDir)
-    if (chunkFiles <= 0)
-      applyTableBatch(spark, lake, spec, feed, nextBatch, fromPos,
-        lineage = "", cfg.broadcastKeyLimit, horizon)
-    else {
-      val (lo, hi) = range.getOrElse(feedOffsetRange(spark, cfg.feedDir)) match {
-        case (a, b) => (a.fileIdx, b.fileIdx)
-      }
-      var last: BatchMetrics = null
-      (lo to hi by chunkFiles.toLong).foreach { start =>
-        val end = math.min(start + chunkFiles - 1, hi)
-        val chunk = feed.filter(
-          col("offset.fileIdx") >= start && col("offset.fileIdx") <= end)
-        last = applyTableBatch(spark, lake, spec, chunk, nextBatch, fromPos,
-          lineage = "", cfg.broadcastKeyLimit, horizon)
-      }
-      last
-    }
   }
 }

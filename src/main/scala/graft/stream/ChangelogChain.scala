@@ -85,10 +85,10 @@ object ChangelogChain {
       maxCompactBuckets: Int = 16, expireKeep: Int = 50,
       bootstrapChunkBuckets: Int = 0,
       maxBootstrapChunksPerCall: Int = Int.MaxValue): SyncResult = {
-    clientId.foreach(src.checkClient)
+    clientId.foreach(src.subscribers.checkClient)
     val srcSnap = src.latest().getOrElse(
       throw new IllegalStateException(s"source lake ${src.root} is empty"))
-    clientId.foreach(src.heartbeat)
+    clientId.foreach(src.subscribers.heartbeat)
     val dstSnap = dst.latest().getOrElse(dst.init(src.currentSchema(srcSnap)))
     val lineage = lineageFor(src)
     val from: Option[Long] =
@@ -166,7 +166,7 @@ object ChangelogChain {
     }
     // writer lease on the destination: fences the full-sweep vacuum off
     // uncommitted files until their commit lands
-    dst.renewLease(lineage)
+    dst.subscribers.renewLease(lineage)
     val result = from match {
       case Some(f) =>
         val next = step(dstSnap, srcSnap,
@@ -196,7 +196,7 @@ object ChangelogChain {
     // the new files are referenced now — release eagerly so a
     // stop-then-vacuum needn't wait out the TTL (a crashed sync leaves its
     // lease to age out, which is exactly the fence stranded files need)
-    dst.releaseLease(lineage)
+    dst.subscribers.releaseLease(lineage)
     result
   }
 

@@ -1,6 +1,6 @@
 package graft.stream
 
-import graft.table.GraftLake
+import graft.table.{GraftLake, MetaStore, SchemaEvolution}
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
@@ -99,10 +99,9 @@ object ChangelogStreamSource {
     * the source) would give the source a NEWER schema than the plan —
     * every batch then dies on the runner's positional-arity assert
     * instead of this source's crafted evolution restart remedy. Keyed by
-    * the FileSystem-qualified root ([[normRoot]] — `file:/x` and `/x`
-    * address the same pin) and CONSUMED by the source constructor
-    * (removed on read), so the map stays bounded by in-flight load()s
-    * (round-5 advice). Last analysis wins: two concurrent load()s on the
+    * the FileSystem-qualified root ([[normRoot]]) and CONSUMED by the
+    * source constructor (removed on read), so the map stays bounded by
+    * in-flight load()s. Last analysis wins: two concurrent load()s on the
     * SAME lake straddling a DDL keep only the newer analysis — the older
     * query fails its first batch on the runner's schema check, exactly as
     * with no cache, and a fresh load() resolves it. */
@@ -129,8 +128,7 @@ object ChangelogStreamSource {
   }
 
   /** FileSystem-qualified form of a lake root — the [[analyzedIds]] key,
-    * so `file:/x` and `/x` (or a trailing slash) address the same pin
-    * (round-5 advice). */
+    * so `file:/x` and `/x` (or a trailing slash) address the same pin. */
   private[stream] def normRoot(root: String): String = {
     val p = new org.apache.hadoop.fs.Path(root)
     try p.getFileSystem(GraftLake.hadoopConf()).makeQualified(p).toString
@@ -148,7 +146,7 @@ final class ChangelogStreamSource(spark: SparkSession,
   private val clientId = opt(parameters, "clientId")
   // fail-closed on a typo'd mode: "ful"/"true"/"off" silently selecting
   // tail-from-now would skip the bootstrap and lose every pre-existing
-  // key downstream with no error anywhere (round-5 review)
+  // key downstream with no error anywhere
   private val bootstrapFull =
     opt(parameters, "bootstrap").map(_.trim.toLowerCase) match {
       case None | Some("full") => true
@@ -167,14 +165,13 @@ final class ChangelogStreamSource(spark: SparkSession,
     * bootstrap is one full-state read regardless. */
   private val maxSnapshotsPerTrigger: Option[Long] =
     numOpt(parameters, "maxSnapshotsPerTrigger", _.toLongOption).map { n =>
-      // the Int bound keeps ReadLimit.maxFiles(n.toInt) from silently
-      // overflowing negative (round-5 advice)
+      // the Int bound keeps ReadLimit.maxFiles(n.toInt) from overflowing
       require(n >= 1 && n <= Int.MaxValue,
         s"maxSnapshotsPerTrigger must be in [1, ${Int.MaxValue}] (got $n)")
       n
     }
 
-  /** Chunked bootstrap (round-5 verdict #1): with
+  /** Chunked bootstrap: with
     * `.option("bootstrapBuckets", k)`, a full bootstrap is served as
     * ceil(nBuckets / k) successive micro-batches of ≤ k source bucket
     * ranges of the PINNED base snapshot's state instead of ONE uncapped
@@ -194,7 +191,7 @@ final class ChangelogStreamSource(spark: SparkSession,
     * the runner doesn't hand `latestOffset` a start offset. */
   @volatile private var lastPlanned: Option[Long] = None
 
-  clientId.foreach(lake.checkClient) // D10: gate at subscription start
+  clientId.foreach(lake.subscribers.checkClient) // D10: gate at subscription start
 
   /** The snapshot the ANALYZED plan's schema came from (the provider's
     * [[ChangelogStreamSource.analyzedIds]] record — a DDL between
@@ -217,8 +214,7 @@ final class ChangelogStreamSource(spark: SparkSession,
   /** The run's PERSISTED base: `(base snapshot id, bootstrap chunk
     * count)`, written once under the checkpoint's source metadata dir at
     * FIRST source creation and read back by every later creation (the
-    * standard FileStreamSource metadata seam — round-5 advice, medium).
-    * Two consumers:
+    * FileStreamSource metadata seam). Two consumers:
     *  - `bootstrap=none`: the tail base. Without the pin, a crash after
     *    batch 0's offset was logged but before it committed re-planned
     *    `getBatch(None, E0)` against a NEW source whose creation-time tip
@@ -238,32 +234,12 @@ final class ChangelogStreamSource(spark: SparkSession,
     if (metadataPath == null || metadataPath.isEmpty) (baseSnap.id, wantChunks)
     else {
       val p = new org.apache.hadoop.fs.Path(metadataPath, "graft-source-base")
-      val fs = p.getFileSystem(GraftLake.hadoopConf())
-      def read(): Option[(Long, Int)] =
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val txt =
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8).trim
-            finally in.close()
-          txt.split("\\s+").toSeq match {
-            case Seq(b, k) => b.toLongOption.flatMap(bv =>
-              k.toIntOption.map(kv => (bv, kv)))
-            case _ => None // blank/torn write reads as absent
-          }
-        }
-      read().getOrElse {
-        fs.mkdirs(p.getParent)
-        val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-          s".graft-source-base-${java.util.UUID.randomUUID()}")
-        val os = fs.create(tmp, true)
-        try os.write(s"${baseSnap.id} $wantChunks".getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally os.close()
-        if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-        read().getOrElse((baseSnap.id, wantChunks))
-      }
+      // a blank/torn write reads as absent and is published again
+      MetaStore.at(p).writeOnce(p, _.split("\\s+").toSeq match {
+        case Seq(b, k) => b.toLongOption.flatMap(bv =>
+          k.toIntOption.map(kv => (bv, kv)))
+        case _ => None
+      })(s"${baseSnap.id} $wantChunks")
     }
   }
 
@@ -289,8 +265,8 @@ final class ChangelogStreamSource(spark: SparkSession,
   }
 
   override def getOffset: Option[OffsetV1] =
-    // defense in depth (round-5 advice): the v1 path honors the same
-    // chunking + admission cap as latestOffset instead of the raw tip
+    // defense in depth: the v1 path honors the same chunking +
+    // admission cap as latestOffset instead of the raw tip
     nextEnd(lastPlanned).orElse(lastPlanned).map(LongOffset(_))
 
   /** Admission-controlled next window end (the path the runner takes once
@@ -331,8 +307,7 @@ final class ChangelogStreamSource(spark: SparkSession,
       case Some(s) => Some(s)
       // bootstrap=none tails from the PERSISTED base, not this source
       // instance's creation-time tip: a re-planned batch 0 after a crash
-      // must re-serve exactly the originally planned window (round-5
-      // advice, medium — silent loss of (base, E0] otherwise)
+      // must re-serve exactly the originally planned window
       case None if !bootstrapFull => Some(math.min(persistedBaseId, endId))
       case None => None
     }
@@ -357,8 +332,7 @@ final class ChangelogStreamSource(spark: SparkSession,
           "last committed window")
     val window = fromId match {
       case Some(f) if f >= endId => // no new window (tail probe overlap)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        GraftLake.emptyFrame(spark, schema)
       case Some(f) => lake.changesBetween(spark, f, endId)
       case None => // net change from empty = full state incl. tombstones
         lake.read(spark, endSnap, includeTombstones = true)
@@ -386,31 +360,20 @@ final class ChangelogStreamSource(spark: SparkSession,
     conformAndShim(window, baseState.schemaVersion)
   }
 
-  /** Align an older-version window up to the run's schema (resolve each
-    * run-schema field in the window's version by field id / alias chain —
-    * renames keep serving, re-adds after a drop correctly read null),
-    * then compile it behind one streaming leaf in positional parity with
-    * the declared schema (the runner aliases the batch plan's output to
-    * the source attributes by POSITION). */
+  /** Align an older-version window up to the run's schema
+    * ([[SchemaEvolution.alignTo]]), then compile it behind one streaming
+    * leaf in positional parity with the declared schema (the runner
+    * aliases the batch plan's output to the source attributes by POSITION). */
   private def conformAndShim(window: DataFrame, version: Int): DataFrame = {
     val conformed =
       if (version == baseSnap.schemaVersion) window
-      else {
-        val vSchema = lake.schemaOf(baseSnap, version)
-        window.select(schema.fields.map { f =>
-          graft.table.SchemaEvolution.resolveIn(f, vSchema) match {
-            case Some(vf) => col(vf.name).cast(f.dataType).as(f.name)
-            case None => org.apache.spark.sql.functions.lit(null)
-              .cast(f.dataType).as(f.name)
-          }
-        }.toSeq: _*)
-      }
+      else SchemaEvolution.alignTo(window, lake.schemaOf(baseSnap, version), schema)
     StreamingShim.asStreamingBatch(
       conformed.select(schema.fieldNames.map(col).toSeq: _*))
   }
 
   override def commit(end: OffsetV1): Unit =
-    clientId.foreach(lake.heartbeat)
+    clientId.foreach(lake.subscribers.heartbeat)
 
   override def stop(): Unit = ()
 }

@@ -1,6 +1,9 @@
 package graft.table
 
 import graft.model.DdlChange
+import graft.model.Schemas.{keyCols, repoFile}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, col, element_at, lit}
 import org.apache.spark.sql.types._
 
 /** DDL-driven schema evolution — the Spark analog of the reference's
@@ -13,7 +16,7 @@ import org.apache.spark.sql.types._
   * (SURVEY.md §4.4.7). Application is idempotent — a replayed DDL (at-least-
   * once feed) is a no-op.
   *
-  * '''Field identity (round-5).''' The reference's catalog refresh makes
+  * '''Field identity.''' The reference's catalog refresh makes
   * ANY schema change — add, widen, drop, rename — visible to its decode
   * path; a lake format must additionally keep OLD data files readable
   * under the new schema. Columns added by DDL therefore carry a stable
@@ -108,6 +111,19 @@ object SchemaEvolution {
     }
   }
 
+  /** `df`, read under file version `v`, projected onto `target`: each
+    * target field is its [[resolveIn]] match in `v` cast to the target
+    * type, or null when it has none — added columns read null, widened
+    * types cast, renames resolve by field id (legacy id-less versions by
+    * the alias chain), and a re-added name misses its dropped ancestor. */
+  def alignTo(df: DataFrame, v: StructType, target: StructType): DataFrame =
+    df.select(target.fields.map { f =>
+      resolveIn(f, v) match {
+        case Some(vf) => col(vf.name).cast(f.dataType).as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
+      }
+    }.toSeq: _*)
+
   /** Every source name a lake column's value may arrive under in the feed
     * envelope, newest first: the current name, then rename aliases; a
     * camelizing subscription (P3) also probes the snake form of each. */
@@ -115,6 +131,32 @@ object SchemaEvolution {
     val names = f.name +: aliasesOf(f)
     (if (camelize) names.flatMap(n => Seq(camelToSnake(n), n)) else names)
       .distinct
+  }
+
+  /** The decoded feed envelope's values for `schema`'s non-key data
+    * columns. Each decodes from its [[sourceNames]]: a base-payload name
+    * reads the typed after-image field, any other probes the extras map,
+    * so renamed columns and pre-rename events keep decoding. A name
+    * CLAIMED by a live column's own (primary) name feeds no OTHER column
+    * through an alias: after a genuine re-add of a renamed-away name,
+    * events carry the NEW column's values under it (the renamed column's
+    * alias chain stays for resolving OLD file versions only). */
+  def sourceColumns(schema: StructType, camelize: Boolean): Seq[Column] = {
+    def own(f: StructField): Set[String] =
+      Set(f.name) ++ (if (camelize) Set(camelToSnake(f.name)) else Set.empty)
+    val claimedPrimary = dataColumns(schema).flatMap(own).toSet
+    val baseSet = repoFile.fieldNames.toSet
+    dataColumns(schema).filterNot(f => keyCols.contains(f.name)).map { f =>
+      val names = sourceNames(f, camelize)
+        .filterNot(n => !own(f)(n) && claimedPrimary(n))
+      names.find(baseSet.contains) match {
+        case Some(src) => col(s"after.$src").cast(f.dataType).as(f.name)
+        case None =>
+          val probes = names.map(n => element_at(col("extras"), n))
+          (if (probes.size == 1) probes.head
+           else coalesce(probes: _*)).cast(f.dataType).as(f.name)
+      }
+    }
   }
 
   /** Widenings we accept (MySQL-ish, all loss-free in Catalyst `Cast`).
@@ -174,8 +216,8 @@ object SchemaEvolution {
       // no-ops against an existing engine column (silent data loss) or
       // lands a field the merge projection never produces — every batch
       // then dies on the same AnalysisException, a permanent poison pill
-      // under the supervisor (round-5 fifth review). Fail closed with the
-      // real reason instead; rename already guards its target identically.
+      // under the supervisor. Fail closed with the real reason instead;
+      // rename already guards its target identically.
       require(ddl.col.nonEmpty && !ddl.col.startsWith("_"),
         s"illegal column name '${ddl.col}': '_'-prefixed names are " +
           "reserved for engine columns")
@@ -242,9 +284,9 @@ object SchemaEvolution {
         s"illegal rename target '$nw'")
       // the OLD side needs the same engine-namespace guard: protectedCols
       // only covers the merge keys, so without this a DDL could rename
-      // _offset or _deleted out from under every downstream col() consumer
-      // (round-5 fifth review). Aliases only ever attach to data columns,
-      // so the direct-name check fully covers alias resolution too.
+      // _offset or _deleted out from under every downstream col()
+      // consumer. Aliases only ever attach to data columns, so the
+      // direct-name check fully covers alias resolution too.
       require(!old.startsWith("_"),
         s"cannot rename engine column '$old'")
       if (schema.fieldNames.contains(nw)) {

@@ -76,7 +76,7 @@ class ChainedLakeSpec extends SparkSuite {
 
     // D10 rides the chain: an unregistered chained consumer is refused
     // once the source gates clients
-    src.registerClient("downstream-a")
+    src.subscribers.registerClient("downstream-a")
     intercept[IllegalStateException](
       ChangelogChain.sync(spark, src, dst, clientId = Some("mallory")))
     val r4 = ChangelogChain.sync(spark, src, dst, clientId = Some("downstream-a"))

@@ -453,7 +453,7 @@ class ChangelogStreamSpec extends SparkSuite {
 
     // D10: once a registry exists, an unregistered subscriber id is
     // refused at query start; a registered one subscribes and heartbeats
-    src.registerClient("etl-1")
+    src.subscribers.registerClient("etl-1")
     val exd = intercept[Exception] {
       val q = subscribe(srcRoot, tmp("subcp3d"), new Ledger,
         Map("bootstrap" -> "none", "clientId" -> "nobody"))
@@ -590,7 +590,10 @@ class ChangelogStreamSpec extends SparkSuite {
     val tailCases =
       Seq("bootstrapBuckets:abc", "for:-5", "credit:0", "credit:")
         .map(a => Seq("tail", root, a) -> a.takeWhile(_ != ':')) :+
-        (Seq("tail", root, "clientid:x") -> "unknown argument 'clientid:x'")
+        (Seq("tail", root, "clientid:x") -> "unknown argument 'clientid:x'") :+
+        (Seq("tail", root, "0", "for:1000", "for:30000") ->
+          "unknown argument 'for:30000'") :+
+        (Seq("tail", root, "1", "7", "for:4000") -> "unknown argument '7'")
     // every other verb's numeric arguments take the same check: one
     // malformed value per argument, each error naming its argument
     val (feed, lake, cp) = (tmp("badfeed"), tmp("badlake"), tmp("badcp"))
@@ -616,6 +619,11 @@ class ChangelogStreamSpec extends SparkSuite {
       Seq("rebucket", lake, "0") -> "newN",
       Seq("optimize", lake, "all") -> "maxBucketsPerCommit",
       Seq("expire", lake, "0") -> "keep",
+      Seq("expire", lake, "2", "x") -> "unknown argument 'x'",
+      Seq("log", lake, "extra") -> "unknown argument 'extra'",
+      Seq("replay", feed, lake, "8", "9") -> "unknown argument '9'",
+      Seq("optimize", lake, "4", "5") -> "unknown argument '5'",
+      Seq("frobnicate", lake) -> "unknown verb",
       Seq("changes", lake, "a", "3") -> "fromSnap",
       Seq("changes", lake, "1", "b") -> "toSnap",
       Seq("changes", lake, "1", "3", "x") -> "changes: n ",

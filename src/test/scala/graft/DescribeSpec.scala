@@ -31,7 +31,7 @@ class DescribeSpec extends SparkSuite {
         nBuckets = 8, compactFactor = 1e9, maxDeltaFiles = 1000000))))
     q.awaitTermination()
     val lake = new GraftLake(lakeRoot, 8)
-    lake.registerClient("ops-team")
+    lake.subscribers.registerClient("ops-team")
     val snap = lake.latest().get
 
     // debt rows: the planner's own units in the planner's own order

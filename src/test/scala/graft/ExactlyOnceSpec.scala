@@ -2,7 +2,7 @@ package graft
 
 import graft.feed.{BinlogFeedGen, FeedReader, ReplayOracle}
 import graft.feed.BinlogFeedGen.FeedConfig
-import graft.stream.{CdcIngestJob, IngestConfig}
+import graft.stream.{CdcIngestJob, ChangelogStreamSource, IngestConfig}
 import graft.table.GraftLake
 import org.apache.spark.sql.functions._
 
@@ -31,10 +31,14 @@ class ExactlyOnceSpec extends SparkSuite {
     val lake = new GraftLake(lakeRoot, 8)
     lake.init(graft.model.Schemas.targetBase)
     val batch = FeedReader.readBatch(spark, feedDir)
-    val m1 = CdcIngestJob.applyBatch(spark, lake, ing, batch, batchId = 0)
+    val m1 = CdcIngestJob.applyTableBatch(spark, lake, ing.specs.head, batch,
+      batchId = 0, fromPos = None, lineage = "",
+      broadcastKeyLimit = ing.broadcastKeyLimit)
     assert(!m1.replayedSkip && m1.applied > 0)
     val snapAfter = lake.latest().get
-    val m2 = CdcIngestJob.applyBatch(spark, lake, ing, batch, batchId = 0)
+    val m2 = CdcIngestJob.applyTableBatch(spark, lake, ing.specs.head, batch,
+      batchId = 0, fromPos = None, lineage = "",
+      broadcastKeyLimit = ing.broadcastKeyLimit)
     assert(m2.replayedSkip, "replayed batch must be fenced")
     assert(lake.latest().get.id == snapAfter.id, "no new snapshot on replay")
   }
@@ -103,10 +107,14 @@ class ExactlyOnceSpec extends SparkSuite {
     lake.init(graft.model.Schemas.targetBase)
     val batch = FeedReader.readBatch(spark, feedDir)
     // batch 0: everything; batch 1: a re-delivered slice (lower offsets)
-    CdcIngestJob.applyBatch(spark, lake, ing, batch, batchId = 0)
+    CdcIngestJob.applyTableBatch(spark, lake, ing.specs.head, batch,
+      batchId = 0, fromPos = None, lineage = "",
+      broadcastKeyLimit = ing.broadcastKeyLimit)
     val (_, before) = tableState(lakeRoot)
     val slice = batch.filter(col("offset.fileIdx") <= 3)
-    val m = CdcIngestJob.applyBatch(spark, lake, ing, slice, batchId = 1)
+    val m = CdcIngestJob.applyTableBatch(spark, lake, ing.specs.head, slice,
+      batchId = 1, fromPos = None, lineage = "",
+      broadcastKeyLimit = ing.broadcastKeyLimit)
     assert(!m.replayedSkip)
     val (_, after) = tableState(lakeRoot)
     assert(after == before, "re-delivered lower-offset events must not change state")
@@ -127,6 +135,26 @@ class ExactlyOnceSpec extends SparkSuite {
     assert(CdcIngestJob.checkpointLineage(cp) == id)
   }
 
+  test("a blank persisted changelog-source base (torn write) reads as " +
+    "absent and is published again, then read back unchanged") {
+    val root = tmp("sb-lake"); val meta = tmp("sb-meta")
+    val lake = new GraftLake(root, 8)
+    val s0 = lake.init(graft.model.Schemas.targetBase)
+    new java.io.File(meta).mkdirs()
+    val base = java.nio.file.Paths.get(meta, "graft-source-base")
+    java.nio.file.Files.write(base, Array.empty[Byte])
+    def persisted() =
+      new String(java.nio.file.Files.readAllBytes(base), "UTF-8").trim
+    val params = Map("path" -> root, "bootstrap" -> "none")
+    new ChangelogStreamSource(spark, params, meta)
+    assert(persisted() == s"${s0.id} 1",
+      "a blank base must be re-published, not adopted")
+    // the lake moves on; a re-created source reads the persisted base back
+    lake.commit(s0.copy(id = s0.id + 1, parentId = s0.id))
+    new ChangelogStreamSource(spark, params, meta)
+    assert(persisted() == s"${s0.id} 1")
+  }
+
   test("a fenced replayed batch reports replayedSkip=true and commits no " +
     "snapshot (the audit trail after a crash-restart must still see it)") {
     val feedDir = tmp("rsfeed"); val lakeRoot = tmp("rslake")
@@ -135,9 +163,13 @@ class ExactlyOnceSpec extends SparkSuite {
     val lake = new GraftLake(lakeRoot, 8)
     lake.init(graft.model.Schemas.targetBase)
     val icfg = IngestConfig(feedDir, lakeRoot, tmp("rscp"), nBuckets = 8)
-    CdcIngestJob.applyBatch(spark, lake, icfg, batch, 0L)
+    CdcIngestJob.applyTableBatch(spark, lake, icfg.specs.head, batch,
+      0L, fromPos = None, lineage = "",
+      broadcastKeyLimit = icfg.broadcastKeyLimit)
     val tip = lake.latest().get.id
-    val m = CdcIngestJob.applyBatch(spark, lake, icfg, batch, 0L)
+    val m = CdcIngestJob.applyTableBatch(spark, lake, icfg.specs.head, batch,
+      0L, fromPos = None, lineage = "",
+      broadcastKeyLimit = icfg.broadcastKeyLimit)
     assert(m.replayedSkip)
     assert(lake.latest().get.id == tip, "a fenced batch must not commit")
   }

@@ -208,13 +208,13 @@ class GraftLakeSpec extends SparkSuite {
     val lake = new GraftLake(lakeRoot, 4)
     lake.init(graft.model.Schemas.targetBase)
     // open check while no registry exists (single-tenant back-compat)
-    lake.checkClient("anyone")
-    assert(lake.registeredClients().isEmpty)
-    lake.registerClient("alice")
-    lake.registerClient("bob")
-    assert(lake.registeredClients() == Set("alice", "bob"))
-    lake.checkClient("alice") // registered → fine
-    intercept[IllegalStateException](lake.checkClient("mallory"))
+    lake.subscribers.checkClient("anyone")
+    assert(lake.subscribers.registeredClients().isEmpty)
+    lake.subscribers.registerClient("alice")
+    lake.subscribers.registerClient("bob")
+    assert(lake.subscribers.registeredClients() == Set("alice", "bob"))
+    lake.subscribers.checkClient("alice") // registered → fine
+    intercept[IllegalStateException](lake.subscribers.checkClient("mallory"))
     // the gate fires BEFORE the stream starts (reference rejects at
     // registration, not first delivery)
     intercept[IllegalStateException] {
@@ -236,21 +236,21 @@ class GraftLakeSpec extends SparkSuite {
     val lakeRoot = tmp("l-reg")
     val lake = new GraftLake(lakeRoot, 4)
     lake.init(graft.model.Schemas.targetBase)
-    lake.registerClient("alice")
+    lake.subscribers.registerClient("alice")
     // publish is rename-to-NEXT-version: at no point between two
     // registrations is the registry absent (the round-3 delete-then-rename
     // had a window where an empty registry meant the gate was OPEN)
-    lake.registerClient("bob")
-    assert(lake.registeredClients() == Set("alice", "bob"))
-    intercept[IllegalStateException](lake.checkClient("mallory"))
+    lake.subscribers.registerClient("bob")
+    assert(lake.subscribers.registeredClients() == Set("alice", "bob"))
+    intercept[IllegalStateException](lake.subscribers.checkClient("mallory"))
     // simulate the torn state the old scheme produced — a crash that left
     // only a temp file: with versioned files the published registry is
     // untouched and the gate stays closed
     val logDir = Paths.get(lakeRoot, "_graft_log")
     Files.write(logDir.resolve(".tmp-clients-torn"),
       "[\"mallory\"]".getBytes)
-    assert(lake.registeredClients() == Set("alice", "bob"))
-    intercept[IllegalStateException](lake.checkClient("mallory"))
+    assert(lake.subscribers.registeredClients() == Set("alice", "bob"))
+    intercept[IllegalStateException](lake.subscribers.checkClient("mallory"))
   }
 
   test("every RETAINED snapshot id stays reconstructable after expiry — " +
@@ -546,9 +546,9 @@ class GraftLakeSpec extends SparkSuite {
     lake.commit(snap(prev, 13))
     intercept[IllegalStateException](other.commit(snap(base, 13)))
     // registry + liveness publish without rename
-    lake.registerClient("alice")
-    assert(lake.registeredClients() == Set("alice"))
-    intercept[IllegalStateException](lake.checkClient("mallory"))
+    lake.subscribers.registerClient("alice")
+    assert(lake.subscribers.registeredClients() == Set("alice"))
+    intercept[IllegalStateException](lake.subscribers.checkClient("mallory"))
     // retention writes its reconstruction anchor via the same seam
     lake.expire(keep = 2)
     assert(snapshotFiles(lakeRoot.stripPrefix("graftnr:")).size == 2)
@@ -562,15 +562,15 @@ class GraftLakeSpec extends SparkSuite {
     BinlogFeedGen.writeFeed(spark, cfg, feedDir)
     val lake = new GraftLake(lakeRoot, 4)
     lake.init(graft.model.Schemas.targetBase)
-    lake.registerClient("alice")
-    lake.registerClient("bob")
-    val regBeat = lake.clientHeartbeats()("alice")
+    lake.subscribers.registerClient("alice")
+    lake.subscribers.registerClient("bob")
+    val regBeat = lake.subscribers.clientHeartbeats()("alice")
     // alice subscribes and streams: her heartbeat advances past registration
     val q = CdcIngestJob.runStream(spark, IngestConfig(
       feedDir, lakeRoot, tmp("c-hb"), nBuckets = 4, maxFilesPerTrigger = 5,
       clientId = Some("alice")))
     q.awaitTermination()
-    val beats = lake.clientHeartbeats()
+    val beats = lake.subscribers.clientHeartbeats()
     assert(beats("alice") > regBeat,
       "streaming must advance the subscriber's heartbeat per batch")
     // age bob's beat far past any TTL (deterministic staleness — the prune
@@ -580,14 +580,14 @@ class GraftLakeSpec extends SparkSuite {
       .encodeToString("bob".getBytes)
     Files.write(Paths.get(lakeRoot, "_graft_log", hbBob),
       (System.currentTimeMillis() - 600000L).toString.getBytes)
-    val dead = lake.pruneDeadClients(ttlMs = 300000L)
+    val dead = lake.subscribers.pruneDeadClients(ttlMs = 300000L)
     assert(dead == Set("bob"))
-    assert(lake.registeredClients() == Set("alice"))
-    intercept[IllegalStateException](lake.checkClient("bob"))
-    lake.checkClient("alice")
+    assert(lake.subscribers.registeredClients() == Set("alice"))
+    intercept[IllegalStateException](lake.subscribers.checkClient("bob"))
+    lake.subscribers.checkClient("alice")
     // a pruned-but-alive client just re-registers (advisory gate, not a lock)
-    lake.registerClient("bob")
-    lake.checkClient("bob")
+    lake.subscribers.registerClient("bob")
+    lake.subscribers.checkClient("bob")
   }
 
   test("vacuum is fenced by the writer lease: refused under a fresh " +
@@ -598,7 +598,7 @@ class GraftLakeSpec extends SparkSuite {
     val snap = lake.latest().get
     def orphan(batchId: Long) = writeUncommitted(lake, snap, batchId)
     val orphans = orphan(7777)
-    lake.renewLease("writer-a")
+    lake.subscribers.renewLease("writer-a")
     // a foreign sweep is refused while the lease is fresh — it would
     // delete a mid-batch writer's uncommitted files
     val e = intercept[IllegalStateException](lake.vacuum())
@@ -611,7 +611,7 @@ class GraftLakeSpec extends SparkSuite {
     assert(orphans.forall(f => !Files.exists(Paths.get(f.path))))
     // and a lease past its TTL blocks nobody (the CLI's `force` is ttl 0)
     val orphans2 = orphan(7778)
-    lake.renewLease("writer-b")
+    lake.subscribers.renewLease("writer-b")
     lake.vacuum(leaseTtlMs = 0L)
     assert(orphans2.forall(f => !Files.exists(Paths.get(f.path))))
   }
@@ -644,16 +644,16 @@ class GraftLakeSpec extends SparkSuite {
     val lakeRoot = tmp("l-hb-slash")
     val lake = new GraftLake(lakeRoot, 4)
     lake.init(graft.model.Schemas.targetBase)
-    lake.registerClient("team/etl")
-    val b0 = lake.clientHeartbeats().get("team/etl")
+    lake.subscribers.registerClient("team/etl")
+    val b0 = lake.subscribers.clientHeartbeats().get("team/etl")
     assert(b0.isDefined, "registration must stamp a visible heartbeat")
-    lake.heartbeat("team/etl")
-    assert(lake.clientHeartbeats()("team/etl") >= b0.get)
+    lake.subscribers.heartbeat("team/etl")
+    assert(lake.subscribers.clientHeartbeats()("team/etl") >= b0.get)
     // a live beat means prune keeps the client (this is exactly what broke
     // with raw filenames: the beat landed in an hb-team/ subdirectory the
     // listing never saw, and the live subscriber was evicted)
-    assert(lake.pruneDeadClients(ttlMs = 300000L).isEmpty)
-    lake.checkClient("team/etl")
+    assert(lake.subscribers.pruneDeadClients(ttlMs = 300000L).isEmpty)
+    lake.subscribers.checkClient("team/etl")
     assert(!Files.exists(Paths.get(lakeRoot, "_graft_log", "hb-team")),
       "raw id leaked into the filesystem as a subdirectory")
   }
