@@ -9,39 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint (SURVEY.md §7.2): generate a feed, replay it
-  * into the lake (batch or streaming), inspect the result.
-  *
-  * {{{
-  *   Main gen    <feedDir> <nEvents> <nKeys> [skew] [dupTailFrac] [evolve]
-  *   Main replay <feedDir> <lakeRoot> [nBuckets]      // one-shot batch merge
-  *   Main stream <feedDir> <lakeRoot> <checkpointDir> [maxFilesPerTrigger]
-  *                [continue|lastpos|from:<fileIdx_pos_rowIdx>|gtid:<seqId>]
-  *                [client:<id>] [supervise:<maxRestarts>]  // D9 failover
-  *   Main register <lakeRoot> <clientId>   // D10 identity registry
-  *   Main clients  <lakeRoot> [prune:<ttlSec>]  // D10 liveness / dead-client GC
-  *   Main show   <lakeRoot> [n]
-  *   Main get    <lakeRoot> <repo> <path> [asof:<snapId>] // point lookup
-  *   Main log    <lakeRoot>                 // retained snapshot history
-  *   Main changes <lakeRoot> <fromSnap> <toSnap> [n]  // CDC-out changelog
-  *   Main sync   <srcLake> <dstLake> [client:<id>] [follow:<pollMs>]
-  *                                          // chain a lake off a lake
-  *   Main tail   <lakeRoot> [n] [bootstrap:none] [client:<id>] [for:<ms>]
-  *               [cp:<dir>] [credit:<k>]  // live-follow the changelog
-  *                           // STREAM (readStream format graft-changelog;
-  *                           // credit = max snapshots per micro-batch)
-  *   Main describe <lakeRoot>               // schema history + debt views
-  *   Main metrics <lakeRoot>                // per-snapshot scalar metrics
-  *   Main vacuum <lakeRoot> [force]        // full orphan sweep (O(table));
-  *                                         // refused under a live stream's
-  *                                         // writer lease unless forced
-  *   Main expire <lakeRoot> <keep>         // manual retention trim
-  *   Main rebucket <lakeRoot> <newN>       // offline re-shard (full rewrite)
-  *   Main optimize <lakeRoot> [maxBucketsPerCommit] [feed:<feedDir>]
-  *                            // offline full compaction: fold ALL delta
-  *                            // debt into key-clustered base files;
-  *                            // feed:<dir> = drop tombstones below the
-  *                            // retained feed's minimum offset (O3 bound)
-  * }}}
+  * into the lake (batch or streaming), inspect the result. The verbs and
+  * their arguments are the grammar table [[Main.verbs]].
   *
   * Bucket-count discipline: the (repo,path)→bucket
   * assignment is a pure function of nBuckets, so every command that opens
@@ -97,61 +66,67 @@ object Main {
     new GraftLake(root, GraftLake.storedBuckets(root).getOrElse(orElse))
   private def noLake(root: String): Nothing = sys.error(s"no lake at $root")
 
-  /** One numeric CLI argument, checked before any session starts: its
-    * value when `raw` parses and lies in `[lo, hi]`, else an
-    * IllegalArgumentException naming the verb and the argument. */
-  private def numArg[T](verb: String, name: String, raw: String,
-      parse: String => Option[T], lo: T, hi: T)(implicit ord: Ordering[T]): T =
-    parse(raw).filter(v => ord.gteq(v, lo) && ord.lteq(v, hi))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$verb: $name needs a number in [$lo, $hi] (got '$raw')"))
-  private def intArg(verb: String, name: String, raw: String, lo: Int = 1): Int =
-    numArg(verb, name, raw, _.toIntOption, lo, Int.MaxValue)
-  private def longArg(verb: String, name: String, raw: String, lo: Long = 1L,
-      hi: Long = Long.MaxValue): Long =
-    numArg(verb, name, raw, _.toLongOption, lo, hi)
   /** The first `n` rows of `df` in key order, `content` shown as its sha256. */
   private def showRows(df: DataFrame, n: Int): Unit =
     df.withColumn("sha", sha2(col("content"), 256)).drop("content")
       .orderBy("repo", "path").show(n, truncate = false)
-  /** Rejects `extra`, the arguments a verb has no place for, before any
-    * session starts: a typo or a surplus argument must fail, never run as
-    * if it were absent (an unknown verb throws the same exception). */
-  private def rejectExtra(verb: String, extra: Seq[String], expected: String): Unit =
-    extra.headOption.foreach(a => throw new IllegalArgumentException(
-      s"$verb: unknown argument '$a' (expected $expected)"))
 
-  def main(args: Array[String]): Unit = args.toList match {
-    case "gen" :: feedDir :: n :: k :: rest =>
-      val nl = longArg("gen", "nEvents", n)
-      val nk = intArg("gen", "nKeys", k)
-      val skew = rest.headOption.map(numArg("gen", "skew", _,
-        _.toDoubleOption, 0.0, Double.MaxValue)).getOrElse(0.0)
-      val dup = rest.drop(1).headOption.map(numArg("gen", "dupTailFrac", _,
-        _.toDoubleOption, 0.0, 1.0)).getOrElse(0.0)
+  /** Every verb's grammar, checked by [[Args.parse]] before any session
+    * starts: a typo, a surplus or repeated argument must fail, never run as
+    * if it were absent. */
+  val verbs: Map[String, Verb] = Map(
+    "gen" -> Verb(Seq("feedDir", "nEvents", "nKeys"), Seq("skew", "dupTailFrac"),
+      Seq(Seq("evolve", "evolve-full"))),
+    "replay" -> Verb(Seq("feedDir", "lakeRoot"), Seq("nBuckets")), // one-shot
+    "stream" -> Verb(Seq("feedDir", "lakeRoot", "checkpointDir"), Seq("maxFilesPerTrigger"),
+      Seq(Seq("continue", "lastpos", "from:<fileIdx_pos_rowIdx>", "gtid:<seqId>"),
+        Seq("client:<id>"), Seq("supervise:<maxRestarts>"))), // D9 failover
+    "register" -> Verb(Seq("lakeRoot", "clientId")), // D10 identity registry
+    "clients" -> Verb(Seq("lakeRoot"), kinds = Seq(Seq("prune:<ttlSec>"))),
+    "show" -> Verb(Seq("lakeRoot"), Seq("n")),
+    "get" -> Verb(Seq("lakeRoot", "repo", "path"), kinds = Seq(Seq("asof:<snapId>"))),
+    "log" -> Verb(Seq("lakeRoot")), // retained snapshot history
+    "changes" -> Verb(Seq("lakeRoot", "fromSnap", "toSnap"), Seq("n")), // CDC-out
+    "sync" -> Verb(Seq("srcLake", "dstLake"), // chain a lake off a lake
+      kinds = Seq(Seq("client:<id>"), Seq("follow:<pollMs>"))),
+    "tail" -> Verb(Seq("lakeRoot"), Seq("n"), Seq(Seq("bootstrap:none"),
+      Seq("client:<id>"), Seq("for:<ms>"), Seq("cp:<dir>"), Seq("credit:<k>"),
+      Seq("bootstrapBuckets:<k>"))), // the changelog as a readStream source
+    "describe" -> Verb(Seq("lakeRoot")), // schema history + debt views
+    "metrics" -> Verb(Seq("lakeRoot")), // per-snapshot scalar metrics
+    "vacuum" -> Verb(Seq("lakeRoot"), kinds = Seq(Seq("force"))), // orphan sweep
+    "expire" -> Verb(Seq("lakeRoot", "keep")), // manual retention trim
+    "rebucket" -> Verb(Seq("lakeRoot", "newN")), // offline re-shard
+    "optimize" -> Verb(Seq("lakeRoot"), Seq("maxBucketsPerCommit"),
+      Seq(Seq("feed:<feedDir>")))) // offline full compaction
+
+  def main(argv: Array[String]): Unit = run(Args.parse(argv.toSeq, verbs))
+
+  private def run(a: Args): Unit = a.verb match {
+    case "gen" =>
+      val nl = a.long("nEvents").get
+      val nk = a.int("nKeys").get
+      val skew = a.double("skew").getOrElse(0.0)
+      val dup = a.double("dupTailFrac", hi = 1.0).getOrElse(0.0)
       // `evolve` = add+widen; `evolve-full` adds mid-feed RENAME and DROP
       // too, so the whole DDL surface is drivable from the CLI
-      val evolve = rest.drop(2).headOption.getOrElse("")
-      rejectExtra("gen", rest.drop(2).take(1).filterNot(Set("evolve", "evolve-full")) ++
-        rest.drop(3), "[skew] [dupTailFrac] [evolve|evolve-full]")
-      val ddls = evolve match {
-        case "evolve" => BinlogFeedGen.evolutionDdls(nl)
-        case "evolve-full" => BinlogFeedGen.evolutionDdls(nl) ++ Map(
+      val ddls =
+        if (a.has("evolve-full")) BinlogFeedGen.evolutionDdls(nl) ++ Map(
           (nl * 4 / 5) -> graft.model.DdlChange("rename_column", "size", "", "bytes"),
           (nl * 9 / 10) -> graft.model.DdlChange("drop_column", "lang", "", ""))
-        case _ => Map.empty[Long, graft.model.DdlChange]
-      }
+        else if (a.has("evolve")) BinlogFeedGen.evolutionDdls(nl)
+        else Map.empty[Long, graft.model.DdlChange]
       val cfg = FeedConfig(nl, nk, skew = skew, dupTailFrac = dup,
         ddlAt = ddls)
       val spark = session(feedScans = true)
-      BinlogFeedGen.writeFeed(spark, cfg, feedDir)
-      println(s"[gen] wrote $n events (${k} keys, skew=$skew, dup=$dup, " +
-        s"ddls=${ddls.size}) to $feedDir")
+      BinlogFeedGen.writeFeed(spark, cfg, a("feedDir"))
+      println(s"[gen] wrote $nl events ($nk keys, skew=$skew, dup=$dup, " +
+        s"ddls=${ddls.size}) to ${a("feedDir")}")
       spark.stop()
 
-    case "replay" :: feedDir :: lakeRoot :: rest =>
-      rejectExtra("replay", rest.drop(1), "[nBuckets]")
-      val pinned = rest.headOption.map(intArg("replay", "nBuckets", _))
+    case "replay" =>
+      val (feedDir, lakeRoot) = (a("feedDir"), a("lakeRoot"))
+      val pinned = a.int("nBuckets")
       val spark = session(feedScans = true)
       // an existing lake pins the count; a new one scales it with the
       // feed's row volume unless pinned explicitly (a fixed count makes
@@ -165,36 +140,21 @@ object Main {
       println(s"[replay] nBuckets=$nBuckets $m")
       spark.stop()
 
-    case "stream" :: feedDir :: lakeRoot :: cp :: rest0 =>
-      val clientId = rest0.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
+    case "stream" =>
+      val lakeRoot = a("lakeRoot")
       // D9: supervise:<n> relaunches the stream from its checkpoint on
       // failure, up to n consecutive unproductive restarts (the reference
       // client's reconnect-and-re-register failover loop)
-      val supervise = rest0.find(_.startsWith("supervise:"))
-        .map(a => intArg("stream", "supervise:", a.stripPrefix("supervise:"), lo = 0))
-      val rest = rest0.filterNot(s =>
-        s.startsWith("client:") || s.startsWith("supervise:"))
-      // positional args are (maxFilesPerTrigger, mode) but mode tokens are
-      // recognizable fixed strings, so `stream feed lake cp lastpos` (no
-      // trigger size) parses as a mode, not a NumberFormatException
-      def isMode(s: String) = s == "continue" || s == "lastpos" ||
-        s.startsWith("from:") || s.startsWith("gtid:")
-      val (modeArgs, numArgs) = rest.partition(isMode)
-      rejectExtra("stream", numArgs.drop(1) ++ modeArgs.drop(1),
-        "at most one [maxFilesPerTrigger] and one mode")
-      val mft = numArgs.headOption.map(intArg("stream", "maxFilesPerTrigger", _))
-        .getOrElse(8)
-      val mode = modeArgs.headOption.getOrElse("lastpos") match {
-        case "continue" => ResumeMode.Continue
-        case s if s.startsWith("from:") => ResumeMode.FromPos(Offset.parse(s.stripPrefix("from:")))
-        case s if s.startsWith("gtid:") => ResumeMode.FromGtid(s.stripPrefix("gtid:"))
-        case _ => ResumeMode.LastPos
-      }
+      val supervise = a.int("supervise:", lo = 0)
+      val mft = a.int("maxFilesPerTrigger").getOrElse(8)
+      val mode = a.get("from:").map(p => ResumeMode.FromPos(Offset.parse(p)))
+        .orElse(a.get("gtid:").map(ResumeMode.FromGtid))
+        .getOrElse(if (a.has("continue")) ResumeMode.Continue else ResumeMode.LastPos)
       val spark = session(feedScans = true)
       val nBuckets = GraftLake.storedBuckets(lakeRoot).getOrElse(32)
-      val icfg = IngestConfig(feedDir, lakeRoot, cp,
+      val icfg = IngestConfig(a("feedDir"), lakeRoot, a("checkpointDir"),
         nBuckets = nBuckets, maxFilesPerTrigger = mft, resumeMode = mode,
-        clientId = clientId)
+        clientId = a.get("client:"))
       supervise match {
         case Some(n) =>
           val r = CdcIngestJob.runSupervised(spark, icfg, maxRestarts = n,
@@ -210,40 +170,35 @@ object Main {
       }
       spark.stop()
 
-    case "register" :: lakeRoot :: clientId :: rest =>
-      rejectExtra("register", rest, "nothing after <clientId>")
+    case "register" =>
       // registry is independent of snapshots: registering must NOT stamp a
       // bucket count onto a lake that hasn't been initialized yet
-      val lake = openLake(lakeRoot)
-      lake.subscribers.registerClient(clientId)
-      println(s"[register] clients at $lakeRoot: " +
+      val lake = openLake(a("lakeRoot"))
+      lake.subscribers.registerClient(a("clientId"))
+      println(s"[register] clients at ${a("lakeRoot")}: " +
         lake.subscribers.registeredClients().toSeq.sorted.mkString(", "))
 
-    case "clients" :: lakeRoot :: rest if rest.size <= 1 =>
-      // a typo'd `prune:` must not silently list without pruning
-      rejectExtra("clients", rest.filterNot(_.startsWith("prune:")), "prune:<sec>")
-      val pruneTtlSec = rest.headOption.map(p => longArg("clients", "prune:",
-        p.stripPrefix("prune:"), lo = 0L, hi = Long.MaxValue / 1000))
-      val lake = openLake(lakeRoot)
+    case "clients" => // D10 liveness; prune:<sec> = dead-client GC
+      val pruneTtlSec = a.long("prune:", lo = 0L, hi = Long.MaxValue / 1000)
+      val lake = openLake(a("lakeRoot"))
       pruneTtlSec.foreach { sec =>
-        val ttlMs = sec * 1000L
-        val dead = lake.subscribers.pruneDeadClients(ttlMs)
+        val dead = lake.subscribers.pruneDeadClients(sec * 1000L)
         println(s"[clients] pruned ${dead.size} dead: ${dead.toSeq.sorted.mkString(", ")}")
       }
       Describe.clientLines(lake).foreach(l => println(s"[clients] $l"))
 
-    case "vacuum" :: lakeRoot :: rest if rest.size <= 1 =>
-      // refused while a live stream holds a fresh writer lease (the sweep
-      // would delete a mid-batch commit's uncommitted files); `force`
-      // overrides for a wedged lease the operator KNOWS is dead
-      rejectExtra("vacuum", rest.filterNot(_ == "force"), "force")
-      val lake = openLake(lakeRoot)
-      lake.vacuum(leaseTtlMs = if (rest.contains("force")) 0L else 120000L)
-      println(s"[vacuum] swept orphans at $lakeRoot")
+    case "vacuum" =>
+      // full orphan sweep, O(table); refused while a live stream holds a
+      // fresh writer lease (the sweep would delete a mid-batch commit's
+      // uncommitted files); `force` overrides for a wedged lease the
+      // operator KNOWS is dead
+      val lake = openLake(a("lakeRoot"))
+      lake.vacuum(leaseTtlMs = if (a.has("force")) 0L else 120000L)
+      println(s"[vacuum] swept orphans at ${a("lakeRoot")}")
 
-    case "show" :: lakeRoot :: rest =>
-      rejectExtra("show", rest.drop(1), "[n]")
-      val n = rest.headOption.map(intArg("show", "n", _, lo = 0)).getOrElse(10)
+    case "show" =>
+      val lakeRoot = a("lakeRoot")
+      val n = a.int("n", lo = 0).getOrElse(10)
       val spark = session()
       val lake = openLake(lakeRoot, 32)
       val snap = lake.latest().getOrElse(noLake(lakeRoot))
@@ -255,14 +210,12 @@ object Main {
       showRows(df, n)
       spark.stop()
 
-    case "get" :: lakeRoot :: repo :: path :: rest if rest.size <= 1 =>
+    case "get" =>
       // point lookup: O(bucket-range files) planned, never O(table) —
       // `filesPlanned` makes the pruning visible to the operator. The
       // bucket computation is a pure function of the stored count.
-      // a typo'd as-of must not silently answer "latest"
-      rejectExtra("get", rest.filterNot(_.startsWith("asof:")), "asof:<snapId>")
-      val asof = rest.headOption.map(a =>
-        longArg("get", "asof:", a.stripPrefix("asof:"), lo = 0L))
+      val (lakeRoot, repo, path) = (a("lakeRoot"), a("repo"), a("path"))
+      val asof = a.long("asof:", lo = 0L)
       val spark = session()
       val lake = openLake(lakeRoot, noLake(lakeRoot))
       val snap = asof.map(lake.snapshotAt)
@@ -275,11 +228,11 @@ object Main {
       df.show(truncate = false)
       spark.stop()
 
-    case "rebucket" :: lakeRoot :: n :: rest =>
-      rejectExtra("rebucket", rest, "nothing after <newN>")
+    case "rebucket" =>
       // offline bucket-count migration: one full rewrite; reopen any
       // running stream afterwards (it fails closed on the old count)
-      val newN = intArg("rebucket", "newN", n)
+      val lakeRoot = a("lakeRoot")
+      val newN = a.int("newN").get
       val spark = session()
       val lake = openLake(lakeRoot, noLake(lakeRoot))
       refuseUnderLiveWriter(lake, lakeRoot, "rebucket")
@@ -288,22 +241,17 @@ object Main {
         s"files=${s.files.size} rows=${s.metrics.getOrElse("rowsWritten", 0L)}")
       spark.stop()
 
-    case "optimize" :: lakeRoot :: rest0 =>
+    case "optimize" =>
       // offline full compaction (stream stopped): drains ALL delta debt in
       // bounded commits; `describe` afterwards shows zero debt ranges.
       // Fence/lineage/offsets are untouched — resume the stream as-is.
       // feed:<dir> supplies the tombstone GC horizon (the retained feed's
       // minimum offset — the same O3 bound the streaming fold uses), so an
       // offline optimize can finally drop long-expired tombstones too.
-      val (feedArgs, budgetArgs) = rest0.partition(_.startsWith("feed:"))
-      rejectExtra("optimize", budgetArgs.drop(1) ++ feedArgs.drop(1),
-        "at most one [maxBucketsPerCommit] and one [feed:<feedDir>]")
-      val budget = budgetArgs.headOption
-        .map(intArg("optimize", "maxBucketsPerCommit", _)).getOrElse(64)
+      val lakeRoot = a("lakeRoot")
+      val budget = a.int("maxBucketsPerCommit").getOrElse(64)
       val spark = session()
-      val horizon = feedArgs.headOption.map { a =>
-        CdcIngestJob.feedOffsetRange(spark, a.stripPrefix("feed:"))._1
-      }
+      val horizon = a.get("feed:").map(CdcIngestJob.feedOffsetRange(spark, _)._1)
       val lake = openLake(lakeRoot, noLake(lakeRoot))
       refuseUnderLiveWriter(lake, lakeRoot, "optimize")
       val r = graft.merge.MergeApply.optimize(spark, lake, budget, horizon)
@@ -312,9 +260,9 @@ object Main {
         s"rowsRewritten=${r.rowsRewritten}")
       spark.stop()
 
-    case "expire" :: lakeRoot :: keep :: rest =>
-      rejectExtra("expire", rest, "nothing after <keep>")
-      val k = intArg("expire", "keep", keep)
+    case "expire" =>
+      val lakeRoot = a("lakeRoot")
+      val k = a.int("keep").get
       val lake = openLake(lakeRoot)
       // a live stream runs its own per-commit expire, serialized with its
       // commits; a CONCURRENT manual trim could drop an anchor (and its
@@ -329,12 +277,10 @@ object Main {
       println(s"[expire] retained snapshots $oldest..${latest.id} " +
         s"(${latest.id - oldest + 1}) at $lakeRoot")
 
-    case "log" :: lakeRoot :: rest =>
-      rejectExtra("log", rest, "nothing after <lakeRoot>")
+    case "log" =>
       // retained snapshot history: the valid bounds for `show`-as-of /
       // `changes` windows, with each commit's headline lineage counters
-      val lake = openLake(lakeRoot)
-      lake.snapshotLog().foreach { s =>
+      openLake(a("lakeRoot")).snapshotLog().foreach { s =>
         val m = s.metrics
         println(s"[log] snapshot=${s.id} batchId=${s.batchId} " +
           s"schemaVersion=${s.schemaVersion} " +
@@ -344,32 +290,28 @@ object Main {
           s"compactedBuckets=${m.getOrElse("compactedBuckets", 0L)}")
       }
 
-    case "changes" :: lakeRoot :: from :: to :: rest if rest.size <= 1 =>
+    case "changes" =>
       // CDC-out: net per-key changes between two snapshots (downstream
       // consumers chain off the lake without replaying the feed)
-      val fromId = longArg("changes", "fromSnap", from, lo = 0L)
-      val toId = longArg("changes", "toSnap", to, lo = 0L)
-      val n = rest.headOption.map(intArg("changes", "n", _, lo = 0)).getOrElse(10)
+      val fromId = a.long("fromSnap", lo = 0L).get
+      val toId = a.long("toSnap", lo = 0L).get
+      val n = a.int("n", lo = 0).getOrElse(10)
       val spark = session()
-      val lake = openLake(lakeRoot, 32)
+      val lake = openLake(a("lakeRoot"), 32)
       val df = lake.changesBetween(spark, fromId, toId)
-      println(s"[changes] ($from, $to] rows=${df.count()}")
+      println(s"[changes] ($fromId, $toId] rows=${df.count()}")
       showRows(df, n)
       spark.stop()
 
-    case "sync" :: srcRoot :: dstRoot :: rest if rest.size <= 2 =>
+    case "sync" =>
       // lake→lake changelog subscription: apply the source's new snapshots
-      // into the destination (one commit per sync window, exactly-once).
-      // A typo must not run silently: `folow:100` would sync once instead
-      // of following, `clientid:x` would sync without the client check
-      rejectExtra("sync", rest.filterNot(a => a.startsWith("client:") ||
-        a.startsWith("follow:")), "[client:<id>] [follow:<pollMs>]")
-      val clientId = rest.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
-      val pollMs = rest.find(_.startsWith("follow:"))
-        .map(a => longArg("sync", "follow:", a.stripPrefix("follow:")))
+      // into the destination (one commit per sync window, exactly-once);
+      // follow:<ms> polls for new ones
+      val (srcRoot, clientId) = (a("srcLake"), a.get("client:"))
+      val pollMs = a.long("follow:")
       val spark = session()
       val src = openLake(srcRoot, noLake(srcRoot))
-      val dst = openLake(dstRoot, src.nBuckets)
+      val dst = openLake(a("dstLake"), src.nBuckets)
       // sweep orphans of a previously crashed sync; self = this chain's
       // lineage, so its own predecessor's lease never blocks the sweep
       dst.vacuum(self = graft.stream.ChangelogChain.lineageFor(src))
@@ -385,51 +327,26 @@ object Main {
       }
       spark.stop()
 
-    case "tail" :: lakeRoot :: rest =>
+    case "tail" =>
       // the changelog as a live Structured Streaming SOURCE: each new
       // snapshot arrives as a micro-batch of net per-key changes
       // (ChangelogStreamSource); `cp:<dir>` resumes a previous tail
-      // exactly-once from Spark's own checkpoint
-      // a silently-dropped typo is dangerous here: `clientid:x` for
-      // `client:x` would run UNGATED against a registry-protected lake,
-      // `credits:4` would tail without flow control. Unknown tokens,
-      // non-positive numeric values and a second token of one kind (a
-      // "n", an option prefix) are all rejected before any session starts
-      val usage = "[n] [bootstrap:none] [client:<id>] [for:<ms>] [cp:<dir>] " +
-        "[credit:<k>] [bootstrapBuckets:<k>]"
-      def kindOf(t: String): String = if (t.toIntOption.isDefined) "n"
-        else Seq("client:", "cp:", "for:", "credit:", "bootstrapBuckets:")
-          .find(t.startsWith).getOrElse(t)
-      rest.zipWithIndex.foreach { case (t, i) =>
-        kindOf(t) match {
-          case "n" | "bootstrap:none" | "client:" | "cp:"
-              if t.toIntOption.forall(_ >= 0) => ()
-          case "for:" => longArg("tail", "for:", t.stripPrefix("for:"))
-          case p @ ("credit:" | "bootstrapBuckets:") =>
-            intArg("tail", p, t.stripPrefix(p))
-          case _ => rejectExtra("tail", Seq(t), usage)
-        }
-        if (rest.take(i).map(kindOf).contains(kindOf(t)))
-          rejectExtra("tail", Seq(t), s"at most one of each: $usage")
-      }
+      // exactly-once from Spark's own checkpoint; credit:<k> = max
+      // snapshots per micro-batch (D4), bootstrapBuckets:<k> serves the
+      // bootstrap as bounded bucket-range batches
+      val n = a.int("n", lo = 0).getOrElse(10)
+      val forMs = a.long("for:").getOrElse(10000L)
+      val options = Map("path" -> Some(a("lakeRoot")),
+        "bootstrap" -> a.get("bootstrap:none").map(_ => "none"),
+        "clientId" -> a.get("client:"),
+        "maxSnapshotsPerTrigger" -> a.int("credit:").map(_.toString),
+        "bootstrapBuckets" -> a.int("bootstrapBuckets:").map(_.toString))
+      val cp = a.get("cp:").getOrElse(
+        java.nio.file.Files.createTempDirectory("graft-tail-cp").toString)
       val spark = session()
-      val n = rest.flatMap(_.toIntOption).headOption.getOrElse(10)
-      val forMs = rest.find(_.startsWith("for:"))
-        .map(_.stripPrefix("for:").toLong).getOrElse(10000L)
-      val cp = rest.find(_.startsWith("cp:")).map(_.stripPrefix("cp:"))
-        .getOrElse(java.nio.file.Files
-          .createTempDirectory("graft-tail-cp").toString)
-      var r = spark.readStream.format("graft-changelog")
-        .option("path", lakeRoot)
-      if (rest.contains("bootstrap:none")) r = r.option("bootstrap", "none")
-      rest.find(_.startsWith("client:"))
-        .foreach(c => r = r.option("clientId", c.stripPrefix("client:")))
-      rest.find(_.startsWith("credit:")).foreach(c => // D4: bounded catch-up
-        r = r.option("maxSnapshotsPerTrigger", c.stripPrefix("credit:")))
-      rest.find(_.startsWith("bootstrapBuckets:")).foreach(c => // chunked
-        // bootstrap: full state served as bounded bucket-range batches
-        r = r.option("bootstrapBuckets", c.stripPrefix("bootstrapBuckets:")))
-      val q = r.load().writeStream
+      val q = spark.readStream.format("graft-changelog")
+        .options(options.collect { case (k, Some(v)) => k -> v }).load()
+        .writeStream
         .option("checkpointLocation", cp)
         .foreachBatch { (df: DataFrame, id: Long) =>
           df.persist() // one window scan serves both the count and the show
@@ -449,30 +366,23 @@ object Main {
         spark.stop()
       }
 
-    case "describe" :: lakeRoot :: rest =>
-      rejectExtra("describe", rest, "nothing after <lakeRoot>")
+    case "describe" =>
       // operator view: schema history + per-range compaction debt (the
       // reference exposes its store stats the same way — count-trim logs)
-      val lake = openLake(lakeRoot)
-      val snap = lake.latest().getOrElse(noLake(lakeRoot))
+      val lake = openLake(a("lakeRoot"))
+      val snap = lake.latest().getOrElse(noLake(a("lakeRoot")))
       Describe.lines(lake, snap).foreach(l => println(s"[describe] $l"))
 
-    case "metrics" :: lakeRoot :: rest =>
-      rejectExtra("metrics", rest, "nothing after <lakeRoot>")
+    case "metrics" =>
       // per-batch lineage from the durable record: each retained
       // snapshot's scalar metrics (per-bucket row counts left out)
-      val lake = openLake(lakeRoot)
-      val log = lake.snapshotLog()
-      if (log.isEmpty) println(s"no lake at $lakeRoot")
+      val log = openLake(a("lakeRoot")).snapshotLog()
+      if (log.isEmpty) println(s"no lake at ${a("lakeRoot")}")
       log.foreach { s =>
         val scalars = s.metrics.filterNot(_._1.startsWith("bucket."))
           .toSeq.sorted.map { case (k, v) => s"$k=$v" }
         println((s"[metrics] snapshot=${s.id} batchId=${s.batchId}" +:
           scalars).mkString(" "))
       }
-
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown verb or wrong number of arguments: ${other.mkString(" ")}")
   }
 }

@@ -22,11 +22,12 @@ import org.apache.spark.sql.types.StructType
   *    row per (key, input partition) regardless of skew.
   * 2. **Winner fetch** — offsets are globally unique (fileIdx, pos, rowIdx
   *    disambiguate every event — SURVEY.md §4.4.1), so the probe is a
-  *    broadcast LEFT SEMI join on the bare DECIMAL(38,0) offset encoding:
-  *    16 bytes/key in the build hash table, no strings, full row images
-  *    never shuffle. Past `broadcastKeyLimit` distinct keys the merge
-  *    falls back to the direct bucketed LWW reduction over the batch
-  *    (one image shuffle, zero broadcast state).
+  *    broadcast LEFT SEMI join on one xxhash64 key of the offset's three
+  *    segments, the segments re-checked as a residual condition: no
+  *    strings in the build hash table, full row images never shuffle.
+  *    Past `broadcastKeyLimit` distinct keys the same semi-join runs
+  *    shuffle-hash instead (one image shuffle, zero broadcast state);
+  *    see [[winnerProbe]].
   * 3. **Delta append** — winners repartition by bucket and land as new
   *    data files; existing bucket files are UNTOUCHED. Readers resolve
   *    base + deltas with the same per-key max-offset operator
@@ -94,8 +95,8 @@ object MergeApply {
     *   `winners`: `true` = broadcast the winner encodings to every
     *   executor (full images never shuffle — right when the key set fits
     *   executor memory, i.e. every rate-limited streaming microbatch);
-    *   `false` = shuffle-hash semi-join on the encoding (one image
-    *   shuffle, per-partition 16-byte build slices, zero broadcast
+    *   `false` = shuffle-hash semi-join on the same hashed key (one
+    *   image shuffle, per-partition build slices, zero broadcast
     *   state — the safe shape when a one-shot replay carries more
     *   distinct keys than any executor should hold). */
   def apply(
@@ -233,11 +234,17 @@ object MergeApply {
     * most one delta-file CLUSTER whose span exceeds the fold budget, to be
     * re-partitioned into fold-unit-width delta files ([[splitDeltas]] —
     * the L0→L1 tier). The two touch disjoint files by construction, so
-    * both ride the same commit. */
-  final case class CompactionPlan(fold: Set[Int], split: Option[(Int, Int)]) {
+    * both ride the same commit. `foldBudget` is the `maxBuckets` the plan
+    * was made under: the split runs with it and [[fileListDelta]] drops
+    * what the split consumed by it, so the two cannot disagree. It sits
+    * outside equality: two plans are equal when they do the same work. */
+  final case class CompactionPlan(fold: Set[Int], split: Option[(Int, Int)])(
+      val foldBudget: Int) {
     def isEmpty: Boolean = fold.isEmpty && split.isEmpty
   }
-  object CompactionPlan { val empty: CompactionPlan = CompactionPlan(Set.empty, None) }
+  object CompactionPlan {
+    val empty: CompactionPlan = CompactionPlan(Set.empty, None)(Int.MaxValue)
+  }
 
   /** Compaction work due under `candidate`'s file list. Two independent
     * tiers (round-4 verdict #1 — delta-range WIDTH no longer caps at the
@@ -288,7 +295,8 @@ object MergeApply {
       }
     }
     // split tier: the worst due wide group, at most one per commit
-    CompactionPlan(picked.toSet, due.find(_.wide).map(d => (d.lo, d.hi)))
+    CompactionPlan(picked.toSet, due.find(_.wide).map(d => (d.lo, d.hi)))(
+      maxBuckets)
   }
 
   /** One unit of compaction debt — the SHARED view [[compactionPlan]]
@@ -486,14 +494,11 @@ object MergeApply {
 
   /** Execute a [[CompactionPlan]] against `snap`'s files: the fold and (at
     * most one) split, which touch disjoint files by construction. Paired
-    * with [[fileListDelta]] under the SAME `foldBudget` — the ingest
-    * batch, the changelog chain and the offline optimize all run this
-    * exact sequence, and the consumption rule must always match the budget
-    * the split ran with (the coupling lives here so the three call sites
-    * cannot drift). */
+    * with [[fileListDelta]] — the ingest batch, the changelog chain and
+    * the offline optimize all run this exact sequence, both under the
+    * plan's own `foldBudget`. */
   def runPlan(spark: SparkSession, lake: GraftLake,
       snap: GraftLake.Snapshot, plan: CompactionPlan, batchId: Long,
-      foldBudget: Int,
       tombstoneHorizon: Option[graft.model.Offset] = None,
       clusterByKey: Boolean = false): (CompactResult, CompactResult) = {
     if (!plan.isEmpty) planRuns.incrementAndGet()
@@ -502,7 +507,7 @@ object MergeApply {
       else compact(spark, lake, snap, plan.fold, batchId, tombstoneHorizon,
         clusterByKey)
     val split = plan.split match {
-      case Some(r) => splitDeltas(spark, lake, snap, r, batchId, foldBudget)
+      case Some(r) => splitDeltas(spark, lake, snap, r, batchId, plan.foldBudget)
       case None => CompactResult(Nil, Set.empty, 0L)
     }
     (fold, split)
@@ -513,11 +518,10 @@ object MergeApply {
     * file's WHOLE bucket range is in the fold set — compactionPlan's
     * cluster closure guarantees that for every overlapping file, so
     * removal stays atomic — and split away exactly when [[splitInput]]
-    * selects it under the same `foldBudget` the split ran with. */
-  private def consumedBy(plan: CompactionPlan, foldBudget: Int)(
-      f: GraftLake.FileEntry): Boolean =
+    * selects it under the plan's `foldBudget`, the one the split ran with. */
+  private def consumedBy(plan: CompactionPlan)(f: GraftLake.FileEntry): Boolean =
     f.bucketsCovered.forall(plan.fold.contains) ||
-      plan.split.exists(r => splitInput(Seq(f), r, foldBudget).nonEmpty)
+      plan.split.exists(r => splitInput(Seq(f), r, plan.foldBudget).nonEmpty)
 
   /** The file-list change of one commit over `parent`: the files `plan`
     * consumed leave, the fold/split replacements and the commit's own
@@ -530,9 +534,9 @@ object MergeApply {
       metrics: Map[String, Long])
 
   def fileListDelta(parent: GraftLake.Snapshot, plan: CompactionPlan,
-      foldBudget: Int, fold: CompactResult, split: CompactResult,
+      fold: CompactResult, split: CompactResult,
       newFiles: Seq[GraftLake.FileEntry] = Nil): FileListDelta = {
-    val (gone, kept) = parent.files.partition(consumedBy(plan, foldBudget))
+    val (gone, kept) = parent.files.partition(consumedBy(plan))
     FileListDelta(kept ++ fold.files ++ split.files ++ newFiles,
       newFiles ++ fold.files ++ split.files, gone.map(_.path),
       Map("compactedBuckets" -> plan.fold.size.toLong,
@@ -617,8 +621,8 @@ object MergeApply {
           return OptimizeResult(commits, foldedBuckets, splitFiles,
             rowsRewritten)
         val (fold, split) = runPlan(spark, lake, snap, plan, snap.batchId,
-          maxBucketsPerCommit, tombstoneHorizon, clusterByKey = true)
-        val d = fileListDelta(snap, plan, maxBucketsPerCommit, fold, split)
+          tombstoneHorizon, clusterByKey = true)
+        val d = fileListDelta(snap, plan, fold, split)
         lake.commit(snap.copy(
           id = snap.id + 1, parentId = snap.id, files = d.files,
           metrics = d.metrics + ("rowsWritten" -> (fold.rows + split.rows)),

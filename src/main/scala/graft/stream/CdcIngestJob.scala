@@ -286,8 +286,7 @@ object CdcIngestJob {
       else scala.concurrent.Future {
         // runs on a non-Spark thread: local properties don't inherit
         spark.sparkContext.setJobDescription(s"graft b$batchId: fold/split")
-        MergeApply.runPlan(spark, lake, snap, plan, batchId,
-          spec.maxCompactBuckets, tombstoneHorizon)
+        MergeApply.runPlan(spark, lake, snap, plan, batchId, tombstoneHorizon)
       }(scala.concurrent.ExecutionContext.global)
 
     val decodedBatch = decoded(batch)
@@ -314,9 +313,9 @@ object CdcIngestJob {
     // no second aggregation job (BatchStats.winOff). The winner count is
     // the exact dedup lineage metric AND the broadcast decision: winner
     // offsets ship to every executor (full images never shuffle) only when
-    // the key set fits executor memory; past the limit the merge falls back
-    // to the direct shuffled LWW reduction (one image shuffle, zero
-    // broadcast state — the only safe shape at replay-scale cardinality).
+    // the key set fits executor memory; past the limit the same semi-join
+    // runs shuffle-hash (one image shuffle, zero broadcast state — the only
+    // safe shape at replay-scale cardinality).
     val useBroadcast = stats.winners <= broadcastKeyLimit
 
     // project row events to merge shape against the (possibly evolved)
@@ -378,8 +377,8 @@ object CdcIngestJob {
           "splitRows" -> splitRes.rows)
       // the file-list delta is stamped here, where it is known exactly:
       // commit then persists O(touched buckets) of manifest
-      val d = MergeApply.fileListDelta(snap, plan, spec.maxCompactBuckets,
-        compacted, splitRes, result.newFiles)
+      val d = MergeApply.fileListDelta(snap, plan, compacted, splitRes,
+        result.newFiles)
       lake.commit(GraftLake.Snapshot(
         id = snap.id + 1, batchId = batchId,
         schemas = schemas, schemaVersion = schemaVersion,

@@ -139,9 +139,8 @@ object ChangelogChain {
       val plan = MergeApply.compactionPlan(parent.files, compactFactor,
         maxDeltaFiles, maxCompactBuckets)
       val (fold, split) = MergeApply.runPlan(spark, dst, parent, plan,
-        of.id, maxCompactBuckets, tombstoneHorizon = parent.lastOffset)
-      val d = MergeApply.fileListDelta(parent, plan, maxCompactBuckets,
-        fold, split, files)
+        of.id, tombstoneHorizon = parent.lastOffset)
+      val d = MergeApply.fileListDelta(parent, plan, fold, split, files)
       dst.commit(GraftLake.Snapshot(
         id = parent.id + 1, batchId = if (complete) of.id else -1L,
         schemas = of.schemas, schemaVersion = of.schemaVersion,

@@ -1,7 +1,9 @@
 package graft.stream
 
+import graft.cli.Args
 import graft.table.{GraftLake, MetaStore, SchemaEvolution}
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
@@ -108,19 +110,24 @@ object ChangelogStreamSource {
   private[stream] val analyzedIds =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  private[stream] def opt(parameters: Map[String, String], key: String) = {
-    val k = key.toLowerCase
-    parameters.collectFirst { case (n, v) if n.toLowerCase == k => v }
-  }
+  /** The options this source reads, matched ignoring case; any other key
+    * fails the query before it starts, since a misspelled option that is
+    * silently ignored changes what a subscriber receives. */
+  private val options =
+    Seq("path", "clientId", "bootstrap", "maxSnapshotsPerTrigger", "bootstrapBuckets")
 
-  /** A numeric option's value, or a clean error naming the option. */
-  private[stream] def numOpt[T](parameters: Map[String, String], key: String,
-      parse: String => Option[T]): Option[T] =
-    opt(parameters, key).map(v => parse(v).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-changelog: option '$key' must be an integer (got '$v')")))
+  private[stream] def opt(parameters: Map[String, String], key: String) =
+    parameters.collectFirst { case (n, v) if n.equalsIgnoreCase(key) => v }
 
   private[stream] def openLake(parameters: Map[String, String]): GraftLake = {
+    val given = parameters match { // Spark's lower-cased view keeps the user's keys
+      case m: CaseInsensitiveMap[String @unchecked] => m.originalMap.keys
+      case m => m.keys
+    }
+    given.find(k => !options.exists(_.equalsIgnoreCase(k))).foreach { k =>
+      throw new IllegalArgumentException(s"graft-changelog: unknown option " +
+        s"'$k' (expected one of ${options.mkString(", ")})")
+    }
     val root = opt(parameters, "path").getOrElse(
       throw new IllegalArgumentException(
         "graft-changelog source requires option 'path' (the lake root)"))
@@ -164,12 +171,9 @@ final class ChangelogStreamSource(spark: SparkSession,
     * instead of one giant batch. Post-bootstrap windows only — the
     * bootstrap is one full-state read regardless. */
   private val maxSnapshotsPerTrigger: Option[Long] =
-    numOpt(parameters, "maxSnapshotsPerTrigger", _.toLongOption).map { n =>
-      // the Int bound keeps ReadLimit.maxFiles(n.toInt) from overflowing
-      require(n >= 1 && n <= Int.MaxValue,
-        s"maxSnapshotsPerTrigger must be in [1, ${Int.MaxValue}] (got $n)")
-      n
-    }
+    // the Int bound keeps ReadLimit.maxFiles(n.toInt) from overflowing
+    opt(parameters, "maxSnapshotsPerTrigger").map(Args.num("graft-changelog",
+      "maxSnapshotsPerTrigger", _, _.toLongOption, 1L, Int.MaxValue.toLong))
 
   /** Chunked bootstrap: with
     * `.option("bootstrapBuckets", k)`, a full bootstrap is served as
@@ -184,9 +188,8 @@ final class ChangelogStreamSource(spark: SparkSession,
     * continues from the pinned base id after chunk K−1 (offset −1).
     * Default 0 = the one-shot bootstrap. */
   private val bootstrapChunkBuckets: Int =
-    numOpt(parameters, "bootstrapBuckets", _.toIntOption).map { n =>
-      require(n >= 1, s"bootstrapBuckets must be >= 1 (got $n)"); n
-    }.getOrElse(0)
+    opt(parameters, "bootstrapBuckets").map(Args.num("graft-changelog",
+      "bootstrapBuckets", _, _.toIntOption, 1, Int.MaxValue)).getOrElse(0)
   /** End of the last window this run planned/served — the cap base when
     * the runner doesn't hand `latestOffset` a start offset. */
   @volatile private var lastPlanned: Option[Long] = None

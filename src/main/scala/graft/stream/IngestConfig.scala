@@ -88,10 +88,11 @@ final case class IngestConfig(
       * base/identityCheck/IdentityCheckerJustLocal.java:33-42 rejects
       * unknown clients at registration). None skips the check. */
     clientId: Option[String] = None,
-    /** Above this many distinct keys in a batch the merge switches from the
-      * broadcast winner semi-join to the direct shuffled LWW reduction —
-      * the broadcast build side is one 24-byte offset per key, so 4M keys
-      * ≈ 100 MB, about the most one should ship to every executor. The
+    /** Above this many distinct keys in a batch the winner semi-join runs
+      * shuffle-hash instead of broadcast (MergeApply.winnerProbe) — the
+      * broadcast build side is a hashed key plus three offset segments per
+      * key, so 4M keys ≈ 100 MB, about the most one should ship to every
+      * executor. The
       * streaming path stays under this by construction (maxFilesPerTrigger
       * bounds batch size); one-shot replay of a huge retained feed is what
       * trips it (an unbounded broadcast is a driver OOM at 10^8 keys). */

@@ -249,8 +249,8 @@ object GraftLake {
   * atomic rename (POSIX/HDFS, the default) or create-exclusive /
   * conditional-put ([[GraftLake.Publish.Cas]]) for object stores without
   * atomic rename. Local-scheme paths are externalized
-  * WITHOUT the `file:` prefix so manifests stay byte-compatible with
-  * pre-port snapshots.
+  * WITHOUT the `file:` prefix, the form every formatVersion-1 manifest
+  * records ([[MetaStore.externalize]]).
   *
   * @param nBuckets bucket count for writes; validated against the stored
   *   snapshot on read/commit (0 = adopt whatever the log records).
@@ -275,14 +275,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
   import GraftLake._
 
   private val rootPath = new HPath(root)
-  private val fs: FileSystem = {
-    val conf = GraftLake.hadoopConf()
-    val shared = rootPath.getFileSystem(conf)
-    // no .crc sidecars, nor sidecar lookups when Spark reads the lake
-    // through this JVM-wide cached instance
-    shared.setWriteChecksum(false); shared.setVerifyChecksum(false)
-    NioLocalFileSystem.forLake(shared, conf)
-  }
+  private val fs: FileSystem = NioLocalFileSystem.forPath(rootPath)
   private val store = new MetaStore(fs, publish)
   private val manifest = new Manifest(store, logDir, manifestEvery, segmentInline)
   /** The writer lease, the client registry and heartbeats of this lake. */

@@ -106,8 +106,9 @@ final class MetaStore(val fs: FileSystem,
 }
 
 object MetaStore {
-  /** A rename-publishing store on `p`'s FileSystem. */
-  def at(p: HPath): MetaStore = new MetaStore(p.getFileSystem(GraftLake.hadoopConf()))
+  /** A rename-publishing store on `p`'s FileSystem, written through the
+    * way lake metadata is ([[NioLocalFileSystem.forLake]]). */
+  def at(p: HPath): MetaStore = new MetaStore(NioLocalFileSystem.forPath(p))
 
   private[table] val mapper = new ObjectMapper()
     .registerModule(DefaultScalaModule)

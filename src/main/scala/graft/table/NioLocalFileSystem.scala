@@ -23,7 +23,11 @@ import scala.jdk.CollectionConverters._
   * setuid) and Windows take Hadoop's own path.
   *
   * Checksums are off, as the lake has always written: no `.crc` sidecar next
-  * to a data file or manifest, and no sidecar lookup on open. */
+  * to a data file or manifest, and no sidecar lookup on open through this
+  * instance. The JVM-wide cached `file:` FileSystem, shared with every other
+  * local reader and writer in the process, is left as Hadoop configures it:
+  * a Spark read of a lake file through it looks for the sidecar, finds
+  * none and reads the file unchecked. */
 class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw) {
   setWriteChecksum(false)
   setVerifyChecksum(false)
@@ -91,6 +95,12 @@ object NioLocalFileSystem {
       f.initialize(shared.getUri, conf)
       f
     }
+
+  /** [[forLake]] of the FileSystem `p` resolves to. */
+  private[graft] def forPath(p: Path): FileSystem = {
+    val conf = GraftLake.hadoopConf()
+    forLake(p.getFileSystem(conf), conf)
+  }
 
   /** Options of a lake's Spark write job, given the lake's `fs`: for a
     * local lake, Hadoop options that send the job's `file:` paths through

@@ -576,12 +576,44 @@ class ChangelogStreamSpec extends SparkSuite {
     "IllegalArgumentException naming the option") {
     val root = tmp("badopts")
     Seq("bootstrapBuckets" -> "abc", "bootstrapBuckets" -> "99999999999",
-      "maxSnapshotsPerTrigger" -> "4x").foreach { case (k, v) =>
+      "maxSnapshotsPerTrigger" -> "4x",
+      "bootstrapBucket" -> "3" // an unknown key names itself the same way
+    ).foreach { case (k, v) =>
       val e = intercept[IllegalArgumentException] {
         new graft.stream.ChangelogStreamSource(spark, Map("path" -> root, k -> v))
       }
       assert(e.getMessage.contains(k), e.getMessage)
     }
+  }
+
+  test("an unknown source option fails naming itself and the known keys; " +
+    "a query opened with .load(root) and all five options set still runs") {
+    val feedDir = tmp("optsFeed"); val root = tmp("optsLake")
+    BinlogFeedGen.writeFeed(spark, FeedConfig(nEvents = 600, nKeys = 100,
+      eventsPerFile = 150, noopFrac = 0.0, decoyFrac = 0.0), feedDir)
+    CdcIngestJob.replayBatch(spark, IngestConfig(
+      feedDir, root, tmp("optsCp"), nBuckets = 8))
+    val lake = new GraftLake(root, 8)
+    // misspelled, bootstrapBuckets would silently serve a one-shot bootstrap
+    val e = intercept[IllegalArgumentException] {
+      spark.readStream.format("graft-changelog")
+        .option("bootstrapBucket", 3).load(root)
+    }
+    assert(e.getMessage.contains("unknown option 'bootstrapBucket'") &&
+      e.getMessage.contains(
+        "path, clientId, bootstrap, maxSnapshotsPerTrigger, bootstrapBuckets"),
+      e.getMessage)
+    lake.subscribers.registerClient("opts")
+    val ledger = new Ledger
+    val q = spark.readStream.format("graft-changelog")
+      .option("clientId", "opts").option("bootstrap", "full")
+      .option("maxSnapshotsPerTrigger", 2).option("bootstrapBuckets", 4)
+      .load(root).writeStream.option("checkpointLocation", tmp("optsSubCp"))
+      .foreachBatch((b: DataFrame, id: Long) => ledger.add(b, id)).start()
+    q.processAllAvailable(); q.stop()
+    // 8 buckets, 4 per batch: the bootstrap arrives as 2 batches
+    assert(ledger.batches.size >= 2, s"batches ${ledger.batches}")
+    assert(ledger.folded == srcState(lake))
   }
 
   test("the tail verb rejects a non-positive-integer for:/credit:/" +
@@ -629,7 +661,17 @@ class ChangelogStreamSpec extends SparkSuite {
       Seq("changes", lake, "1", "3", "x") -> "changes: n ",
       Seq("sync", lake, tmp("baddst"), "follow:0") -> "follow",
       Seq("sync", lake, tmp("baddst"), "folow:100") -> "unknown argument 'folow:100'",
-      Seq("sync", lake, tmp("baddst"), "clientid:x") -> "unknown argument 'clientid:x'")
+      Seq("sync", lake, tmp("baddst"), "clientid:x") -> "unknown argument 'clientid:x'",
+      // a repeated or surplus token fails too, never runs with the first
+      Seq("stream", feed, lake, cp, "client:a", "client:b") -> "unknown argument 'client:b'",
+      Seq("stream", feed, lake, cp, "supervise:0", "supervise:5") ->
+        "unknown argument 'supervise:5'",
+      Seq("sync", lake, tmp("baddst"), "client:a", "client:b") ->
+        "unknown argument 'client:b'",
+      Seq("sync", lake, tmp("baddst"), "follow:100", "follow:200") ->
+        "unknown argument 'follow:200'",
+      Seq("get", lake, "r", "p", "asof:1", "asof:2") -> "unknown argument 'asof:2'",
+      Seq("clients", lake, "prune:1", "x") -> "unknown argument 'x'")
     (tailCases ++ verbCases).foreach { case (args, name) =>
       val e = intercept[IllegalArgumentException] {
         graft.cli.Main.main(args.toArray)

@@ -95,6 +95,18 @@ class LakeWritePathSpec extends SparkSuite {
     checkLayout("u027", "027", "rw-r-----", "rwxr-x---")
   }
 
+  test("opening a local lake leaves checksums on for every other user of " +
+    "the JVM-wide file: FileSystem") {
+    new GraftLake(tmp("crc-lake"), 4)
+    val dir = Files.createDirectories(Paths.get(tmp("crc-other")))
+    val shared = FileSystem.get(URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    val out = shared.create(new HPath(dir.resolve("x.bin").toUri))
+    out.write(Array[Byte](1, 2, 3)); out.close()
+    assert(Files.exists(dir.resolve(".x.bin.crc")),
+      walk(dir.toString).mkString(", "))
+  }
+
   test("the local lake FileSystem lists entries with the mode bits, owner " +
     "and group the stock one reads") {
     val root = Paths.get(tmp("list"))

@@ -133,7 +133,7 @@ class OptimizeSpec extends SparkSuite {
     val plan = MergeApply.compactionPlan(snap.files, compactFactor = 0.0,
       maxDeltaFiles = 1, maxBuckets = 8)
     val (fold, split) = MergeApply.runPlan(spark, lake, snap, plan,
-      snap.batchId, foldBudget = 8, clusterByKey = true)
+      snap.batchId, clusterByKey = true)
     val stranded = (fold.files ++ split.files).map(_.path)
     assert(stranded.nonEmpty)
 
@@ -143,7 +143,7 @@ class OptimizeSpec extends SparkSuite {
       .commits >= 1)
 
     // writer A's commit of the same id fails closed on the publish fence
-    val d = MergeApply.fileListDelta(snap, plan, foldBudget = 8, fold, split)
+    val d = MergeApply.fileListDelta(snap, plan, fold, split)
     val ex = intercept[IllegalStateException] {
       lake.commit(snap.copy(
         id = snap.id + 1, parentId = snap.id, files = d.files,

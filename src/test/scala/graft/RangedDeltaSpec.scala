@@ -174,7 +174,7 @@ class RangedDeltaSpec extends SparkSuite {
     // worst cluster [0,3] (5010 rows incl. the width-1 delta) fits; [4,7]
     // (900 > 400 base) would fit a 8-budget but not the remaining 2;
     // [8,11] is under factor — not due at all
-    assert(p1 == MergeApply.CompactionPlan(Set(0, 1, 2, 3), None), s"got $p1")
+    assert(p1 == MergeApply.CompactionPlan(Set(0, 1, 2, 3), None)(6), s"got $p1")
     // a stray width-1 delta OUTSIDE the picked range with its own debt:
     // budget admits it independently
     val p2 = MergeApply.compactionPlan(files :+ d(12, 12, 999),
@@ -187,7 +187,9 @@ class RangedDeltaSpec extends SparkSuite {
     val mixed = Seq(b(0, 1), d(0, 7, 50), d(3, 3, 5000))
     val p3 = MergeApply.compactionPlan(mixed, compactFactor = 1.0,
       maxDeltaFiles = 100, maxBuckets = 1)
-    assert(p3 == MergeApply.CompactionPlan(Set(3), Some((0, 7))), s"got $p3")
+    assert(p3 == MergeApply.CompactionPlan(Set(3), Some((0, 7)))(1), s"got $p3")
+    // the plan carries the budget its split and file-list delta run under
+    assert(p3.foldBudget == 1 && p1.foldBudget == 6)
     // ...and the split consumes ONLY the wide file (re-consuming narrow
     // files would rewrite them per commit — quadratic write amplification)
     assert(MergeApply.splitInput(mixed, (0, 7), 1).map(_.path) == Seq("d-0-7"))
@@ -199,6 +201,6 @@ class RangedDeltaSpec extends SparkSuite {
       b(32, 1), d(32, 32, 10))
     val p4 = MergeApply.compactionPlan(two, compactFactor = 1.0,
       maxDeltaFiles = 100, maxBuckets = 1)
-    assert(p4 == MergeApply.CompactionPlan(Set(3), Some((16, 23))), s"got $p4")
+    assert(p4 == MergeApply.CompactionPlan(Set(3), Some((16, 23)))(1), s"got $p4")
   }
 }
